@@ -308,13 +308,12 @@ object Bench {
         graft.streaming.StreamingCdc.runAll(spark, Seq(
           graft.streaming.StreamingCdc.StreamConfig(
             "bench-warm", s"$root/warm-in", s"$root/warm-messages",
-            s"$root/warm-tokens", s"$root/warm-ckpt",
-            sourceFormat = "changestream")), availableNow = true)
+            s"$root/warm-tokens", s"$root/warm-ckpt")), availableNow = true)
         var published = -1L
         def streamTrial(i: Int): Double = {
           val cfgS = graft.streaming.StreamingCdc.StreamConfig(
             "bench", s"$root/in", s"$root/messages-$i", s"$root/tokens-$i",
-            s"$root/ckpt-$i", sourceFormat = "changestream")
+            s"$root/ckpt-$i")
           val t0 = System.nanoTime()
           graft.streaming.StreamingCdc.runAll(spark, Seq(cfgS),
             availableNow = true)
@@ -413,8 +412,14 @@ object Bench {
         s""""sf":"$sfDir","trials":$trials,"summary":true}"""
     // Whatever the base line leaves under the cap is the map's budget
     // (a long regressions list must not push the line past the window).
-    val lineCap =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY_CAP", "1950").toInt
+    val lineCap = sys.env.get("SPARK_GRAFT_BENCH_SUMMARY_CAP") match {
+      case None => 1950
+      case Some(v) => v.trim.toIntOption.getOrElse {
+        System.err.println(s"[bench] WARN SPARK_GRAFT_BENCH_SUMMARY_CAP=" +
+          s"'$v' is not an integer; using 1950")
+        1950
+      }
+    }
     val budgetChars = lineCap - summaryWith("{}", nq).length
     val byCost = results.filter(_._2 >= 0).sortBy(-_._2)
     val qsTop = scala.collection.mutable.ListBuffer.empty[String]

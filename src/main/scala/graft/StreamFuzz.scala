@@ -43,22 +43,24 @@ import graft.streaming.StreamingCdc.StreamConfig
   *  - MULTI-COLLECTION scenarios (1-3 concurrent collections through one
   *    runAll, each with its own op stream/invalidate placement);
   *  - TRIM-RACE kills (capped tokens, the injected kill fires INSIDE
-  *    trimTokens' append→delete window — the duplicate-file crash state);
+  *    trimTokensAt's append→delete window — the duplicate-file crash state);
   *  - POISONED SIBLINGS (one collection throws a transient non-kill fault
   *    mid-stream; errgroup fail-fast cancels the healthy siblings
   *    mid-batch, and the retry must converge everyone).
   *
-  * Generator v3 (round 15) additionally flips each scenario between the
-  * foreachBatch runtime and the DSv2 StreamingWrite sink
-  * (graft.sinks.MessageSink) — the same seed space of kills, trim races,
-  * invalidates and poisons now exercises the epoch-commit path too.
+  * Generator v4 runs every scenario through the one CDC path — the
+  * change-stream source into the DSv2 epoch-commit sink
+  * (graft.sinks.MessageSink); micro-batch shape comes from the row budget
+  * alone. A trim-race kill gets a small row budget and a 1-2 row token
+  * cap, so the killed collection commits enough batches for its trim —
+  * and the kill inside it — to run.
   *
   * Usage: `sbt "runMain graft.StreamFuzz <outJson> [n] [seed0]"`.
   * Exits 2 on any failed scenario.
   */
 object StreamFuzz {
 
-  final val GeneratorVersion = 3
+  final val GeneratorVersion = 4
 
   private val Ops = Seq(
     // weighted op pool: publishable ops dominate, skip-ops and the odd
@@ -78,16 +80,14 @@ object StreamFuzz {
   private case class Scenario(
       seed: Long,
       colls: Seq[Coll],
-      maxFiles: Int,
       maxRows: Option[Long],
       capped: Boolean,
       maxTokRows: Int,
       prePost: Boolean,
       killColl: Int,
-      killBatch: Option[Long], // -1 = inside trimTokens' race window
+      killBatch: Option[Long], // -1 = inside trimTokensAt's race window
       poisonColl: Option[Int], // transient fault -> sibling cancel
-      poisonTrips: Int,
-      dsv2Sink: Boolean)       // K1/K2 via the DSv2 StreamingWrite
+      poisonTrips: Int)
 
   // Full JSON string escape (ADVICE r14): exception toStrings recorded in
   // 'unexpected'/'err' can carry tabs, CRs or other control chars — every
@@ -123,20 +123,21 @@ object StreamFuzz {
     val killBatch =
       if (r.nextBoolean()) Some(if (trimKill) -1L else r.nextInt(4).toLong)
       else None
+    val trimRace = killBatch.contains(-1L)
     val poison = r.nextInt(3) == 0 && nColls > 1
     Scenario(
       seed = seed,
       colls = colls,
-      maxFiles = 1 + r.nextInt(4),
-      maxRows = if (r.nextBoolean()) Some(50L + r.nextInt(400)) else None,
-      capped = r.nextBoolean() || killBatch.contains(-1L),
-      maxTokRows = 2 + r.nextInt(8),
+      maxRows =
+        if (trimRace) Some(50L + r.nextInt(100))
+        else if (r.nextBoolean()) Some(50L + r.nextInt(400)) else None,
+      capped = r.nextBoolean() || trimRace,
+      maxTokRows = if (trimRace) 1 + r.nextInt(2) else 2 + r.nextInt(8),
       prePost = r.nextBoolean(),
       killColl = r.nextInt(nColls),
       killBatch = killBatch,
       poisonColl = if (poison) Some(r.nextInt(nColls)) else None,
-      poisonTrips = 1 + r.nextInt(2),
-      dsv2Sink = r.nextBoolean())
+      poisonTrips = 1 + r.nextInt(2))
   }
 
   /** Deterministic envelope row for token position i (1-based). */
@@ -179,9 +180,7 @@ object StreamFuzz {
       StreamConfig(s"fz${sc.seed}c$ci", s"$dir/in$ci", s"$dir/messages$ci",
         s"$dir/tokens$ci", s"$dir/ckpt$ci",
         tokensCapped = sc.capped, tokensMaxRows = sc.maxTokRows,
-        maxFilesPerTrigger = sc.maxFiles, preAndPostImages = sc.prePost,
-        sourceFormat = "changestream", maxRowsPerTrigger = sc.maxRows,
-        sinkFormat = if (sc.dsv2Sink) "dsv2" else "foreachbatch")
+        preAndPostImages = sc.prePost, maxRowsPerTrigger = sc.maxRows)
     }
     sc.colls.zipWithIndex.foreach { case (cl, ci) =>
       val r = new Random(
@@ -193,7 +192,7 @@ object StreamFuzz {
     }
 
     // Injected faults: a one-shot kill on killColl (the publish->commit
-    // gap, or the trimTokens append->delete race window when killBatch ==
+    // gap, or the trimTokensAt append->delete race window when killBatch ==
     // -1), plus an optional transiently-POISONED sibling that throws on
     // its first poisonTrips publish faultpoints -- exercising errgroup
     // fail-fast sibling cancel and restart-everyone convergence.
@@ -303,14 +302,13 @@ object StreamFuzz {
 
     val pass = collResults.forall(_._1)
     val detail =
-      s""""n_colls":${sc.colls.size},"max_files":${sc.maxFiles},""" +
+      s""""n_colls":${sc.colls.size},""" +
       s""""max_rows":${sc.maxRows.getOrElse(-1L)},"capped":${sc.capped},""" +
       s""""pre_post":${sc.prePost},"kill_coll":${sc.killColl},""" +
       s""""kill_batch":${sc.killBatch.getOrElse(-99L)},""" +
       s""""kill_fired":$killFired,""" +
       s""""poison_coll":${sc.poisonColl.getOrElse(-1)},""" +
       s""""poison_fired":$poisonFired,""" +
-      s""""dsv2_sink":${sc.dsv2Sink},""" +
       unexpected.map(u => s""""unexpected":${jsonStr(u)},""").getOrElse("") +
       s""""colls":[${collResults.map(_._2).mkString(",")}],"pass":$pass"""
     (pass, detail)

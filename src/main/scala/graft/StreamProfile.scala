@@ -8,16 +8,12 @@ import org.apache.spark.sql.SparkSession
   * warmup, per-trial wall, and the CommandMetrics per-command sums — so
   * the per-trigger overhead is measured, not guessed.
   *
-  * Usage: `sbt "runMain graft.StreamProfile <sfDir> [trials] [sourceFormat]"`
-  * — sourceFormat `changestream` (default, the DSv2 source) or `file`
-  * (Spark's built-in file stream), so the two S1 modes can be A/B'd on
-  * the identical fixture (round-13 VERDICT stretch #7).
+  * Usage: `sbt "runMain graft.StreamProfile <sfDir> [trials]"`.
   */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val trials = if (args.length > 1) args(1).toInt else 3
-    val sourceFormat = if (args.length > 2) args(2) else "changestream"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -50,8 +46,7 @@ object StreamProfile {
       graft.streaming.StreamingCdc.runAll(spark, Seq(
         graft.streaming.StreamingCdc.StreamConfig(
           "prof-warm", s"$root/warm-in", s"$root/warm-messages",
-          s"$root/warm-tokens", s"$root/warm-ckpt",
-          sourceFormat = sourceFormat)), availableNow = true)
+          s"$root/warm-tokens", s"$root/warm-ckpt")), availableNow = true)
     }
 
     import graft.streaming.Observability.CommandMetrics
@@ -68,7 +63,7 @@ object StreamProfile {
         graft.streaming.StreamingCdc.runAll(spark, Seq(
           graft.streaming.StreamingCdc.StreamConfig(
             "prof", s"$root/in", s"$root/messages-$i", s"$root/tokens-$i",
-            s"$root/ckpt-$i", sourceFormat = sourceFormat)),
+            s"$root/ckpt-$i")),
           availableNow = true)
       }
       val after = snap()
@@ -83,7 +78,7 @@ object StreamProfile {
         s""""commands":{$cmds}}""")
       sec
     }
-    println(f"""{"events":$cnt,"source_format":"$sourceFormat",""" +
+    println(f"""{"events":$cnt,""" +
       f""""fixture_sec":$fixSec%.3f,""" +
       f""""warm_sec":$warmSec%.3f,"best_sec":${secs.min}%.3f,""" +
       f""""best_ev_per_sec":${cnt / secs.min}%.0f}""")

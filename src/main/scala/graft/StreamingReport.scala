@@ -70,8 +70,7 @@ object StreamingReport {
         val rows = spark.read.parquet(s"$root/in-$nm").count()
         graft.streaming.StreamingCdc.StreamConfig(
           nm, s"$root/in-$nm", s"$root/messages-$nm", s"$root/tokens-$nm",
-          s"$root/ckpt-$nm", sourceFormat = "changestream",
-          maxRowsPerTrigger = Some(math.max(1L, rows / 3)))
+          s"$root/ckpt-$nm", maxRowsPerTrigger = Some(math.max(1L, rows / 3)))
       }
       val cnt = splits.map { case (nm, _) =>
         spark.read.parquet(s"$root/in-$nm").count() }.sum
@@ -132,8 +131,7 @@ object StreamingReport {
         val rowsA = spark.read.parquet(inA).count()
         val rsCfg = graft.streaming.StreamingCdc.StreamConfig(
           "coll_a_rs", inA, s"$root/messages-rs", s"$root/tokens-rs",
-          s"$root/ckpt-rs", sourceFormat = "changestream",
-          maxRowsPerTrigger = Some(math.max(1L, rowsA / 3)))
+          s"$root/ckpt-rs", maxRowsPerTrigger = Some(math.max(1L, rowsA / 3)))
         var armed = true
         graft.streaming.StreamingCdc.faultpoint = (nm, bid) =>
           if (nm == "coll_a_rs" && bid >= 1 && armed) {
@@ -493,16 +491,18 @@ object StreamingReport {
       val slowIn = s"$root/sc-slow-in"; val poisonIn = s"$root/sc-poison-in"
       graft.operators.EventsCdc.toEnvelopes(
           events.filter(col("user_id") % 2 === 0))
-        .repartition(24).write.mode("overwrite").parquet(slowIn)
+        .repartitionByRange(24, col("_id").getField("_data"))
+        .write.mode("overwrite").parquet(slowIn)
       graft.operators.EventsCdc.toEnvelopes(
           events.filter(col("user_id") % 2 === 1).limit(400))
-        .repartition(4).write.mode("overwrite").parquet(poisonIn)
+        .repartitionByRange(4, col("_id").getField("_data"))
+        .write.mode("overwrite").parquet(poisonIn)
       val slowCfg = StreamingCdc.StreamConfig("sc_slow", slowIn,
         s"$root/sc-slow-msgs", s"$root/sc-slow-tokens", s"$root/sc-slow-ckpt",
-        maxFilesPerTrigger = 1)
+        maxRowsPerTrigger = Some(1L))
       val poisonCfg = StreamingCdc.StreamConfig("sc_poison", poisonIn,
         s"$root/sc-poison-msgs", s"$root/sc-poison-tokens",
-        s"$root/sc-poison-ckpt", maxFilesPerTrigger = 1)
+        s"$root/sc-poison-ckpt", maxRowsPerTrigger = Some(1L))
       StreamingCdc.faultpoint = (nm, batchId) =>
         if (nm == "sc_poison" && batchId >= 1)
           throw new RuntimeException("planted publish fault (report probe)")

@@ -28,35 +28,20 @@ object CdcPipeline {
   def containsInvalidate(events: DataFrame): Boolean =
     !events.filter(col("operationType") === Model.InvalidateOp).isEmpty
 
-  /** Events at-or-before the first invalidate, in token order — the exact set
+  /** Events before the first invalidate, in token order — the exact set
     * the reference would have processed before breaking the watch loop.
+    * A broadcast 1-row cross join against the min invalidate token
+    * (`cut`, NULL when there is none, so every row passes) plus a token
+    * filter. The streaming sink applies the same cut at its epoch commit
+    * ([[graft.sinks.MessageSink]]); this batch form is its replay model.
     */
-  def truncateAtInvalidate(events: DataFrame): DataFrame =
-    truncateWithCut(events, invalidateCut(events))
-
-  /** The 1-row min-invalidate-token frame (`cut`, NULL when the batch has
-    * no invalidate). Split out so the streaming runtime can observe it —
-    * the driver learns "batch contained an invalidate" from the SAME job
-    * that publishes, instead of a separate probe action per trigger
-    * (round-12 streaming fixed-cost shave). The subtree's
-    * operationType-equality filter pushes into the source scan, so it
-    * reads ~0 rows in steady state.
-    */
-  def invalidateCut(events: DataFrame): DataFrame =
-    events.filter(col("operationType") === Model.InvalidateOp)
+  def truncateAtInvalidate(events: DataFrame): DataFrame = {
+    val cut = events.filter(col("operationType") === Model.InvalidateOp)
       .agg(min(col("_id._data")).as("cut"))
-
-  /** Truncation against a pre-built cut frame: a broadcast 1-row cross
-    * join + token filter. When cut is NULL (no invalidate) every row
-    * passes — a no-op transform, so it can stay in the plan every batch.
-    * The publishable-ops filter applied downstream still pushes through
-    * this join to the source scan (single-side predicate through a cross
-    * join), keeping F1 pushdown intact on the hot path.
-    */
-  def truncateWithCut(events: DataFrame, cut: DataFrame): DataFrame =
     events.join(broadcast(cut), lit(true), "cross")
       .filter(col("cut").isNull || col("_id._data") < col("cut"))
       .drop("cut")
+  }
 
   /** P3 — subject routing key `<STREAM>.<operationType>`
     * (internal/mongo/client.go:239).

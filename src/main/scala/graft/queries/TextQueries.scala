@@ -710,27 +710,15 @@ object TextQueries {
   private[graft] val CmsWidth = 512
   private[graft] val CmsTopK = 20
 
-  /** Trained-merge-table cache, keyed by corpus dir (the table is a pure
-    * function of the corpus + BpeMerges; testdata dirs are immutable for
-    * a process lifetime). Benching text_bpe_train and text_bpe_encode
-    * previously trained TWICE (~2 s each at sf0.1) because encode calls
-    * bpeTrain; now the second caller replays the ≤BpeMerges driver-side
-    * rows. Same shape as StreamingCdc's committed-batch ledger cache.
-    */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, String, String, String, Long)]]()
-
   /** Iterative BPE trainer core (shared by text_bpe_train and the encode
     * query): returns the UNSORTED merge table
-    * (rank, left, right, merged, cnt).
+    * (rank, left, right, merged, cnt). Every call trains — no result is
+    * memoised across invocations, so each timed run pays for training.
     */
   private def bpeTrain(
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val cached = bpeCache.get(dir)
-    if (cached != null)
-      return cached.toDF("rank", "left", "right", "merged", "cnt")
     // spread (round-16, guide §2.5): parallelize the word-count pass.
     val words = spread(load(s, dir, "documents"), col("doc_id"))
       .select(explode(expr(toks)).as("w"))
@@ -777,7 +765,6 @@ object TextQueries {
     }
     syms.unpersist()
     if (prev != null) prev.unpersist()
-    bpeCache.put(dir, merges.toSeq)
     merges.toSeq.toDF("rank", "left", "right", "merged", "cnt")
   }
 

@@ -15,20 +15,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.streaming.StreamingCdc
 
-/** K1/K2 as a genuine DataSource V2 `StreamingWrite` (round-14 VERDICT
-  * stretch #7; SURVEY.md §7 step 4's third custom-Catalyst item): the
-  * NATS-shaped publish sink with JetStream msg-id semantics, declaring the
-  * epoch-based commit contract to Spark instead of hand-rolling it in
-  * foreachBatch.
+/** K1/K2 as a DataSource V2 `StreamingWrite` (SURVEY.md §7 step 4's
+  * third custom-Catalyst item): the NATS-shaped publish sink with
+  * JetStream msg-id semantics, declaring the epoch-based commit contract
+  * to Spark. The only publish path of [[StreamingCdc]].
   *
   * Input rows: (subject, msgId, data, op) — [[graft.operators.CdcPipeline
-  * .toSinkRows]], the same projection chain as the foreachBatch path but
-  * with invalidate rows RETAINED and flagged by `op` so the F2 cut can be
+  * .toSinkRows]], the batch toMessages projection chain but with
+  * invalidate rows RETAINED and flagged by `op` so the F2 cut can be
   * applied at commit time.
   *
   * Two-phase epoch commit, mirroring the reference's publish-then-token
-  * discipline (internal/mongo/client.go:217-257) and the foreachBatch
-  * twin's crash windows exactly:
+  * discipline (internal/mongo/client.go:217-257):
   *
   *  1. Data writers append rows to DOT-PREFIXED staging files in the
   *     messages dir (invisible to Spark's listing and every part- filter),
@@ -36,20 +34,24 @@ import graft.streaming.StreamingCdc
   *     msgId they saw.
   *  2. `commit(epochId)` — driver-side, after every task commits:
   *     a. replayed epoch (token already committed) → staging deleted,
-  *        nothing re-published (the foreachBatch ledger-skip parity);
+  *        nothing re-published; an invalidate in it still marks the
+  *        stream terminated (a crash can land between the token write
+  *        and the marker);
   *     b. F2: with a minimum invalidate token m, staging files entirely
   *        below m RENAME into place (atomic, the steady case is "no
   *        invalidate" so this path is rename-only), files straddling m
-  *        are re-written through one small Spark job filtering
-  *        `msgId < m`, files entirely at-or-after m are deleted — the
-  *        exact `truncateWithCut` semantics, applied at the commit point;
+  *        are re-written driver-side keeping `msgId < m`, files entirely
+  *        at-or-after m are deleted — the
+  *        exact `truncateAtInvalidate` semantics, applied at the commit
+  *        point; the promote duration is observed once per published
+  *        subject (K4 nats_message_duration_seconds, batch-granular);
   *     c. faultpoint (the StreamFuzz seam) fires BETWEEN message
   *        visibility and the token write — the reference's at-least-once
-  *        duplicate window, same as the foreachBatch path;
+  *        duplicate window;
   *     d. the token row lands via the same crash-safe dot-temp + rename
   *        writer ([[StreamingCdc.writeTokenRow]]), then capped tables
   *        trim, counters bump, and an invalidate marks the stream
-  *        terminated durably ([[StreamingCdc.markInvalidated]]).
+  *        terminated durably ([[StreamingCdc.markInvalidatedAt]]).
   *
   * A crash before any rename publishes nothing (the epoch replays); a
   * crash mid-rename or before the token write re-publishes on replay —
@@ -59,7 +61,7 @@ import graft.streaming.StreamingCdc
   * Scale: writers stream rows straight to parquet (no buffering beyond
   * the writer's row group); commit is O(#partitions) renames. The one
   * non-rename path — an invalidate epoch — re-writes only the straddling
-  * staging files through a bounded Spark job, and a stream sees at most
+  * staging files driver-side, and a stream sees at most
   * one invalidate in its lifetime (resuming past one is invalid,
   * internal/mongo/watcher.go).
   */
@@ -109,9 +111,12 @@ final class MessageSinkTable(path: String, tokensDir: String, name: String,
     }
 }
 
-/** One staging file's commit message (null path = empty partition). */
+/** One staging file's commit message (null path = empty partition);
+  * `subjects` = the distinct subjects of its rows.
+  */
 final case class MsgStaging(path: String, minMsg: String, maxMsg: String,
-    count: Long, minInvalidate: String) extends WriterCommitMessage
+    count: Long, minInvalidate: String, subjects: Seq[String])
+  extends WriterCommitMessage
 
 final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     name: String, capped: Boolean, maxTokRows: Int) extends StreamingWrite {
@@ -131,51 +136,61 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     def dropStaging(): Unit =
       staged.foreach(m => fs.delete(new Path(m.path), false))
 
-    // F2 entry check + C2/C3 ledger skip (foreachBatch parity): a
-    // terminated stream publishes nothing; a replayed committed epoch is
-    // idempotently dropped.
+    val minInv = messages.collect {
+      case m: MsgStaging if m.minInvalidate != null => m.minInvalidate
+    }.sorted.headOption
+
+    // F2 entry check + C2/C3 ledger skip: a terminated stream publishes
+    // nothing; a replayed committed epoch is idempotently dropped, but
+    // its invalidate is still honoured (F2 durability: the crash may have
+    // landed between the token write and the marker write below).
     if (StreamingCdc.wasInvalidated(name)) { dropStaging(); return }
     if (StreamingCdc.committedBatchIds(spark, name, tokensDir)
         .contains(epochId)) {
-      dropStaging(); return
+      dropStaging()
+      if (minInv.isDefined)
+        StreamingCdc.markInvalidatedAt(spark, name, tokensDir)
+      return
     }
-
-    val minInv = staged.flatMap(m => Option(m.minInvalidate))
-      .sorted.headOption
 
     import graft.streaming.Observability.CommandMetrics
     var published = 0L
     var maxMsg: String = null
+    val subjects = scala.collection.mutable.Set.empty[String]
+    val t0 = System.nanoTime()
     CommandMetrics.time(name, "messages_append") {
-      minInv match {
-        case None =>
-          staged.foreach { m =>
-            promote(fs, m.path, epochId)
-            published += m.count
-            if (maxMsg == null || m.maxMsg > maxMsg) maxMsg = m.maxMsg
-          }
-        case Some(cut) =>
-          // truncateWithCut at the commit point: keep msgId < cut
-          val (below, rest) = staged.partition(_.maxMsg < cut)
-          below.foreach { m =>
-            promote(fs, m.path, epochId)
-            published += m.count
-            if (maxMsg == null || m.maxMsg > maxMsg) maxMsg = m.maxMsg
-          }
-          // straddling files are re-written DRIVER-side with the parquet
-          // API (Spark's hidden-file filter drops dot-staging paths even
-          // when listed explicitly): bounded work — a stream sees at most
-          // one invalidate epoch in its lifetime, and each file is one
-          // partition of that one micro-batch
-          rest.filter(m => m.minMsg < cut).foreach { m =>
-            val (kept, keptMax) = rewriteBelow(fs, m.path, cut, epochId)
-            published += kept
-            if (kept > 0 && (maxMsg == null || keptMax > maxMsg))
-              maxMsg = keptMax
-          }
-          rest.foreach(m => fs.delete(new Path(m.path), false))
+      // the F2 cut at the commit point: keep msgId < the min invalidate
+      val (below, rest) = staged.partition(m => minInv.forall(m.maxMsg < _))
+      below.foreach { m =>
+        promote(fs, m.path, epochId)
+        published += m.count
+        if (maxMsg == null || m.maxMsg > maxMsg) maxMsg = m.maxMsg
+        subjects ++= m.subjects
       }
+      // straddling files are re-written DRIVER-side with the parquet API
+      // (Spark's hidden-file filter drops dot-staging paths even when
+      // listed explicitly): bounded work — a stream sees at most one
+      // invalidate epoch in its lifetime, and each file is one partition
+      // of that one micro-batch
+      minInv.foreach { cut =>
+        rest.filter(m => m.minMsg < cut).foreach { m =>
+          val (kept, keptMax, keptSubjects) =
+            rewriteBelow(fs, m.path, cut, epochId)
+          published += kept
+          if (kept > 0 && (maxMsg == null || keptMax > maxMsg))
+            maxMsg = keptMax
+          subjects ++= keptSubjects
+        }
+      }
+      rest.foreach(m => fs.delete(new Path(m.path), false))
     }
+    // nats_message_duration_seconds analog at batch granularity: the
+    // epoch's publish duration, observed once per subject it published.
+    // INTENTIONAL divergence from the reference's per-publish timing
+    // (client.go:121-127): a micro-batch engine publishes once per epoch,
+    // so all subjects in it share one sample. Pinned by ObservabilitySpec.
+    val pubSec = (System.nanoTime() - t0) / 1e9
+    subjects.foreach(CommandMetrics.observePublish(_, pubSec))
 
     // the at-least-once window: messages are visible, token not yet
     StreamingCdc.faultpoint(name, epochId)
@@ -194,10 +209,12 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
 
   /** Copy the rows of one staging file with msgId < cut into a new
     * visible part- file (via dot-temp + rename, same discipline as the
-    * token writer). Returns (kept row count, max kept msgId or null).
+    * token writer). Returns (kept row count, max kept msgId or null,
+    * distinct kept subjects).
     */
   private def rewriteBelow(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, cut: String, epochId: Long): (Long, String) = {
+      staging: String, cut: String,
+      epochId: Long): (Long, String, Set[String]) = {
     import org.apache.parquet.example.data.Group
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
     import org.apache.parquet.schema.MessageTypeParser
@@ -214,6 +231,7 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     val tmp = new Path(messagesDir, s".$name.inprogress")
     var kept = 0L
     var keptMax: String = null
+    var keptSubjects = Set.empty[String]
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new GroupReadSupport(), new Path(staging))
       .withConf(hconf).build()
@@ -231,6 +249,7 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
           writer.write(g)
           kept += 1L
           if (keptMax == null || msgId > keptMax) keptMax = msgId
+          keptSubjects += g.getString("subject", 0)
         }
         g = reader.read()
       }
@@ -239,7 +258,7 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
       if (!fs.rename(tmp, new Path(messagesDir, name)))
         throw new java.io.IOException(s"truncated-file promote failed: $tmp")
     } else fs.delete(tmp, false)
-    (kept, keptMax)
+    (kept, keptMax, keptSubjects)
   }
 
   /** Atomic staging-file promotion: dot-file → part- name. The batch_id
@@ -276,8 +295,7 @@ final class MessageWriterFactory(messagesDir: String)
 }
 
 /** Buffers the partition's published rows, sorts them by msgId at commit
-  * (file order = token order, the contract the foreachBatch path got from
-  * sortWithinPartitions — Spark's analyzer rejects Sort on streaming
+  * (file order = token order — Spark's analyzer rejects Sort on streaming
   * plans, so the ordering lives here), and writes one dot-prefixed
   * staging parquet file. Skips invalidate rows but records the smallest
   * invalidate msgId. The buffer holds one partition of one micro-batch —
@@ -293,7 +311,7 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
   import org.apache.parquet.schema.MessageTypeParser
 
   // physical schema == StreamingCdc.messagesSchema, so Spark reads these
-  // files interchangeably with the foreachBatch-written ones
+  // files as the messages table
   private val schema = MessageTypeParser.parseMessageType(
     """message msg {
       |  required binary subject (UTF8);
@@ -323,7 +341,7 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
 
   override def commit(): WriterCommitMessage = {
     if (rows.isEmpty)
-      return MsgStaging(null, null, null, 0L, minInvalidate)
+      return MsgStaging(null, null, null, 0L, minInvalidate, Nil)
     val sorted = rows.sortBy(_._1)
     // executor-local Configuration: the sandbox runs on the local fs; a
     // cluster deployment would thread the serialized hadoop conf through
@@ -346,7 +364,7 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
       writer.write(g)
     } finally writer.close()
     MsgStaging(stagingPath.toString, sorted.head._1, sorted.last._1,
-      sorted.length.toLong, minInvalidate)
+      sorted.length.toLong, minInvalidate, sorted.map(_._2).distinct.toList)
   }
 
   override def abort(): Unit =

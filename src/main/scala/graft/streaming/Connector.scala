@@ -31,8 +31,7 @@ object Connector {
       tokensCapped = c.tokensCollCapped,
       // capped size-in-bytes → row-retention analog: ~64 bytes per token row
       tokensMaxRows = math.max(1, (c.tokensCollSizeInBytes / 64L).toInt),
-      preAndPostImages = c.changeStreamPreAndPostImages,
-      sourceFormat = "changestream") // the real S1 source (token offsets)
+      preAndPostImages = c.changeStreamPreAndPostImages)
 
   /** `Run()` (connector.go:125-186): assemble observability (step 3),
     * provision + fan out + await (steps 4-5), tear down (step 6). The

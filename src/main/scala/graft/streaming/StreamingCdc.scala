@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -11,65 +11,59 @@ import graft.operators.CdcPipeline
 
 /** The reference's streaming runtime (SURVEY.md §2/§3), Spark-native:
   *
-  *   S1  change-stream source  → `readStream` over a parquet directory of
-  *       change-event envelopes (the zero-egress stand-in for a MongoDB
-  *       change stream; offsets = file positions, checkpointed)
-  *   F1  publishable filter, P1–P4 projections → CdcPipeline.toMessages
-  *   F2  invalidate → batch truncated at the invalidate, query stopped
+  *   S1  change-stream source  → the DSv2 [[graft.sources.ChangeStreamSource]]
+  *       over a parquet directory of change-event envelopes (the
+  *       zero-egress stand-in for a MongoDB change stream; offsets =
+  *       resume tokens, checkpointed)
+  *   F1  publishable filter, P1–P4 projections → the reader's `ops` option
+  *       + CdcPipeline.toSinkRows
+  *   F2  invalidate → epoch truncated at the invalidate, query stopped
   *       (internal/mongo/client.go:232-236)
-  *   K1  publish → idempotent append to the `messages` table
-  *   K2  token commit → append to the `tokens` table AFTER the publish —
-  *       the commit point (internal/mongo/client.go:248-254)
+  *   K1  publish → staged files renamed into the `messages` table at the
+  *       epoch commit of the DSv2 [[graft.sinks.MessageSink]]
+  *   K2  token commit → append to the `tokens` table AFTER the publish, in
+  *       the same epoch commit — the commit point
+  *       (internal/mongo/client.go:248-254)
   *   C1  per-collection fan-out → one StreamingQuery per config
   *   C2/C3 resume/replay → Structured Streaming checkpoint; a replayed
-  *       batch whose token was never committed re-publishes (the
+  *       epoch whose token was never committed re-publishes (the
   *       reference's at-least-once duplicate window, README.md:118-127);
-  *       a replayed batch whose token IS committed is skipped (idempotent)
+  *       a replayed epoch whose token IS committed is skipped (idempotent)
   *   C4  graceful shutdown → stopAll()
   *
-  * Delivery contract (pinned by StreamingCdcSpec): the raw `messages`
-  * table is at-least-once exactly like the reference — duplicates appear
-  * iff a crash lands between publish and token commit; the deduplicated
-  * view (CdcPipeline.dedupByMsgId, = JetStream Nats-Msg-Id consumer dedup)
-  * is exactly-once. Per-collection order is (batch_id, msgId).
+  * Delivery contract (pinned by StreamingCdcSpec and MessageSinkSpec): the
+  * raw `messages` table is at-least-once exactly like the reference —
+  * duplicates appear iff a crash lands between publish and token commit;
+  * the deduplicated view (CdcPipeline.dedupByMsgId, = JetStream
+  * Nats-Msg-Id consumer dedup) is exactly-once. Per-collection order is
+  * (batch_id, msgId).
   *
-  * Scale: each batch is one narrow codegen'd map over the envelope; the
-  * only non-map work is the commit bookkeeping, which touches a one-row
-  * DataFrame. Many collections = many independent queries (C1), exactly
-  * the reference's goroutine-per-collection, but each partition-parallel.
+  * Scale: each epoch is one narrow codegen'd map over the envelope into
+  * per-partition staging files; the commit is driver-side renames plus a
+  * one-row token write. Many collections = many independent queries (C1),
+  * exactly the reference's goroutine-per-collection, but each
+  * partition-parallel.
   */
 object StreamingCdc {
 
   final case class StreamConfig(
       name: String,                 // watched-collection analog
-      inputDir: String,             // envelope parquet source (S1)
+      inputDir: String,             // envelope parquet directory (S1)
       messagesDir: String,          // K1 sink table
       tokensDir: String,            // K2 token table
       checkpointDir: String,
       streamName: Option[String] = None, // P5 default: upper(name)
       tokensCapped: Boolean = false,     // D1 capped-collection analog
       tokensMaxRows: Int = 1024,
-      maxFilesPerTrigger: Int = 8,
       // D2 — collMod changeStreamPreAndPostImages (client.go:166-173):
       // when disabled, pre-images are unavailable and
       // fullDocumentBeforeChange publishes as absent (update_test.go:52-56
       // version gate).
       preAndPostImages: Boolean = true,
-      // S1 source: "changestream" = the DSv2 MicroBatchStream with
-      // resume-token offsets + F1 pushdown (graft.sources); "parquet" =
-      // the plain file source (offsets = file positions, micro-batches
-      // shaped by maxFilesPerTrigger).
-      sourceFormat: String = "parquet",
-      // changestream-source admission control: row budget per trigger
-      // (whole files in token order until the budget is hit). None =
-      // all available.
-      maxRowsPerTrigger: Option[Long] = None,
-      // K1/K2 sink: "foreachbatch" = the micro-batch driver loop below;
-      // "dsv2" = the DataSource V2 StreamingWrite (graft.sinks
-      // .MessageSink) — same two-phase publish/token contract declared
-      // through Spark's epoch commit API. Parity + crash-replay pinned
-      // on both paths by StreamingCdcSpec/StreamFuzz.
-      sinkFormat: String = "foreachbatch") {
+      // source admission control: row budget per trigger (whole files in
+      // token order until the budget is hit; the first file is always
+      // admitted). None = all available.
+      maxRowsPerTrigger: Option[Long] = None) {
     def resolvedStreamName: String =
       streamName.getOrElse(Model.defaultStreamName(name))
   }
@@ -123,9 +117,6 @@ object StreamingCdc {
     if (!fs.exists(p)) fs.create(p, true).close()
   }
 
-  private def markInvalidated(spark: SparkSession, cfg: StreamConfig): Unit =
-    markInvalidatedAt(spark, cfg.name, cfg.tokensDir)
-
   private def hasInvalidatedMarker(spark: SparkSession,
       cfg: StreamConfig): Boolean = {
     val p = invalidatedMarker(cfg.tokensDir)
@@ -161,10 +152,6 @@ object StreamingCdc {
   private val ledgerCache =
     new ConcurrentHashMap[String, java.util.Set[java.lang.Long]]()
 
-  private def committedBatches(
-      spark: SparkSession, cfg: StreamConfig): java.util.Set[java.lang.Long] =
-    committedBatchIds(spark, cfg.name, cfg.tokensDir)
-
   private[graft] def committedBatchIds(spark: SparkSession, name: String,
       tokensDir: String): java.util.Set[java.lang.Long] =
     ledgerCache.computeIfAbsent(tokensDir, _ =>
@@ -193,144 +180,11 @@ object StreamingCdc {
         s
       })
 
-  /** One micro-batch: truncate at invalidate (F2), publish (K1), then
-    * commit the token (K2). Mirrors the reference's per-event loop
-    * (internal/mongo/client.go:217-257) at batch granularity.
-    */
-  private[streaming] def processBatch(
-      cfg: StreamConfig)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (wasInvalidated(cfg.name)) return
-    // C2/C3 replay: skip batches whose token commit already landed — but
-    // still PROBE a replayed batch for the invalidate (F2 durability: a
-    // crash can land between the token commit and the marker write below;
-    // the probe costs one job on replayed batches only).
-    if (committedBatches(spark, cfg).contains(batchId)) {
-      if (CdcPipeline.containsInvalidate(batch)) markInvalidated(spark, cfg)
-      return
-    }
-
-    // ONE action publishes the batch (round-12 fixed-cost shave; the
-    // separate invalidate-probe job is gone): the F2 cut rides the same
-    // job as a broadcast 1-row subtree whose invalidate-equality filter
-    // pushes into its own source scan (~0 rows in steady state), and the
-    // driver learns "saw invalidate" from an Observation on that subtree.
-    // The two subtree scans stay deterministic under the change-stream
-    // contract (append-only input, the [start,end] token range pins the
-    // same rows on both passes). persist() would still be a net loss —
-    // caching materializes every row into block storage to save a
-    // columnar re-scan of ~0 rows (~15% throughput tax measured at the
-    // bench SF).
-    processUncachedBatch(cfg, batch, batchId)
-  }
-
-  private def processUncachedBatch(
-      cfg: StreamConfig, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    import Observability.CommandMetrics
-    // F2 — invalidate cut, observed (no separate action): `cut_seen` is
-    // non-null iff the batch contains an invalidate.
-    val obsInv = new org.apache.spark.sql.Observation(
-      s"graft-inv-${cfg.name}-$batchId")
-    val cut = CdcPipeline.invalidateCut(batch)
-      .observe(obsInv, max(col("cut")).as("cut_seen"))
-    val truncated = CdcPipeline.truncateWithCut(batch, cut)
-    // D2 — pre/post images disabled ⇒ the source never delivers pre-images.
-    val effective =
-      if (cfg.preAndPostImages) truncated
-      else truncated.withColumn("fullDocumentBeforeChange",
-        lit(null).cast("string"))
-
-    val msgs = CdcPipeline
-      .toMessages(spark, cfg.resolvedStreamName)(effective)
-      .withColumn("batch_id", lit(batchId))
-      // Per-collection order within the batch (SURVEY.md §7 hard part 4):
-      // a micro-batch of one collection is small — sort it locally before
-      // the append so file order matches token order.
-      .sortWithinPartitions(col("msgId"))
-
-    // K1 — publish. Crash after this but before the token append ⇒ the
-    // replayed batch re-publishes: the reference's duplicate window.
-    // The subject set (for the K4 timing samples) and the K2 token stats
-    // (max msgId, row count) ride along as OBSERVED metrics on the append
-    // pass itself — the micro-batch runs exactly one job over the
-    // messages, not three (append + distinct-collect + agg as before;
-    // the extra passes were a measurable ~15% streaming-throughput tax).
-    val obs = new org.apache.spark.sql.Observation(s"graft-${cfg.name}-$batchId")
-    val observed = msgs.observe(obs,
-      collect_set(col("subject")).as("subjects"),
-      max(col("msgId")).as("max_msg_id"),
-      count(lit(1)).as("n_published"))
-    val t0 = System.nanoTime()
-    CommandMetrics.time(cfg.name, "messages_append") {
-      observed.write.mode("append").parquet(cfg.messagesDir)
-    }
-    // nats_message_duration_seconds analog at batch granularity: the
-    // publish duration, observed once per subject present in the batch
-    // (subjects per collection are bounded by the operation-type set).
-    // INTENTIONAL divergence from the reference's per-publish timing
-    // (client.go:121-127): a micro-batch engine appends once per batch,
-    // so all subjects in a batch share one sample — splitting the
-    // append per subject would multiply actions on the hot path for a
-    // metrics nit. Contract pinned by ObservabilitySpec.
-    val pubSec = (System.nanoTime() - t0) / 1e9
-    val stats = obs.get // resolved: the append above was the action
-    stats("subjects").asInstanceOf[scala.collection.Seq[Any]]
-      .foreach(s => CommandMetrics.observePublish(s.toString, pubSec))
-
-    faultpoint(cfg.name, batchId)
-
-    // K2 — token commit point, from the same observed pass. The commit
-    // marker is ONE row, so it is written driver-side with the parquet
-    // writer directly (round-12 fixed-cost shave: a Spark job per trigger
-    // just to serialize one row was ~0.1 s of scheduler overhead at the
-    // bench SF). Same commit discipline: the file lands AFTER the publish
-    // append, written under a dot-prefixed temp name and RENAMED into its
-    // part- name only after close() (ADVICE r12: the writer opens the
-    // destination at build(), so a rename-free write could crash into a
-    // truncated, footer-less part- file that poisons every later read).
-    // A crash before the rename leaves only a dot-file — ignored by
-    // Spark's listing and by the part- filters of the ledger and trim —
-    // i.e. an uncommitted batch, exactly the at-least-once window the
-    // replay tests pin.
-    val nPublished = stats("n_published").asInstanceOf[Long]
-    CommandMetrics.time(cfg.name, "tokens_append") {
-      writeTokenRow(spark, cfg.tokensDir, batchId,
-        stats("max_msg_id").asInstanceOf[String], nPublished)
-    }
-    committedBatches(spark, cfg).add(batchId)
-    if (cfg.tokensCapped) trimTokens(spark, cfg)
-    publishedTotal.merge(cfg.name, nPublished, (a, b) => a + b) // K4 counter
-
-    // F2: stop requested — learned from the cut-subtree observation of
-    // the SAME job that published (no separate probe action). The wait is
-    // BOUNDED (ADVICE r12): the metric rides a subtree under a broadcast
-    // exchange, and if a future Spark version / plan change stops
-    // delivering observed metrics from there, an unbounded get() would
-    // hang every micro-batch. Await the observation's own completion
-    // future with a deadline; on timeout fall back to the explicit
-    // one-action probe (the pre-r12 path) so the batch completes with
-    // correct F2 semantics and the degradation is visible in the log
-    // rather than a silent hang.
-    val sawInvalidate =
-      (try Some(scala.concurrent.Await.result(
-        obsInv.future, scala.concurrent.duration.Duration(30, "s")))
-      catch { case _: java.util.concurrent.TimeoutException => None }) match {
-        case Some(r) => r.getAs[Any]("cut_seen") != null
-        case None =>
-          Console.err.println(s"[graft] WARN ${cfg.name} batch $batchId: " +
-            "invalidate observation unresolved after 30s; falling back to " +
-            "explicit probe")
-          CdcPipeline.containsInvalidate(batch)
-      }
-    if (sawInvalidate) markInvalidated(spark, cfg)
-  }
-
   /** Driver-side single-row token write via parquet-hadoop's example
     * writer: physical schema (required int64 batch_id, optional binary
     * value (STRING), required int64 n_published) matches [[tokenSchema]],
     * so Spark reads these files interchangeably with the Spark-written
-    * ones (ensureTable's empty seed file, trimTokens' compaction output).
+    * ones (ensureTable's empty seed file, trimTokensAt's compaction output).
     */
   private[graft] def writeTokenRow(spark: SparkSession, tokensDir: String,
       batchId: Long, value: String, nPublished: Long): Unit = {
@@ -350,7 +204,7 @@ object StreamingCdc {
     val path = new org.apache.hadoop.fs.Path(tokensDir, name)
     // Two-phase commit (ADVICE r12): build() opens the DESTINATION file,
     // so write under a dot-temp (invisible to readers: Spark skips
-    // dot-files; committedBatches/trimTokens filter on the part- prefix;
+    // dot-files; the ledger seed and trim filter on the part- prefix;
     // the .inprogress suffix keeps it out of tableExists' *.parquet probe)
     // and rename after close() — rename is atomic on a posix fs.
     val tmp = new org.apache.hadoop.fs.Path(tokensDir, s".$name.inprogress")
@@ -384,9 +238,6 @@ object StreamingCdc {
     * (max_by) and the ledger (set membership) are insensitive to
     * duplicates, and the next trim converges the row count.
     */
-  private[graft] def trimTokens(spark: SparkSession, cfg: StreamConfig): Unit =
-    trimTokensAt(spark, cfg.name, cfg.tokensDir, cfg.tokensMaxRows)
-
   private[graft] def trimTokensAt(spark: SparkSession, name: String,
       tokensDir: String, tokensMaxRows: Int): Unit = {
     val t = spark.read.parquet(tokensDir)
@@ -419,7 +270,7 @@ object StreamingCdc {
     Ddl.ensureTable(spark, cfg.messagesDir, messagesSchema)
     Ddl.ensureTable(spark, cfg.tokensDir, tokenSchema)
     // F2 durability: a collection whose stream saw an invalidate stays
-    // terminated across restarts (processBatch's entry check publishes
+    // terminated across restarts (the sink's entry check publishes
     // nothing; runAll's poll stops the query) — the marker survives where
     // the in-memory flag does not.
     if (hasInvalidatedMarker(spark, cfg)) invalidated.put(cfg.name, true)
@@ -427,61 +278,36 @@ object StreamingCdc {
     // Re-seed the ledger cache from disk at (re)start: another process may
     // have committed since, and tests recreate dirs at the same path.
     ledgerCache.remove(cfg.tokensDir)
-    val src0 =
-      if (cfg.sourceFormat == "changestream") {
-        val r = spark.readStream
-          .format(classOf[graft.sources.ChangeStreamSource].getName)
-          // F1 in the READER on the streaming path: Spark never runs
-          // filter pushdown on streaming DSv2 scans, so the op set rides
-          // in as a source option (see ChangeStreamSource) — the reader
-          // skips non-publishable rows before materializing them.
-          .option("ops",
-            (Model.PublishableOps :+ Model.InvalidateOp).mkString(","))
-        cfg.maxRowsPerTrigger.foreach(n =>
-          r.option("maxRowsPerTrigger", n.toString))
-        r.load(cfg.inputDir)
-      } else
-        spark.readStream
-          .schema(Model.changeEventSchema)
-          .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-          .parquet(cfg.inputDir)
-    // F1 at the SOURCE on the streaming path too (round 12): DSv2
-    // pushdown engages at STREAM planning, not per foreachBatch batch —
-    // without a filter in the streaming DAG the reader materializes
-    // every op kind each trigger and filterPublishable re-drops them
-    // spark-side per batch. Publishable ∪ invalidate is exactly the set
-    // processBatch consumes (F2 needs the invalidate rows for the cut;
-    // drop/rename were always skipped downstream).
-    val src = src0.filter(col("operationType")
-      .isin((Model.PublishableOps :+ Model.InvalidateOp): _*))
-    val w =
-      if (cfg.sinkFormat == "dsv2") {
-        // K1/K2 through the DSv2 StreamingWrite (graft.sinks.MessageSink):
-        // the projection (D2 image mask included) moves INTO the stream
-        // dataflow — invalidate rows ride along flagged by `op`, and the
-        // F2 cut + token commit happen in the sink's epoch commit. The
-        // per-file token ordering the foreachBatch path got from
-        // sortWithinPartitions happens in the sink's DataWriter instead
-        // (Spark's analyzer rejects any Sort on a streaming plan).
-        val effective =
-          if (cfg.preAndPostImages) src
-          else src.withColumn("fullDocumentBeforeChange",
-            lit(null).cast("string"))
-        CdcPipeline.toSinkRows(cfg.resolvedStreamName)(effective)
-          .writeStream
-          .queryName(cfg.name)
-          .option("checkpointLocation", cfg.checkpointDir)
-          .format(classOf[graft.sinks.MessageSink].getName)
-          .option("path", cfg.messagesDir)
-          .option("tokensDir", cfg.tokensDir)
-          .option("name", cfg.name)
-          .option("capped", cfg.tokensCapped.toString)
-          .option("maxTokRows", cfg.tokensMaxRows.toString)
-      } else
-        src.writeStream
-          .queryName(cfg.name)
-          .option("checkpointLocation", cfg.checkpointDir)
-          .foreachBatch(processBatch(cfg) _)
+    val r = spark.readStream
+      .format(classOf[graft.sources.ChangeStreamSource].getName)
+      // F1 in the READER: Spark never runs filter pushdown on streaming
+      // DSv2 scans, so the op set rides in as a source option (see
+      // ChangeStreamSource) — the reader skips non-publishable rows before
+      // materializing them. Invalidate rows are kept for the F2 cut.
+      .option("ops",
+        (Model.PublishableOps :+ Model.InvalidateOp).mkString(","))
+    cfg.maxRowsPerTrigger.foreach(n =>
+      r.option("maxRowsPerTrigger", n.toString))
+    val src = r.load(cfg.inputDir)
+    // D2 — pre/post images disabled ⇒ the source never delivers pre-images.
+    val effective =
+      if (cfg.preAndPostImages) src
+      else src.withColumn("fullDocumentBeforeChange", lit(null).cast("string"))
+    // K1/K2 through the DSv2 StreamingWrite (graft.sinks.MessageSink):
+    // invalidate rows ride along flagged by `op`, and the F2 cut + token
+    // commit happen in the sink's epoch commit. Per-file token order comes
+    // from the sink's DataWriter (Spark's analyzer rejects any Sort on a
+    // streaming plan).
+    val w = CdcPipeline.toSinkRows(cfg.resolvedStreamName)(effective)
+      .writeStream
+      .queryName(cfg.name)
+      .option("checkpointLocation", cfg.checkpointDir)
+      .format(classOf[graft.sinks.MessageSink].getName)
+      .option("path", cfg.messagesDir)
+      .option("tokensDir", cfg.tokensDir)
+      .option("name", cfg.name)
+      .option("capped", cfg.tokensCapped.toString)
+      .option("maxTokRows", cfg.tokensMaxRows.toString)
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
 

@@ -150,7 +150,7 @@ class ChangeStreamSourceSpec extends SparkSuite {
     val root = Files.createTempDirectory("css").toString
     val c = graft.streaming.StreamingCdc.StreamConfig(
       "css-resume", s"$root/in", s"$root/messages", s"$root/tokens",
-      s"$root/ckpt", sourceFormat = "changestream")
+      s"$root/ckpt")
     write(c.inputDir, (1 to 25).map(ev(_, "insert")))
     graft.streaming.StreamingCdc.runAll(spark, Seq(c), availableNow = true)
     assert(spark.read.parquet(c.messagesDir).count() == 25)
@@ -206,13 +206,11 @@ class ChangeStreamSourceSpec extends SparkSuite {
 
   test("STREAMING path F1 pushdown: the publishable∪invalidate filter " +
       "StreamingCdc puts in the stream DAG reaches the source scan") {
-    // Pins the round-12 fixed-cost finding: DSv2 pushdown engages at
-    // STREAM planning, not per foreachBatch batch — a filterless stream
-    // DAG makes the reader materialize every op kind each trigger.
-    // NOTE the foreachBatch DataFrame wraps the micro-batch output as an
-    // ExistingRDD — per-batch actions cannot re-plan the source, which is
-    // WHY the filter must live in the stream DAG. The scan with its
-    // pushed op set is visible only in the streaming query's own plan.
+    // Spark never runs filter pushdown on streaming DSv2 scans, so
+    // StreamingCdc hands the op set to the reader as its `ops` option —
+    // without it the reader would materialize every op kind each trigger.
+    // The scan with its pushed op set is visible only in the streaming
+    // query's own plan.
     val root = Files.createTempDirectory("css").toString
     write(s"$root/in", Seq(ev(1, "insert"), ev(2, "drop"), ev(3, "update")))
     val ops = graft.model.Model.PublishableOps :+ graft.model.Model.InvalidateOp
@@ -239,19 +237,5 @@ class ChangeStreamSourceSpec extends SparkSuite {
       assert(!planStr.contains("pushedOps=*"), planStr)
       assert(planStr.contains("invalidate"), planStr)
     } finally q.stop()
-  }
-
-  test("end-to-end through StreamingCdc with sourceFormat=changestream") {
-    val root = Files.createTempDirectory("css").toString
-    val c = graft.streaming.StreamingCdc.StreamConfig(
-      "css-e2e", s"$root/in", s"$root/messages", s"$root/tokens",
-      s"$root/ckpt", sourceFormat = "changestream")
-    write(c.inputDir, (1 to 12).map(i =>
-      ev(i, if (i % 4 == 0) "drop" else "insert")))
-    graft.streaming.StreamingCdc.runAll(spark, Seq(c), availableNow = true)
-    val msgs = spark.read.parquet(c.messagesDir)
-    assert(msgs.count() == 9) // 3 drops filtered
-    assert(graft.streaming.StreamingCdc.latestToken(spark, c.tokensDir)
-      .contains("000011"))
   }
 }

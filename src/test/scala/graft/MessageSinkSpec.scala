@@ -3,18 +3,16 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.model.{ChangeEvent, ChangeEventId, Ns}
 import graft.operators.CdcPipeline
 import graft.streaming.StreamingCdc
 import graft.streaming.StreamingCdc.StreamConfig
 
-/** DSv2 StreamingWrite sink (graft.sinks.MessageSink) — parity with the
-  * foreachBatch runtime on every contract StreamingCdcSpec pins there:
-  * publish + token commit, dedup view, invalidate truncation (mid-batch
-  * included), checkpoint restart, the crash-replay duplicate window, and
-  * capped-token convergence. Same fixtures, both sink paths, compared
-  * directly.
+/** DSv2 StreamingWrite sink (graft.sinks.MessageSink), the publish path
+  * of StreamingCdc: the epoch-commit contracts that live in the sink
+  * itself — invalidate truncation (mid-batch included) and its
+  * durability, the crash-replay duplicate window, and capped-token
+  * convergence.
   */
 class MessageSinkSpec extends SparkSuite {
   import spark.implicits._
@@ -34,56 +32,12 @@ class MessageSinkSpec extends SparkSuite {
 
   private def cfg(name: String, root: String): StreamConfig =
     StreamConfig(name, s"$root/in", s"$root/messages-$name",
-      s"$root/tokens-$name", s"$root/ckpt-$name", maxFilesPerTrigger = 1,
-      sourceFormat = "changestream", sinkFormat = "dsv2")
+      s"$root/tokens-$name", s"$root/ckpt-$name",
+      maxRowsPerTrigger = Some(1L))
 
   private def dedup(c: StreamConfig): DataFrame =
     CdcPipeline.dedupByMsgId(
       spark.read.parquet(c.messagesDir).drop("batch_id"))
-
-  test("parity: dsv2 and foreachBatch publish identical message sets, " +
-      "identical latest token, strictly increasing per-batch ranges") {
-    val root = tmp()
-    val ops = Seq("insert", "update", "replace", "delete")
-    val events = (1 to 80).map(i => ev(i, ops(i % 4))) ++
-      Seq(ev(81, "drop"), ev(82, "rename")) ++ // skipped ops ride along
-      (83 to 120).map(i => ev(i, ops(i % 4)))
-    val in = s"$root/in"
-    // several files => several micro-batches through the token-ordered
-    // changestream source
-    events.grouped(30).foreach(g => writeBatchFile(in, g))
-
-    // same streamName on both paths — subjects must match for the
-    // set-equality compare
-    val a = cfg("pr-dsv2", root).copy(streamName = Some("PARITY"))
-    val b = a.copy(name = "pr-feb", messagesDir = s"$root/messages-pr-feb",
-      tokensDir = s"$root/tokens-pr-feb", checkpointDir = s"$root/ckpt-pr-feb",
-      sinkFormat = "foreachbatch")
-    StreamingCdc.runAll(spark, Seq(a), availableNow = true)
-    StreamingCdc.runAll(spark, Seq(b), availableNow = true)
-
-    // identical published sets (set-equality both directions)
-    assert(dedup(a).exceptAll(dedup(b)).isEmpty &&
-      dedup(b).exceptAll(dedup(a)).isEmpty,
-      "dsv2 and foreachBatch message sets diverge")
-    // identical commit point
-    assert(StreamingCdc.latestToken(spark, a.tokensDir) ==
-      StreamingCdc.latestToken(spark, b.tokensDir))
-    // per-batch msgId ranges strictly increase on the dsv2 path
-    val ranges = spark.read.parquet(a.messagesDir)
-      .groupBy(col("batch_id"))
-      .agg(min(col("msgId")).as("lo"), max(col("msgId")).as("hi"))
-      .orderBy(col("batch_id"))
-      .select("lo", "hi").as[(String, String)].collect()
-    assert(ranges.sliding(2).forall {
-      case Array((_, hiA), (loB, _)) => hiA < loB
-      case _ => true
-    }, s"batch ranges overlap: ${ranges.toSeq}")
-    // n_published on tokens matches the published rows
-    val nTok = spark.read.parquet(a.tokensDir)
-      .agg(sum(col("n_published"))).head().getLong(0)
-    assert(nTok == spark.read.parquet(a.messagesDir).count())
-  }
 
   test("F2 via epoch commit: a mid-batch invalidate truncates the batch, " +
       "commits the pre-cut token, stops the stream durably") {
@@ -106,6 +60,57 @@ class MessageSinkSpec extends SparkSuite {
     StreamingCdc.runAll(spark, Seq(c), availableNow = true)
     assert(spark.read.parquet(c.messagesDir).count() == 15,
       "an invalidated stream must not resume publishing")
+  }
+
+  test("F2 via epoch commit: an invalidate alone in its partition (no " +
+      "publishable rows beside it) still cuts the epoch") {
+    val root = tmp()
+    // no row budget: all three files form one epoch, one partition each
+    val c = cfg("invalone", root).copy(maxRowsPerTrigger = None)
+    writeBatchFile(c.inputDir, (1 to 10).map(ev(_, "insert")))
+    writeBatchFile(c.inputDir, Seq(ev(11, "invalidate")))
+    writeBatchFile(c.inputDir, (12 to 20).map(ev(_, "insert")))
+    StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    val ids = spark.read.parquet(c.messagesDir)
+      .select("msgId").as[String].collect().toSeq.sorted
+    assert(ids == (1 to 10).map(i => f"$i%06d"),
+      s"expected truncation at the invalidate, got $ids")
+    assert(StreamingCdc.wasInvalidated(c.name))
+  }
+
+  test("F2 durability via epoch commit: a kill after the invalidate " +
+      "epoch's token landed but before its marker (inside the capped " +
+      "trim) still terminates the stream on restart") {
+    val root = tmp()
+    val c = cfg("invtrim", root).copy(tokensCapped = true, tokensMaxRows = 1)
+    writeBatchFile(c.inputDir, (1 to 10).map(ev(_, "insert")))
+    writeBatchFile(c.inputDir,
+      (11 to 15).map(ev(_, "insert")) ++ Seq(ev(16, "invalidate")) ++
+        (17 to 20).map(ev(_, "insert")))
+    // epoch 1 is the first whose token write makes the table exceed its
+    // cap, so its trim runs — and dies in the trim window (batchId -1)
+    val tripped = new java.util.concurrent.atomic.AtomicBoolean(false)
+    StreamingCdc.faultpoint = (name, batchId) =>
+      if (name == c.name && batchId == -1L &&
+          tripped.compareAndSet(false, true))
+        throw new java.io.IOException("sinkspec: injected trim kill")
+    try {
+      intercept[Exception] {
+        StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+      }
+      assert(tripped.get())
+    } finally StreamingCdc.faultpoint = (_, _) => ()
+    assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000015"))
+
+    // restart with post-invalidate input pending: the replayed, already
+    // committed epoch must still mark the stream terminated
+    writeBatchFile(c.inputDir, (21 to 30).map(ev(_, "insert")))
+    StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    assert(StreamingCdc.wasInvalidated(c.name))
+    val ids = spark.read.parquet(c.messagesDir)
+      .select("msgId").as[String].collect().toSeq.sorted
+    assert(ids == (1 to 15).map(i => f"$i%06d"),
+      s"restart published past a committed invalidate: $ids")
   }
 
   test("C2/C3: kill in the publish->token window replays with observable " +

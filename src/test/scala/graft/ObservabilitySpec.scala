@@ -21,7 +21,7 @@ class ObservabilitySpec extends SparkSuite {
       "carries the reference's family names") {
     val root = Files.createTempDirectory("graft-obs").toString
     val c = StreamConfig("obs1", s"$root/in", s"$root/messages",
-      s"$root/tokens", s"$root/ckpt", maxFilesPerTrigger = 1)
+      s"$root/tokens", s"$root/ckpt", maxRowsPerTrigger = Some(1L))
     (1 to 3).foreach { b =>
       ((b - 1) * 10 + 1 to b * 10).map(ev).toDF()
         .coalesce(1).write.mode("append").parquet(c.inputDir)

@@ -32,7 +32,7 @@ class StreamingCdcSpec extends SparkSuite {
 
   private def cfg(name: String, root: String): StreamConfig =
     StreamConfig(name, s"$root/in", s"$root/messages", s"$root/tokens",
-      s"$root/checkpoint", maxFilesPerTrigger = 1)
+      s"$root/checkpoint", maxRowsPerTrigger = Some(1L))
 
   private def readMessages(c: StreamConfig): DataFrame =
     spark.read.parquet(c.messagesDir)
@@ -53,6 +53,8 @@ class StreamingCdcSpec extends SparkSuite {
     assert(ids == (1 to 100).map(i => f"$i%06d"))
     val tokens = spark.read.parquet(c.tokensDir)
     assert(tokens.count() == 2) // one commit per micro-batch
+    // each token row counts exactly the messages its batch published
+    assert(tokens.agg(sum(col("n_published"))).head().getLong(0) == 100L)
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000100"))
   }
 
@@ -282,7 +284,7 @@ class StreamingCdcSpec extends SparkSuite {
       .select(lpad(col("event_id").cast("string"), 12, "0").as("id"))
       .as[String].collect().sorted.toSeq
     assert(expected.size == 80190) // the bench's publishable subset
-    val c = cfg("s-matrix", root).copy(sourceFormat = "changestream",
+    val c = cfg("s-matrix", root).copy(
       maxRowsPerTrigger = Some(16384L)) // ~6 batches over 16 files
 
     // Two kill points, each in the worst window (publish landed, token
@@ -343,26 +345,23 @@ class StreamingCdcSpec extends SparkSuite {
     // the commit point survives: max_by is insensitive to duplicates
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000060"))
     // the next trim converges the row count without losing the token
-    StreamingCdc.trimTokens(spark, c)
+    StreamingCdc.trimTokensAt(spark, c.name, c.tokensDir, c.tokensMaxRows)
     assert(spark.read.parquet(c.tokensDir).count() <= 2)
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000060"))
   }
 
   test("fixed-cost budget: at most 3 Spark jobs per micro-batch trigger " +
-      "— the engine's micro-batch materialization, the broadcast build " +
-      "of the observed invalidate-cut subtree, and the ONE publish " +
-      "append action (round-12 shave). The removed fixed costs (separate " +
-      "invalidate probe action, Spark-side token commit, Spark-side " +
-      "ledger seed/ensureTable) would each add a job per trigger or per " +
+      "— the epoch's one write job into the DSv2 sink; the F2 cut, the " +
+      "token commit and the ledger seed run driver-side at the sink's " +
+      "epoch commit. Each of those fixed costs done as a Spark job " +
+      "(invalidate probe action, Spark-side token commit, Spark-side " +
+      "ledger seed/ensureTable) would add a job per trigger or per " +
       "start; StreamProfile measured them at ~0.1 s of scheduler " +
       "overhead each, so this pin keeps them from silently returning. " +
       "Upper bound, not equality (ADVICE r13): exact job counts are a " +
-      "scheduler implementation detail, and the bounded invalidate-wait " +
-      "fallback legitimately adds a probe job if the Observation ever " +
-      "times out — neither should fail this budget pin") {
+      "scheduler implementation detail and should not fail this pin") {
     val root = tmp()
-    val c = cfg("s-jobs", root).copy(
-      sourceFormat = "changestream", maxRowsPerTrigger = Some(25L))
+    val c = cfg("s-jobs", root).copy(maxRowsPerTrigger = Some(25L))
     (0 until 4).foreach(b => writeBatchFile(c.inputDir,
       (b * 25 + 1 to b * 25 + 25).map(ev(_, "insert"))))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -428,7 +427,7 @@ class StreamingCdcSpec extends SparkSuite {
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000020"))
     // ledger seed (footer fast path) skips the dot-file too
     StreamingCdc.writeTokenRow(spark, c.tokensDir, 2L, "000030", 10L)
-    StreamingCdc.trimTokens(spark, c)
+    StreamingCdc.trimTokensAt(spark, c.name, c.tokensDir, c.tokensMaxRows)
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000030"))
     assert(spark.read.parquet(c.tokensDir).count() <= 2)
     assert(junk.exists(), "trim must not touch non-part- files")
