@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every query in SparkEntry.queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Failures are reported
   * loudly (per-query "error" entry + rc=2), never silently timed — a broken
@@ -89,24 +87,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the deployment path: functions arrive via the extension, not
-      // per-query registration
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Join-strategy knobs (guide §3.1), env-parameterised for scale
-      // experiments; the defaults reproduce Spark's stock behavior so the
-      // driver's bench stays comparable across rounds.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "0"))
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup outside the timed section: session/codegen/parquet-footer costs
@@ -354,8 +335,17 @@ object Bench {
       contaminatedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val errs2 = errors.keys.toList.sorted.map("\"" + _ + "\"")
       .mkString("[", ",", "]")
+    // Environment certification: the cores the session ran on and the
+    // commit it was built from (null outside a git work tree).
+    val gitSha =
+      try "\"" + scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim + "\""
+      catch { case _: Throwable => "null" }
+    val envJson = s""""cpus":${LocalSession.envCpus},""" +
+      s""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
+      s""""git_sha":$gitSha"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","consumption":"$Consumption","queries":$qs,"streaming":$streamingJson,"errors":$errs2,"sf":"$sfDir","trials":$trials,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"cpu_ref_start":$cpuRefStart,"cpu_ref_end":$cpuRefEnd,"cpu_ref_par_start":$cpuRefParStart,"cpu_ref_par_end":$cpuRefParEnd,"spread":$spreads,"medians":$medians,"prev_capture":$prevCaptureJson,"regressions":$regressions,"contaminated":$contaminated}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","consumption":"$Consumption","queries":$qs,"streaming":$streamingJson,"errors":$errs2,"sf":"$sfDir","trials":$trials,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"cpu_ref_start":$cpuRefStart,"cpu_ref_end":$cpuRefEnd,"cpu_ref_par_start":$cpuRefParStart,"cpu_ref_par_end":$cpuRefParEnd,"spread":$spreads,"medians":$medians,"prev_capture":$prevCaptureJson,"regressions":$regressions,"contaminated":$contaminated,$envJson}"""
     println(line)
     // The driver's stdout capture truncated round 5's per-query tail
     // (56/96 timings survived) — persist the full line to a file too so
@@ -409,7 +399,7 @@ object Bench {
         s""""contaminated_count":$ncontam,"errors_count":${errors.size},""" +
         s""""regressions":$regressions,""" +
         s""""queries":$qsTopJson,"queries_omitted":$omitted,""" +
-        s""""sf":"$sfDir","trials":$trials,"summary":true}"""
+        s""""sf":"$sfDir","trials":$trials,$envJson,"summary":true}"""
     // Whatever the base line leaves under the cap is the map's budget
     // (a long regressions list must not push the line past the window).
     val lineCap = sys.env.get("SPARK_GRAFT_BENCH_SUMMARY_CAP") match {

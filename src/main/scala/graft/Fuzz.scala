@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Randomized differential gate runner (see FuzzEntry): executes N seeded
   * random queries on the Spark engine, dumps each result to parquet plus
   * the paired DuckDB SQL to `oracle_sql.json` — Verify-shaped output, so
@@ -17,15 +15,7 @@ object Fuzz {
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 220
     val seed0 = if (args.length > 3) args(3).toLong else 1L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Stale results from an earlier generator version would be compared

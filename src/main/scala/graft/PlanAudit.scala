@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -15,14 +14,9 @@ import java.nio.file.{Files, Paths}
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // a fixed 8 cores, not SPARK_GRAFT_CPUS, so PLANS.md reproduces on
+    // any box
+    val spark = LocalSession.builder(cpus = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def flatten(p: SparkPlan): Seq[SparkPlan] = p match {

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: write `.explain("formatted")` for registered queries to
+/** Dev tool: execute registered queries and write their executed plan
+  * (`.explain("formatted")`, `isFinalPlan=true`) to
   * <outdir>/<query>_<suffix>.txt — the plan-evidence companion to the
   * bench numbers (judge-checkable without running Spark). Usage:
   *   sbt "runMain graft.PlanDump <sfdir> <outdir> <suffix> [query...]"
@@ -17,29 +17,18 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // SPARK_GRAFT_PLAN_EXEC=1: consume the query first (Bench shape) so
-    // the dump shows the FINAL adaptive plan (isFinalPlan=true) — AQE
-    // runtime decisions (ReusedExchange/AQEShuffleRead/broadcast
-    // conversions) are invisible in the initial plan, and several
-    // round-15 claims are exactly about those.
-    val exec = sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")
     for (name <- names) {
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        // run THIS df's own QueryExecution (consumeAll would execute a
-        // derived plan and leave this one un-finalized)
-        if (exec) df.queryExecution.toRdd.count()
+        // Run THIS df's own QueryExecution first (consumeAll would execute
+        // a derived plan and leave this one un-finalized), so the dump is
+        // the FINAL adaptive plan (isFinalPlan=true): AQE's runtime
+        // decisions (ReusedExchange, AQEShuffleRead, broadcast
+        // conversions) are invisible in the initial plan.
+        df.queryExecution.toRdd.count()
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)

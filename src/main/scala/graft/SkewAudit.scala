@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Skew
@@ -38,14 +38,7 @@ object SkewAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val rep = if (args.length > 1) args(1).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = LocalSession.builder()
       // the documented scenario: dim side broadcast-ineligible
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
@@ -72,7 +65,7 @@ object SkewAudit {
         when(col("event_id") % 4 === 0, lit(999999L))
           .otherwise(col("user_id")).as("user_id"),
         col("event_type"))
-      .repartition(cpus.toInt)
+      .repartition(LocalSession.envCpus)
       .write.mode("overwrite").parquet(factDir)
     val fact = spark.read.parquet(factDir)
     // Materialize the dim as an INDEPENDENT table (parquet round-trip):

@@ -318,15 +318,7 @@ object StreamFuzz {
     val outJson = if (args.nonEmpty) args(0) else "STREAMING_FUZZ_r14.json"
     val n = if (args.length > 1) args(1).toInt else 75
     val seed0 = if (args.length > 2) args(2).toLong else 1L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val root = Files.createTempDirectory("graft-streamfuzz").toString
 

@@ -1,41 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: time ONE registered query repeatedly against a testdata dir —
-  * the A/B harness for plan work without the full Bench sweep.
+/** Dev tool: time ONE registered query at one or more testdata dirs — the
+  * A/B harness for plan work and cross-SF scaling spot-checks without the
+  * full Bench sweep.
   *
-  *   sbt "runMain graft.TimeQuery <queryName> [sfDir] [trials]"
+  *   sbt "runMain graft.TimeQuery <query> <sfDir> [sfDir...]"
   *
-  * Prints every trial and the min (the Bench-comparable figure). Runs the
-  * same session shape as Bench (local[32], shuffle.partitions=32,
-  * extensions) plus one untimed warmup.
+  * Per dir: one untimed warm-up, then three timed trials, each consuming
+  * every output column through `Bench.consumeAll` (the Bench shape).
+  * Prints every trial and the per-dir min (the Bench-comparable figure).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val trials = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"no query $name"))
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
-    val times = (1 to trials).map { i =>
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[time-query] $name trial $i: $dt%.3f s")
-      dt
+    val spark = LocalSession.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    for (dir <- args.tail) {
+      Bench.consumeAll(fn(spark, dir))
+      val times = (1 to 3).map { trial =>
+        val t0 = System.nanoTime()
+        val n = Bench.consumeAll(fn(spark, dir))
+        val dt = (System.nanoTime() - t0) / 1e9
+        println(f"[time-query] $name $dir trial $trial: $dt%.3f s, $n rows")
+        dt
+      }
+      println(f"[time-query] $name $dir min: ${times.min}%.3f s")
     }
-    println(f"[time-query] $name min: ${times.min}%.3f s")
     spark.stop()
   }
 }

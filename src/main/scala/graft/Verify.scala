@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump one query's generated oracle SQL (iterate on an oracle in
@@ -19,21 +18,7 @@ object DumpOracle {
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the deployment path: functions arrive via the extension, not
-      // per-query registration
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Older testdata generations stored events.ts as TIMESTAMP(NANOS),
-      // which Spark 4 rejects unless read as raw long nanos; newer ones
-      // use TIMESTAMP(MICROS). The flag keeps the nanos generation
-      // readable; EventsCdc.normalizeTs canonicalizes either at load.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names); unset = full gate —

@@ -21,13 +21,6 @@ object CdcPipeline {
   def filterPublishable(events: DataFrame): DataFrame =
     events.filter(col("operationType").isin(Model.PublishableOps: _*))
 
-  /** F2 — detect stream invalidation (internal/mongo/client.go:232-236).
-    * Returns true iff the batch contains an `invalidate` event; the caller
-    * (streaming driver) stops the query. Uses a limit-1 scan, not a count.
-    */
-  def containsInvalidate(events: DataFrame): Boolean =
-    !events.filter(col("operationType") === Model.InvalidateOp).isEmpty
-
   /** Events before the first invalidate, in token order — the exact set
     * the reference would have processed before breaking the watch loop.
     * A broadcast 1-row cross join against the min invalidate token

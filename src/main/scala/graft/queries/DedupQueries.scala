@@ -52,15 +52,22 @@ object DedupQueries {
     * frames that are NOT model-sized (localCheckpoint compiles its
     * materialization via `df.rdd`, losing AQE's runtime broadcast-join
     * conversions — the round-14 measurement) and too big to collect.
+    * The result is read lazily, so its directory lives until JVM exit.
     */
   private[graft] def materialize(s: SparkSession, df: DataFrame): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-mat").toString + "/t"
-    df.write.mode("overwrite")
-      .option("compression",
-        sys.env.getOrElse("SPARK_GRAFT_MAT_CODEC", "lz4"))
-      .parquet(out)
+    val dir = java.nio.file.Files.createTempDirectory("graft-mat").toFile
+    matDirs.add(dir)
+    val out = s"$dir/t"
+    df.write.mode("overwrite").option("compression", "lz4").parquet(out)
     s.read.parquet(out)
+  }
+
+  // Every materialize dir, deleted recursively by one shutdown hook.
+  private lazy val matDirs = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+    sys.addShutdownHook(
+      dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+    dirs
   }
 
   // Corpus doc count for the prefix-pairs activation floor — cached per
