@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   *    footer so readers see the schema before any data lands.
   *  - D1 capped collections (client.go:155-158): size-bounded FIFO emulated
   *    as a row-count retention policy applied at token-commit time
-  *    (StreamingCdc.trimTokens) — storage-level capping is a non-goal
+  *    (StreamingCdc.trimTokensAt) — storage-level capping is a non-goal
   *    (SURVEY.md §7 hard part 5).
   *  - D3 `AddStream` (internal/nats/client.go:105-118): the messages table
   *    with its subject column plays the JetStream stream `NAME` with

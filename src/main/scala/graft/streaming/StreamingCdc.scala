@@ -40,9 +40,11 @@ import graft.operators.CdcPipeline
   *
   * Scale: each epoch is one narrow codegen'd map over the envelope into
   * per-partition staging files; the commit is driver-side renames plus a
-  * one-row token write. Many collections = many independent queries (C1),
-  * exactly the reference's goroutine-per-collection, but each
-  * partition-parallel.
+  * one-row token write, and runs no Spark job — on the capped path too,
+  * whose trim decides from parquet footer row counts and compacts only
+  * past the cap. Many collections = many independent queries (C1),
+  * started at once like the reference's goroutine-per-collection, but
+  * each partition-parallel.
   */
 object StreamingCdc {
 
@@ -157,28 +159,35 @@ object StreamingCdc {
     ledgerCache.computeIfAbsent(tokensDir, _ =>
       Observability.CommandMetrics.time(name, "tokens_read") {
         val s = ConcurrentHashMap.newKeySet[java.lang.Long]()
-        // Footer fast path (round-12 fixed-cost shave): the parquet
-        // footers carry row counts, so an EMPTY ledger — every fresh
-        // start — is decided driver-side from two file opens instead of
-        // a Spark collect job. A non-empty ledger (restart path) still
+        // Footer fast path (round-12 fixed-cost shave): an EMPTY ledger —
+        // every fresh start — is decided driver-side instead of by a
+        // Spark collect job. A non-empty ledger (restart path) still
         // reads through Spark: it is rare per process lifetime and the
         // table is capped-small.
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val dir = new org.apache.hadoop.fs.Path(tokensDir)
-        val fs = dir.getFileSystem(hconf)
-        val parts = fs.listStatus(dir).map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-        val totalRows = parts.iterator.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(p, hconf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-        if (totalRows > 0)
+        if (partFooterRows(spark, tokensDir)._2 > 0)
           spark.read.parquet(tokensDir).select("batch_id")
             .collect().foreach(r => s.add(r.getLong(0)))
         s
       })
+
+  /** The `part-` files of a table dir and their total row count, read
+    * driver-side from the parquet footers — a few file opens, no Spark
+    * job. The row counts of the ledger seed's empty check and of the D1
+    * trim decision.
+    */
+  private def partFooterRows(spark: SparkSession,
+      dir: String): (Array[org.apache.hadoop.fs.Path], Long) = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val parts = d.getFileSystem(hconf).listStatus(d).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    val rows = parts.iterator.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    (parts, rows)
+  }
 
   /** Driver-side single-row token write via parquet-hadoop's example
     * writer: physical schema (required int64 batch_id, optional binary
@@ -240,15 +249,11 @@ object StreamingCdc {
     */
   private[graft] def trimTokensAt(spark: SparkSession, name: String,
       tokensDir: String, tokensMaxRows: Int): Unit = {
-    val t = spark.read.parquet(tokensDir)
-    if (t.count() > tokensMaxRows) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val dir = new org.apache.hadoop.fs.Path(tokensDir)
-      val fs = dir.getFileSystem(hconf)
-      val oldFiles = fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith("part-"))
-      val keep = t.orderBy(col("batch_id").desc).limit(tokensMaxRows)
-        .collect()
+    // decided from the footers: a commit below the cap runs no Spark job
+    val (oldFiles, rows) = partFooterRows(spark, tokensDir)
+    if (rows > tokensMaxRows) {
+      val keep = spark.read.parquet(tokensDir)
+        .orderBy(col("batch_id").desc).limit(tokensMaxRows).collect()
       val kept = spark.createDataFrame(
         java.util.Arrays.asList(keep: _*), tokenSchema)
       kept.coalesce(1).write.mode("append").parquet(tokensDir)
@@ -258,6 +263,8 @@ object StreamingCdc {
       // production; StreamFuzz v2 kills here to probe the duplicate-file
       // recovery path across restarts.
       faultpoint(name, -1L)
+      val fs = new org.apache.hadoop.fs.Path(tokensDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       oldFiles.foreach(p => fs.delete(p, false))
     }
   }
@@ -313,13 +320,13 @@ object StreamingCdc {
 
   /** C1 — fan out one query per collection and block until all finish or
     * one sees an invalidate (then stop that one, like `resume=false`).
-    * First hard failure propagates (errgroup semantics,
-    * pkg/connector/connector.go:128-174).
+    * First hard failure propagates and stops every sibling (errgroup
+    * semantics, pkg/connector/connector.go:128-174), a failed start too.
     */
   def runAll(spark: SparkSession, cfgs: Seq[StreamConfig],
-      availableNow: Boolean = false, pollMs: Long = 25L): Unit = {
-    val queries = cfgs.map(c => c.name -> start(spark, c, availableNow)).toMap
+      availableNow: Boolean = false, pollMs: Long = 25L): Unit =
     try {
+      val queries = startAll(spark, cfgs, availableNow)
       while (queries.values.exists(_.isActive)) {
         queries.foreach { case (name, q) =>
           if (q.isActive && wasInvalidated(name)) q.stop() // F2 → C4
@@ -333,6 +340,26 @@ object StreamingCdc {
       }
       queries.values.foreach(_.awaitTermination()) // surface errors (C3)
     } finally stopAll(spark) // C4
+
+  /** Start every query at once, like the reference's goroutine per
+    * collection: a pool of min(#collections, cores) threads, shut down
+    * once the starts return. Every start finishes before this returns or
+    * throws, so none can start after the caller's stopAll; the first
+    * failed start (in config order) then propagates.
+    */
+  private def startAll(spark: SparkSession, cfgs: Seq[StreamConfig],
+      availableNow: Boolean): Map[String, StreamingQuery] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    import scala.jdk.CollectionConverters._
+    val pool = Executors.newFixedThreadPool(math.max(1,
+      math.min(cfgs.size, Runtime.getRuntime.availableProcessors)))
+    val starts = cfgs.map(c => (() => c.name -> start(spark, c,
+      availableNow)): Callable[(String, StreamingQuery)])
+    val started =
+      try pool.invokeAll(starts.asJava).asScala finally pool.shutdown()
+    started.map { f =>
+      try f.get() catch { case e: ExecutionException => throw e.getCause }
+    }.toMap
   }
 
   /** C4 — graceful shutdown of every active query. */

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * summary is always the max-batch_id generation. Generations are
   * KB-sized but a months-long stream accumulates one per trigger, so
   * after each commit the table is TRIMMED to the newest
-  * `keepGenerations` (crash-safe append-then-delete, the trimTokens
+  * `keepGenerations` (crash-safe append-then-delete, the trimTokensAt
   * discipline): only the newest generations can ever be read (summary)
   * or replay-checked (Spark replays at most the latest uncommitted
   * batch), so dropping older ones changes no answer. A crash inside the
@@ -108,7 +108,7 @@ object StreamingHeavyHitters {
   /** Keep only the newest `keep` generations — the long-stream bound on
     * the summary table (without it the table grows one KB generation per
     * trigger forever). Crash-safe append-then-delete, exactly the
-    * trimTokens discipline: the kept rows are re-appended as ONE new
+    * trimTokensAt discipline: the kept rows are re-appended as ONE new
     * file first, the superseded files are deleted only after. A crash in
     * between leaves duplicates that `summary`/the replay guard ignore
     * and the next trim's DISTINCT collapses; a crash before the append

@@ -107,7 +107,7 @@ object StreamingNearDedup {
     * duplicates left by a previous compaction crash. Rows are clustered
     * by (band, bkey) — the probe join key — so a probe's shuffle reads
     * land on few co-located files, and sized ~4M rows per file. Crash
-    * order mirrors trimTokens: append new files, only then delete the
+    * order mirrors trimTokensAt: append new files, only then delete the
     * superseded ones. Runs AFTER the index commit marker, so batch
     * commit semantics never depend on it.
     */

@@ -218,6 +218,22 @@ class StreamingCdcSpec extends SparkSuite {
     assert(spark.streams.active.isEmpty) // all siblings stopped (C4)
   }
 
+  test("C1: a failed start stops every sibling that did start and " +
+      "surfaces (errgroup semantics, connector.go:128-174)") {
+    val rootGood = tmp(); val rootBad = tmp()
+    val good = cfg("startA", rootGood)
+    writeBatchFile(good.inputDir, (1 to 5).map(ev(_, "insert")))
+    // messagesDir under a regular file: the bad start's ensureTable throws
+    val blocker = java.nio.file.Paths.get(rootBad, "blocker")
+    java.nio.file.Files.writeString(blocker, "a file, not a directory")
+    val bad = cfg("startB", rootBad).copy(messagesDir = s"$blocker/messages")
+    try {
+      // not availableNow: a leaked sibling would keep running
+      intercept[Exception](StreamingCdc.runAll(spark, Seq(good, bad)))
+      assert(spark.streams.active.isEmpty) // the started sibling stopped (C4)
+    } finally StreamingCdc.stopAll(spark)
+  }
+
   test("malformed events (null operationType / null token) are dropped, " +
       "never crash the stream") {
     val root = tmp()
@@ -350,18 +366,9 @@ class StreamingCdcSpec extends SparkSuite {
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000060"))
   }
 
-  test("fixed-cost budget: at most 3 Spark jobs per micro-batch trigger " +
-      "— the epoch's one write job into the DSv2 sink; the F2 cut, the " +
-      "token commit and the ledger seed run driver-side at the sink's " +
-      "epoch commit. Each of those fixed costs done as a Spark job " +
-      "(invalidate probe action, Spark-side token commit, Spark-side " +
-      "ledger seed/ensureTable) would add a job per trigger or per " +
-      "start; StreamProfile measured them at ~0.1 s of scheduler " +
-      "overhead each, so this pin keeps them from silently returning. " +
-      "Upper bound, not equality (ADVICE r13): exact job counts are a " +
-      "scheduler implementation detail and should not fail this pin") {
-    val root = tmp()
-    val c = cfg("s-jobs", root).copy(maxRowsPerTrigger = Some(25L))
+  /** Spark jobs started while `c` drains four 25-event files as four
+    * triggers (the fixed-cost budget pins below). */
+  private def sparkJobsOverFourTriggers(c: StreamConfig): Int = {
     (0 until 4).foreach(b => writeBatchFile(c.inputDir,
       (b * 25 + 1 to b * 25 + 25).map(ev(_, "insert"))))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -381,10 +388,37 @@ class StreamingCdcSpec extends SparkSuite {
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(spark.read.parquet(c.tokensDir).count() == 4) // 4 committed triggers
-    assert(jobs.get() <= 3 * 4,
-      s"expected at most 3 Spark jobs per trigger (<=12 total), saw ${jobs.get()}")
+    jobs.get()
+  }
+
+  test("fixed-cost budget: at most 3 Spark jobs per micro-batch trigger " +
+      "— the epoch's one write job into the DSv2 sink; the F2 cut, the " +
+      "token commit and the ledger seed run driver-side at the sink's " +
+      "epoch commit. Each of those fixed costs done as a Spark job " +
+      "(invalidate probe action, Spark-side token commit, Spark-side " +
+      "ledger seed/ensureTable) would add a job per trigger or per " +
+      "start; StreamProfile measured them at ~0.1 s of scheduler " +
+      "overhead each, so this pin keeps them from silently returning. " +
+      "Upper bound, not equality (ADVICE r13): exact job counts are a " +
+      "scheduler implementation detail and should not fail this pin") {
+    val jobs = sparkJobsOverFourTriggers(
+      cfg("s-jobs", tmp()).copy(maxRowsPerTrigger = Some(25L)))
+    assert(jobs <= 3 * 4,
+      s"expected at most 3 Spark jobs per trigger (<=12 total), saw $jobs")
     // and sanity: the stream actually did per-trigger work (>=1 job each)
-    assert(jobs.get() >= 4, s"implausibly few jobs: ${jobs.get()}")
+    assert(jobs >= 4, s"implausibly few jobs: $jobs")
+  }
+
+  test("fixed-cost budget on the capped path (the Connector default): at " +
+      "most 3 Spark jobs per micro-batch trigger — the D1 trim decides " +
+      "from parquet footer row counts, so a commit below the cap runs no " +
+      "Spark job (a Spark-side count added 3 jobs per trigger)") {
+    // tokensMaxRows 64 = the Connector's 4096-byte cap / 64 bytes per row
+    val jobs = sparkJobsOverFourTriggers(cfg("s-jobs-capped", tmp()).copy(
+      maxRowsPerTrigger = Some(25L), tokensCapped = true, tokensMaxRows = 64))
+    assert(jobs <= 3 * 4,
+      s"expected at most 3 Spark jobs per trigger (<=12 total), saw $jobs")
+    assert(jobs >= 4, s"implausibly few jobs: $jobs")
   }
 
   test("F2 durability: a collection whose invalidate batch COMMITTED " +
