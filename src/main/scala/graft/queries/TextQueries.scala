@@ -688,9 +688,10 @@ object TextQueries {
         .filter(col("df") === 1)
         .groupBy(col("d").as("doc_id"))
         .agg(count(lit(1)).as("n_novel"))
-      docs.select(col("doc_id"),
-          expr(s"cast(size(array_distinct(word_ngrams($toks, 3))) as bigint)")
-            .as("n_shingles"))
+      // NULL text has no shingles: 0, as the oracle's COALESCE gives
+      docs.select(col("doc_id"), coalesce(
+          expr(s"cast(size(array_distinct(word_ngrams($toks, 3))) as bigint)"),
+          lit(0L)).as("n_shingles"))
         .join(novel, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_shingles"),
           coalesce(col("n_novel"), lit(0L)).as("n_novel"))

@@ -2,7 +2,6 @@ package graft.sinks
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,7 +12,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.StreamingCdc
+import graft.streaming.{ParquetIO, StreamingCdc}
 
 /** K1/K2 as a DataSource V2 `StreamingWrite` (SURVEY.md §7 step 4's
   * third custom-Catalyst item): the NATS-shaped publish sink with
@@ -90,6 +89,14 @@ object MessageSink {
     StructField("op", StringType, nullable = false)))
 
   private[sinks] val InvalidateOp = graft.model.Model.InvalidateOp
+
+  /** Parquet schema of the staging and part- files, converted from
+    * [[StreamingCdc.messagesSchema]] so Spark reads them as the messages
+    * table.
+    */
+  private[sinks] val messageType = new org.apache.spark.sql.execution
+    .datasources.parquet.SparkToParquetSchemaConverter()
+    .convert(StreamingCdc.messagesSchema)
 }
 
 final class MessageSinkTable(path: String, tokensDir: String, name: String,
@@ -175,7 +182,7 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
       minInv.foreach { cut =>
         rest.filter(m => m.minMsg < cut).foreach { m =>
           val (kept, keptMax, keptSubjects) =
-            rewriteBelow(fs, m.path, cut, epochId)
+            rewriteBelow(fs, hconf, m.path, cut, epochId)
           published += kept
           if (kept > 0 && (maxMsg == null || keptMax > maxMsg))
             maxMsg = keptMax
@@ -213,34 +220,16 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     * distinct kept subjects).
     */
   private def rewriteBelow(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, cut: String,
-      epochId: Long): (Long, String, Set[String]) = {
+      hconf: org.apache.hadoop.conf.Configuration, staging: String,
+      cut: String, epochId: Long): (Long, String, Set[String]) = {
     import org.apache.parquet.example.data.Group
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      """message msg {
-        |  required binary subject (UTF8);
-        |  required binary msgId (UTF8);
-        |  required binary data (UTF8);
-        |  required int64 batch_id;
-        |}""".stripMargin)
-    val hconf = new Configuration()
-    GroupWriteSupport.setSchema(schema, hconf)
     val name = s"part-$epochId-${java.util.UUID.randomUUID()}.snappy.parquet"
     val tmp = new Path(messagesDir, s".$name.inprogress")
     var kept = 0L
     var keptMax: String = null
     var keptSubjects = Set.empty[String]
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), new Path(staging))
-      .withConf(hconf).build()
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, hconf))
-      .withConf(hconf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
+    val reader = ParquetIO.groupReader(new Path(staging), hconf)
+    val writer = ParquetIO.groupWriter(tmp, MessageSink.messageType, hconf)
     try {
       var g: Group = reader.read()
       while (g != null) {
@@ -307,18 +296,6 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
   extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   import org.apache.parquet.example.data.simple.SimpleGroup
-  import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-  import org.apache.parquet.schema.MessageTypeParser
-
-  // physical schema == StreamingCdc.messagesSchema, so Spark reads these
-  // files as the messages table
-  private val schema = MessageTypeParser.parseMessageType(
-    """message msg {
-      |  required binary subject (UTF8);
-      |  required binary msgId (UTF8);
-      |  required binary data (UTF8);
-      |  required int64 batch_id;
-      |}""".stripMargin)
 
   private val stagingPath = new Path(messagesDir,
     s".staging-$epochId-$partitionId-$taskId-" +
@@ -343,20 +320,12 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
     if (rows.isEmpty)
       return MsgStaging(null, null, null, 0L, minInvalidate, Nil)
     val sorted = rows.sortBy(_._1)
-    // executor-local Configuration: the sandbox runs on the local fs; a
-    // cluster deployment would thread the serialized hadoop conf through
-    // the factory
-    val hconf = new Configuration()
-    GroupWriteSupport.setSchema(schema, hconf)
-    val writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile
-          .fromPath(stagingPath, hconf))
-      .withConf(hconf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
+    // a task has no session at hand: it writes through the JVM's one
+    // loaded conf (ParquetIO), never a per-task copy
+    val writer = ParquetIO.groupWriter(stagingPath, MessageSink.messageType,
+      ParquetIO.conf)
     try sorted.foreach { case (msgId, subject, data) =>
-      val g = new SimpleGroup(schema)
+      val g = new SimpleGroup(MessageSink.messageType)
       g.add("subject", subject)
       g.add("msgId", msgId)
       g.add("data", data)
@@ -369,7 +338,7 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
 
   override def abort(): Unit =
     try {
-      val fs = stagingPath.getFileSystem(new Configuration())
+      val fs = stagingPath.getFileSystem(ParquetIO.conf)
       fs.delete(stagingPath, false)
     } catch { case _: Throwable => () }
 

@@ -7,9 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -23,6 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.Model
+import graft.streaming.ParquetIO
 
 /** S1 — the change-stream source as a genuine DataSource V2
   * `MicroBatchStream` (SURVEY.md §7 step 4): streaming offsets ARE resume
@@ -190,7 +188,7 @@ object ChangeStreamFiles {
   }
 
   private def readRange(file: Path, conf: Configuration): Option[FileRange] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = ParquetIO.openFooter(file, conf)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       if (blocks.isEmpty) return None // empty sentinel from Ddl.ensureTable
@@ -216,7 +214,7 @@ final class ChangeStreamMicroBatch(path: String, opFilter: Option[Set[String]],
   extends MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  private val conf = new Configuration()
+  private val conf = ParquetIO.conf
 
   /** Trigger.AvailableNow: freeze the target at query start; paced
     * triggers drain up to it, then the query terminates.
@@ -296,7 +294,7 @@ final class ChangeStreamBatch(path: String, opFilter: Option[Set[String]],
     required: StructType = Model.changeEventSchema)
   extends Batch {
   override def planInputPartitions(): Array[InputPartition] =
-    ChangeStreamFiles.listRanges(path, new Configuration())
+    ChangeStreamFiles.listRanges(path, ParquetIO.conf)
       .map(r => ChangeStreamPartition(r.path, "", "", opFilter, required)
         : InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
@@ -330,8 +328,7 @@ final class ChangeStreamReader(p: ChangeStreamPartition)
   private val projection: org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{GroupType, MessageType}
     val fileSchema = {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p.file), new Configuration()))
+      val r = ParquetIO.openFooter(new Path(p.file), ParquetIO.conf)
       try r.getFooter.getFileMetaData.getSchema finally r.close()
     }
     val names = (p.required.fieldNames ++ Array("_id", "operationType"))
@@ -351,14 +348,8 @@ final class ChangeStreamReader(p: ChangeStreamPartition)
     new MessageType(fileSchema.getName, types: _*)
   }
 
-  private val reader = {
-    val conf = new Configuration()
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      projection.toString)
-    org.apache.parquet.hadoop.ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf).build()
-  }
+  private val reader =
+    ParquetIO.groupReader(new Path(p.file), ParquetIO.conf, Some(projection))
   private var current: InternalRow = _
 
   override def next(): Boolean = {

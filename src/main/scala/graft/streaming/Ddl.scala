@@ -43,10 +43,7 @@ object Ddl {
     if (!tableExists(spark, path)) {
       val msgType = new org.apache.spark.sql.execution.datasources.parquet
         .SparkToParquetSchemaConverter().convert(schema)
-      val hconf = new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration)
-      org.apache.parquet.hadoop.example.GroupWriteSupport
-        .setSchema(msgType, hconf)
+      val hconf = spark.sparkContext.hadoopConfiguration
       // Two-phase like StreamingCdc.writeTokenRow (ADVICE r12): build()
       // opens the destination, so a crash between build() and close()
       // must not leave a truncated part- file readers would choke on.
@@ -56,14 +53,7 @@ object Ddl {
       val p = new Path(path, name)
       val tmp = new Path(path, s".$name.inprogress")
       val fs = tmp.getFileSystem(hconf)
-      org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-          .fromPath(tmp, hconf))
-        .withConf(hconf)
-        .withCompressionCodec(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-        .close()
+      ParquetIO.groupWriter(tmp, msgType, hconf).close()
       if (!fs.rename(tmp, p))
         throw new java.io.IOException(s"ensureTable rename failed: $tmp -> $p")
     }

@@ -182,50 +182,46 @@ object StreamingCdc {
     val parts = d.getFileSystem(hconf).listStatus(d).map(_.getPath)
       .filter(_.getName.startsWith("part-"))
     val rows = parts.iterator.map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
+      val r = ParquetIO.openFooter(p, hconf)
       try r.getRecordCount finally r.close()
     }.sum
     (parts, rows)
   }
 
-  /** Driver-side single-row token write via parquet-hadoop's example
-    * writer: physical schema (required int64 batch_id, optional binary
-    * value (STRING), required int64 n_published) matches [[tokenSchema]],
-    * so Spark reads these files interchangeably with the Spark-written
-    * ones (ensureTable's empty seed file, trimTokensAt's compaction output).
+  /** Parquet schema of the token files, converted from [[tokenSchema]]
+    * as ensureTable's empty seed file is, so Spark reads both alike.
     */
+  private val tokenType = new org.apache.spark.sql.execution.datasources
+    .parquet.SparkToParquetSchemaConverter().convert(tokenSchema)
+
+  /** One token row: (batch_id, value, n_published). */
+  private type TokenRow = (Long, String, Long)
+
+  /** Driver-side single-row token write (K2). */
   private[graft] def writeTokenRow(spark: SparkSession, tokensDir: String,
-      batchId: Long, value: String, nPublished: Long): Unit = {
+      batchId: Long, value: String, nPublished: Long): Unit =
+    writeTokenFile(spark.sparkContext.hadoopConfiguration, tokensDir,
+      batchId, Seq((batchId, value, nPublished)))
+
+  /** Token rows as one new `part-` file, written driver-side through the
+    * parquet example writer (the token commit and the trim's compaction).
+    * Two-phase commit (ADVICE r12): the writer opens the DESTINATION file,
+    * so write under a dot-temp (invisible to readers: Spark skips
+    * dot-files; the ledger seed and trim filter on the part- prefix; the
+    * .inprogress suffix keeps it out of tableExists' *.parquet probe) and
+    * rename after close() — rename is atomic on a posix fs.
+    */
+  private def writeTokenFile(hconf: org.apache.hadoop.conf.Configuration,
+      tokensDir: String, fileBatchId: Long, rows: Seq[TokenRow]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.schema.{MessageTypeParser}
-    val schema = MessageTypeParser.parseMessageType(
-      """message token {
-        |  required int64 batch_id;
-        |  optional binary value (UTF8);
-        |  required int64 n_published;
-        |}""".stripMargin)
-    val hconf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    GroupWriteSupport.setSchema(schema, hconf)
-    val name = s"part-$batchId-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val name =
+      s"part-$fileBatchId-${java.util.UUID.randomUUID()}.snappy.parquet"
     val path = new org.apache.hadoop.fs.Path(tokensDir, name)
-    // Two-phase commit (ADVICE r12): build() opens the DESTINATION file,
-    // so write under a dot-temp (invisible to readers: Spark skips
-    // dot-files; the ledger seed and trim filter on the part- prefix;
-    // the .inprogress suffix keeps it out of tableExists' *.parquet probe)
-    // and rename after close() — rename is atomic on a posix fs.
     val tmp = new org.apache.hadoop.fs.Path(tokensDir, s".$name.inprogress")
     val fs = tmp.getFileSystem(hconf)
-    val w = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, hconf))
-      .withConf(hconf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val g = new SimpleGroup(schema)
+    val w = ParquetIO.groupWriter(tmp, tokenType, hconf)
+    try rows.foreach { case (batchId, value, nPublished) =>
+      val g = new SimpleGroup(tokenType)
       g.add("batch_id", batchId)
       if (value != null) g.add("value", value)
       g.add("n_published", nPublished)
@@ -233,6 +229,18 @@ object StreamingCdc {
     } finally w.close()
     if (!fs.rename(tmp, path))
       throw new java.io.IOException(s"token commit rename failed: $tmp -> $path")
+  }
+
+  private def readTokenRows(file: org.apache.hadoop.fs.Path,
+      hconf: org.apache.hadoop.conf.Configuration): Seq[TokenRow] = {
+    val r = ParquetIO.groupReader(file, hconf)
+    try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
+      (g.getLong("batch_id", 0),
+        if (g.getFieldRepetitionCount("value") > 0) g.getString("value", 0)
+        else null,
+        g.getLong("n_published", 0))
+    }.toList
+    finally r.close()
   }
 
   /** D1 capped-collection analog: keep only the newest tokensMaxRows rows.
@@ -249,22 +257,24 @@ object StreamingCdc {
     */
   private[graft] def trimTokensAt(spark: SparkSession, name: String,
       tokensDir: String, tokensMaxRows: Int): Unit = {
-    // decided from the footers: a commit below the cap runs no Spark job
+    // decided from the footers, compacted driver-side: a commit runs no
+    // Spark job below the cap or past it. The table holds at most
+    // cap + 1 tiny rows (plus the kept copies a crash in the window below
+    // leaves behind, which this dedup folds back)
+    val hconf = spark.sparkContext.hadoopConfiguration
     val (oldFiles, rows) = partFooterRows(spark, tokensDir)
     if (rows > tokensMaxRows) {
-      val keep = spark.read.parquet(tokensDir)
-        .orderBy(col("batch_id").desc).limit(tokensMaxRows).collect()
-      val kept = spark.createDataFrame(
-        java.util.Arrays.asList(keep: _*), tokenSchema)
-      kept.coalesce(1).write.mode("append").parquet(tokensDir)
+      val kept = oldFiles.toSeq.flatMap(readTokenRows(_, hconf))
+        .sortBy(_._1)(Ordering[Long].reverse).distinctBy(_._1)
+        .take(tokensMaxRows)
+      writeTokenFile(hconf, tokensDir, kept.headOption.fold(0L)(_._1), kept)
       // fault-injection hook in the trim RACE WINDOW (kept rows appended,
       // old files not yet deleted — the crash point the scaladoc above
       // reasons about; batchId -1 marks "inside trim"). No-op in
       // production; StreamFuzz v2 kills here to probe the duplicate-file
       // recovery path across restarts.
       faultpoint(name, -1L)
-      val fs = new org.apache.hadoop.fs.Path(tokensDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = new org.apache.hadoop.fs.Path(tokensDir).getFileSystem(hconf)
       oldFiles.foreach(p => fs.delete(p, false))
     }
   }

@@ -132,4 +132,18 @@ class DsirCmsNoveltySpec extends SparkSuite {
       }
     }
   }
+
+  test("n-gram novelty: a NULL-text document has 0 shingles, 0 novel and " +
+      "NULL novelty (the oracle's COALESCE(nv.n_shingles, 0))") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-novelty").toString
+    Seq((1L, Some("a b c d")), (2L, None), (3L, Some("a b")))
+      .toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+    val got = TextQueries.queries("text_ngram_novelty")(spark, tmp)
+      .collect().map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3)))
+    assert(got.toSeq == Seq(
+      (1L, 2L, 2L, 1.0),
+      (2L, 0L, 0L, null),
+      (3L, 0L, 0L, null)))
+  }
 }

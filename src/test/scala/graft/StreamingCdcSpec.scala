@@ -366,10 +366,10 @@ class StreamingCdcSpec extends SparkSuite {
     assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000060"))
   }
 
-  /** Spark jobs started while `c` drains four 25-event files as four
-    * triggers (the fixed-cost budget pins below). */
-  private def sparkJobsOverFourTriggers(c: StreamConfig): Int = {
-    (0 until 4).foreach(b => writeBatchFile(c.inputDir,
+  /** Spark jobs started while `c` drains `triggers` 25-event files as
+    * that many triggers (the fixed-cost budget pins below). */
+  private def sparkJobsOverTriggers(c: StreamConfig, triggers: Int): Int = {
+    (0 until triggers).foreach(b => writeBatchFile(c.inputDir,
       (b * 25 + 1 to b * 25 + 25).map(ev(_, "insert"))))
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -387,7 +387,13 @@ class StreamingCdcSpec extends SparkSuite {
       while (n != last) { last = n; Thread.sleep(300); n = jobs.get() }
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(spark.read.parquet(c.tokensDir).count() == 4) // 4 committed triggers
+    // every trigger committed: batch ids 0 until triggers, newest token last
+    val tokens = spark.read.parquet(c.tokensDir)
+    assert(tokens.agg(max(col("batch_id"))).head().getLong(0) == triggers - 1)
+    assert(tokens.count() == (if (c.tokensCapped)
+      math.min(triggers, c.tokensMaxRows) else triggers))
+    assert(StreamingCdc.latestToken(spark, c.tokensDir)
+      .contains(f"${triggers * 25}%06d"))
     jobs.get()
   }
 
@@ -401,8 +407,8 @@ class StreamingCdcSpec extends SparkSuite {
       "overhead each, so this pin keeps them from silently returning. " +
       "Upper bound, not equality (ADVICE r13): exact job counts are a " +
       "scheduler implementation detail and should not fail this pin") {
-    val jobs = sparkJobsOverFourTriggers(
-      cfg("s-jobs", tmp()).copy(maxRowsPerTrigger = Some(25L)))
+    val jobs = sparkJobsOverTriggers(
+      cfg("s-jobs", tmp()).copy(maxRowsPerTrigger = Some(25L)), 4)
     assert(jobs <= 3 * 4,
       s"expected at most 3 Spark jobs per trigger (<=12 total), saw $jobs")
     // and sanity: the stream actually did per-trigger work (>=1 job each)
@@ -414,11 +420,60 @@ class StreamingCdcSpec extends SparkSuite {
       "from parquet footer row counts, so a commit below the cap runs no " +
       "Spark job (a Spark-side count added 3 jobs per trigger)") {
     // tokensMaxRows 64 = the Connector's 4096-byte cap / 64 bytes per row
-    val jobs = sparkJobsOverFourTriggers(cfg("s-jobs-capped", tmp()).copy(
-      maxRowsPerTrigger = Some(25L), tokensCapped = true, tokensMaxRows = 64))
+    val jobs = sparkJobsOverTriggers(cfg("s-jobs-capped", tmp()).copy(
+      maxRowsPerTrigger = Some(25L), tokensCapped = true, tokensMaxRows = 64),
+      4)
     assert(jobs <= 3 * 4,
       s"expected at most 3 Spark jobs per trigger (<=12 total), saw $jobs")
     assert(jobs >= 4, s"implausibly few jobs: $jobs")
+  }
+
+  test("fixed-cost budget past the cap: a full capped tokens table (cap " +
+      "2, 8 triggers) still costs at most 3 Spark jobs per trigger — the " +
+      "D1 compaction reads and rewrites the tiny table driver-side (a " +
+      "Spark-side sort + limit + write added 3 jobs to every commit once " +
+      "the table was full)") {
+    val jobs = sparkJobsOverTriggers(cfg("s-jobs-full", tmp()).copy(
+      maxRowsPerTrigger = Some(25L), tokensCapped = true, tokensMaxRows = 2),
+      8)
+    assert(jobs <= 3 * 8,
+      s"expected at most 3 Spark jobs per trigger (<=24 total), saw $jobs")
+    assert(jobs >= 8, s"implausibly few jobs: $jobs")
+  }
+
+  test("the CDC path leaves its Hadoop confs unmutated: after a " +
+      "multi-file capped drain neither the JVM-wide ParquetIO conf nor " +
+      "the session's holds a parquet read or write schema, and a read " +
+      "with another projection returns its own columns") {
+    val c = cfg("s-conf", tmp()).copy(maxRowsPerTrigger = Some(10L),
+      tokensCapped = true, tokensMaxRows = 2)
+    val ops = Seq("insert", "update", "replace", "delete")
+    (0 until 4).foreach(b => writeBatchFile(c.inputDir,
+      (b * 10 + 1 to b * 10 + 10).map(i => ev(i, ops(i % 4)))))
+    StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    assert(readMessages(c).count() == 40)
+    assert(spark.read.parquet(c.tokensDir).count() == 2)
+    Seq(graft.streaming.ParquetIO.conf, spark.sparkContext.hadoopConfiguration)
+      .foreach { conf =>
+        Seq(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+            org.apache.parquet.hadoop.example.GroupWriteSupport
+              .PARQUET_EXAMPLE_SCHEMA)
+          .foreach(k =>
+            assert(conf.get(k) == null, s"$k leaked: ${conf.get(k)}"))
+      }
+    val source = spark.read
+      .format(classOf[graft.sources.ChangeStreamSource].getName)
+      .load(c.inputDir)
+    val keys = source.select(col("documentKey"), col("_id._data").as("t"))
+      .orderBy("t").collect()
+    assert(keys.head.schema.fieldNames.toSeq == Seq("documentKey", "t"))
+    assert(keys.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      (1 to 40).map(i => (s"""{"_id":$i}""", f"$i%06d")))
+    val docs = source.select(col("operationType"), col("fullDocument"))
+      .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_.toString)
+    assert(docs.toSeq == (1 to 40).map(i => (ops(i % 4),
+      if (ops(i % 4) == "delete") null else s"""{"_id":$i,"v":$i}"""))
+      .sortBy(_.toString))
   }
 
   test("F2 durability: a collection whose invalidate batch COMMITTED " +
