@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.{ParquetIO, StreamingCdc}
+import graft.streaming.{EpochTable, ParquetIO, StreamingCdc}
 
 /** K1/K2 as a DataSource V2 `StreamingWrite` (SURVEY.md §7 step 4's
   * third custom-Catalyst item): the NATS-shaped publish sink with
@@ -47,7 +47,7 @@ import graft.streaming.{ParquetIO, StreamingCdc}
   *     c. faultpoint (the StreamFuzz seam) fires BETWEEN message
   *        visibility and the token write — the reference's at-least-once
   *        duplicate window;
-  *     d. the token row lands via the same crash-safe dot-temp + rename
+  *     d. the token row lands through EpochTable's crash-safe two-phase
   *        writer ([[StreamingCdc.writeTokenRow]]), then capped tables
   *        trim, counters bump, and an invalidate marks the stream
   *        terminated durably ([[StreamingCdc.markInvalidatedAt]]).
@@ -135,8 +135,8 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(messagesDir).getFileSystem(hconf)
+    val fs = new Path(messagesDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staged = messages.collect {
       case m: MsgStaging if m.path != null => m
     }
@@ -174,19 +174,23 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
         if (maxMsg == null || m.maxMsg > maxMsg) maxMsg = m.maxMsg
         subjects ++= m.subjects
       }
-      // straddling files are re-written DRIVER-side with the parquet API
-      // (Spark's hidden-file filter drops dot-staging paths even when
-      // listed explicitly): bounded work — a stream sees at most one
-      // invalidate epoch in its lifetime, and each file is one partition
-      // of that one micro-batch
+      // the rows below the cut of a straddling file are re-written
+      // DRIVER-side through EpochTable (Spark's hidden-file filter drops
+      // dot-staging paths even when listed explicitly): bounded work — a
+      // stream sees at most one invalidate epoch in its lifetime, and each
+      // file is one partition of that one micro-batch
       minInv.foreach { cut =>
         rest.filter(m => m.minMsg < cut).foreach { m =>
-          val (kept, keptMax, keptSubjects) =
-            rewriteBelow(fs, hconf, m.path, cut, epochId)
-          published += kept
-          if (kept > 0 && (maxMsg == null || keptMax > maxMsg))
-            maxMsg = keptMax
-          subjects ++= keptSubjects
+          val kept = EpochTable.readRows(spark, Seq(new Path(m.path)),
+            StreamingCdc.messagesSchema).filter(_.getString(1) < cut)
+          if (kept.nonEmpty) {
+            EpochTable.writeRows(spark, messagesDir, epochId,
+              StreamingCdc.messagesSchema, kept)
+            published += kept.size
+            val keptMax = kept.map(_.getString(1)).max
+            if (maxMsg == null || keptMax > maxMsg) maxMsg = keptMax
+            subjects ++= kept.map(_.getString(0))
+          }
         }
       }
       rest.foreach(m => fs.delete(new Path(m.path), false))
@@ -212,42 +216,6 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     StreamingCdc.publishedTotal.merge(name, published, (a, b) => a + b)
     if (minInv.isDefined)
       StreamingCdc.markInvalidatedAt(spark, name, tokensDir)
-  }
-
-  /** Copy the rows of one staging file with msgId < cut into a new
-    * visible part- file (via dot-temp + rename, same discipline as the
-    * token writer). Returns (kept row count, max kept msgId or null,
-    * distinct kept subjects).
-    */
-  private def rewriteBelow(fs: org.apache.hadoop.fs.FileSystem,
-      hconf: org.apache.hadoop.conf.Configuration, staging: String,
-      cut: String, epochId: Long): (Long, String, Set[String]) = {
-    import org.apache.parquet.example.data.Group
-    val name = s"part-$epochId-${java.util.UUID.randomUUID()}.snappy.parquet"
-    val tmp = new Path(messagesDir, s".$name.inprogress")
-    var kept = 0L
-    var keptMax: String = null
-    var keptSubjects = Set.empty[String]
-    val reader = ParquetIO.groupReader(new Path(staging), hconf)
-    val writer = ParquetIO.groupWriter(tmp, MessageSink.messageType, hconf)
-    try {
-      var g: Group = reader.read()
-      while (g != null) {
-        val msgId = g.getString("msgId", 0)
-        if (msgId < cut) {
-          writer.write(g)
-          kept += 1L
-          if (keptMax == null || msgId > keptMax) keptMax = msgId
-          keptSubjects += g.getString("subject", 0)
-        }
-        g = reader.read()
-      }
-    } finally { reader.close(); writer.close() }
-    if (kept > 0) {
-      if (!fs.rename(tmp, new Path(messagesDir, name)))
-        throw new java.io.IOException(s"truncated-file promote failed: $tmp")
-    } else fs.delete(tmp, false)
-    (kept, keptMax, keptSubjects)
   }
 
   /** Atomic staging-file promotion: dot-file → part- name. The batch_id

@@ -189,22 +189,11 @@ object ChangeStreamFiles {
 
   private def readRange(file: Path, conf: Configuration): Option[FileRange] = {
     val reader = ParquetIO.openFooter(file, conf)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      if (blocks.isEmpty) return None // empty sentinel from Ddl.ensureTable
-      val stats = blocks.flatMap { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == "_id._data")
-          .map(_.getStatistics)
-      }.filter(s => s != null && s.hasNonNullValue)
-      if (stats.isEmpty) None
-      else Some(FileRange(file.toString,
-        stats.map(_.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-          .toStringUsingUTF8).min,
-        stats.map(_.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-          .toStringUsingUTF8).max,
-        blocks.map(_.getRowCount).sum))
-    } finally reader.close()
+    try ParquetIO.columnRange(reader, "_id._data")(
+        _.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+      .map { case (lo, hi) =>
+        FileRange(file.toString, lo, hi, reader.getRecordCount) }
+    finally reader.close()
   }
 }
 
@@ -320,17 +309,18 @@ final class ChangeStreamReaderFactory extends PartitionReaderFactory {
 final class ChangeStreamReader(p: ChangeStreamPartition)
   extends PartitionReader[InternalRow] {
 
-  /** Parquet read projection: the required columns plus the token and
+  private val reader =
+    ParquetIO.groupReader(new Path(p.file), ParquetIO.conf, projection)
+
+  /** Parquet read projection of the file schema (the reader's own footer
+    * open hands it over): the required columns plus the token and
     * operationType fields the reader always filters on, intersected with
     * what the file actually has (files written by older envelope schemas
     * stay readable — absent fields read as null, as before).
     */
-  private val projection: org.apache.parquet.schema.MessageType = {
+  private def projection(fileSchema: org.apache.parquet.schema.MessageType)
+      : org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{GroupType, MessageType}
-    val fileSchema = {
-      val r = ParquetIO.openFooter(new Path(p.file), ParquetIO.conf)
-      try r.getFooter.getFileMetaData.getSchema finally r.close()
-    }
     val names = (p.required.fieldNames ++ Array("_id", "operationType"))
       .distinct.filter(fileSchema.containsField)
     val types = names.map { n =>
@@ -348,8 +338,6 @@ final class ChangeStreamReader(p: ChangeStreamPartition)
     new MessageType(fileSchema.getName, types: _*)
   }
 
-  private val reader =
-    ParquetIO.groupReader(new Path(p.file), ParquetIO.conf, Some(projection))
   private var current: InternalRow = _
 
   override def next(): Boolean = {

@@ -11,8 +11,11 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageType
 
-/** The CDC path's parquet opens (source S1, sink K1, token table K2, D1
-  * setup), every one over a Hadoop `Configuration` that is already loaded.
+import scala.jdk.CollectionConverters._
+
+/** The CDC path's parquet opens (source S1, sink K1, and through
+  * [[EpochTable]] the token table K2, D1 setup and the twins' commit
+  * markers), every one over a Hadoop `Configuration` that is already loaded.
   *
   * A fresh `Configuration` parses core-default.xml and core-site.xml from
   * the classpath on first use, and parquet builds one behind the caller's
@@ -42,17 +45,36 @@ object ParquetIO {
     ParquetFileReader.open(HadoopInputFile.fromPath(file, hconf),
       HadoopReadOptions.builder(hconf, file).build())
 
-  /** Row reader of `file` as example Groups, projected to `projection`
-    * (the whole file schema when None).
+  /** Min and max of `column` (a dot path) over the file's row groups,
+    * from the footer statistics, each decoded by `decode`. None when no
+    * row group holds a non-null value, or when one holds rows that its
+    * statistics do not describe (no min/max, yet not all null): its values
+    * are then unknown.
+    */
+  def columnRange[T: Ordering](r: ParquetFileReader, column: String)(
+      decode: Any => T): Option[(T, T)] = {
+    val stats = r.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      .map(b => b.getRowCount -> b.getColumns.asScala
+        .find(_.getPath.toDotString == column).map(_.getStatistics).orNull)
+    val known = stats.map(_._2).filter(s => s != null && s.hasNonNullValue)
+    val unknown = stats.exists { case (n, s) =>
+      s == null || !s.hasNonNullValue && !(s.isNumNullsSet && s.getNumNulls == n)
+    }
+    if (known.isEmpty || unknown) None
+    else Some((known.map(s => decode(s.genericGetMin)).min,
+      known.map(s => decode(s.genericGetMax)).max))
+  }
+
+  /** Row reader of `file` as example Groups, projected to what
+    * `projection` makes of the file schema (opened once, in the reader).
     */
   def groupReader(file: Path, hconf: Configuration,
-      projection: Option[MessageType] = None): ParquetReader[Group] =
+      projection: MessageType => MessageType = identity): ParquetReader[Group] =
     new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, hconf)) {
       override protected def getReadSupport(): ReadSupport[Group] =
         new GroupReadSupport {
           override def init(ctx: InitContext): ReadSupport.ReadContext =
-            new ReadSupport.ReadContext(
-              projection.getOrElse(ctx.getFileSchema))
+            new ReadSupport.ReadContext(projection(ctx.getFileSchema))
         }
     }.build()
 

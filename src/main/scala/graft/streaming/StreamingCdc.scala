@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -42,7 +42,8 @@ import graft.operators.CdcPipeline
   * per-partition staging files; the commit is driver-side renames plus a
   * one-row token write, and runs no Spark job — on the capped path too,
   * whose trim decides from parquet footer row counts and compacts only
-  * past the cap. Many collections = many independent queries (C1),
+  * past the cap, and at a restart ([[EpochTable]]). Many collections =
+  * many independent queries (C1),
   * started at once like the reference's goroutine-per-collection, but
   * each partition-parallel.
   */
@@ -105,8 +106,8 @@ object StreamingCdc {
     * (resuming from an invalidate token is itself invalid in MongoDB;
     * watcher.go stops for good) — mirror that with a durable marker file
     * in the tokens dir, written wherever the in-memory flag is set.
-    * Underscore-prefixed: invisible to Spark's listing, the part- filters
-    * of ledger/trim, and tableExists' *.parquet probe.
+    * Underscore-prefixed: invisible to Spark's listing, to
+    * [[EpochTable.parts]] and to tableExists' *.parquet probe.
     */
   private def invalidatedMarker(tokensDir: String) =
     new org.apache.hadoop.fs.Path(tokensDir, "_invalidated")
@@ -135,21 +136,24 @@ object StreamingCdc {
   @volatile private[graft]
   var faultpoint: (String, Long) => Unit = (_, _) => ()
 
-  /** S2 — latest committed token: max_by over the tokens table. */
+  /** S2 — latest committed token: the value of the max-batch_id row,
+    * read driver-side from the part whose footer range holds that max
+    * (and from any part without statistics).
+    */
   def latestToken(spark: SparkSession, tokensDir: String): Option[String] = {
-    val t = spark.read.parquet(tokensDir)
-    if (t.isEmpty) None
-    else Option(t.agg(expr("max_by(value, batch_id)")).head().getString(0))
+    val ps = EpochTable.parts(spark, tokensDir).filter(_.rows > 0)
+    val newest = ps.flatMap(_.batchIds).map(_._2).maxOption
+    EpochTable.readRows(spark, ps.filter(_.batchIds.forall(r =>
+        newest.contains(r._2))).map(_.path), tokenSchema)
+      .maxByOption(_.getLong(0)).flatMap(r => Option(r.getString(1)))
   }
 
   /** Committed batch ids — the idempotence ledger for replay skips.
-    *
-    * Seeded from the tokens table ONCE per run (start() drops the cache
-    * entry), then maintained in memory: the ledger is append-only from
-    * this process, so re-reading and collecting the whole table every
-    * micro-batch would be O(ledger) driver work per trigger — quadratic
-    * over an uncapped stream's lifetime. Trimming only removes OLD ids
-    * from disk; the in-memory superset stays correct for membership.
+    * Read from the tokens table ONCE per run (start() drops the cache
+    * entry), driver-side, then maintained in memory: re-reading it every
+    * micro-batch would be quadratic over an uncapped stream's lifetime.
+    * Trimming only removes OLD ids from disk; the in-memory superset stays
+    * correct for membership.
     */
   private val ledgerCache =
     new ConcurrentHashMap[String, java.util.Set[java.lang.Long]]()
@@ -159,123 +163,43 @@ object StreamingCdc {
     ledgerCache.computeIfAbsent(tokensDir, _ =>
       Observability.CommandMetrics.time(name, "tokens_read") {
         val s = ConcurrentHashMap.newKeySet[java.lang.Long]()
-        // Footer fast path (round-12 fixed-cost shave): an EMPTY ledger —
-        // every fresh start — is decided driver-side instead of by a
-        // Spark collect job. A non-empty ledger (restart path) still
-        // reads through Spark: it is rare per process lifetime and the
-        // table is capped-small.
-        if (partFooterRows(spark, tokensDir)._2 > 0)
-          spark.read.parquet(tokensDir).select("batch_id")
-            .collect().foreach(r => s.add(r.getLong(0)))
+        EpochTable.readRows(spark,
+            EpochTable.parts(spark, tokensDir).filter(_.rows > 0).map(_.path),
+            StructType(Seq(tokenSchema("batch_id"))))
+          .foreach(r => s.add(r.getLong(0)))
         s
       })
-
-  /** The `part-` files of a table dir and their total row count, read
-    * driver-side from the parquet footers — a few file opens, no Spark
-    * job. The row counts of the ledger seed's empty check and of the D1
-    * trim decision.
-    */
-  private def partFooterRows(spark: SparkSession,
-      dir: String): (Array[org.apache.hadoop.fs.Path], Long) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val parts = d.getFileSystem(hconf).listStatus(d).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    val rows = parts.iterator.map { p =>
-      val r = ParquetIO.openFooter(p, hconf)
-      try r.getRecordCount finally r.close()
-    }.sum
-    (parts, rows)
-  }
-
-  /** Parquet schema of the token files, converted from [[tokenSchema]]
-    * as ensureTable's empty seed file is, so Spark reads both alike.
-    */
-  private val tokenType = new org.apache.spark.sql.execution.datasources
-    .parquet.SparkToParquetSchemaConverter().convert(tokenSchema)
-
-  /** One token row: (batch_id, value, n_published). */
-  private type TokenRow = (Long, String, Long)
 
   /** Driver-side single-row token write (K2). */
   private[graft] def writeTokenRow(spark: SparkSession, tokensDir: String,
       batchId: Long, value: String, nPublished: Long): Unit =
-    writeTokenFile(spark.sparkContext.hadoopConfiguration, tokensDir,
-      batchId, Seq((batchId, value, nPublished)))
-
-  /** Token rows as one new `part-` file, written driver-side through the
-    * parquet example writer (the token commit and the trim's compaction).
-    * Two-phase commit (ADVICE r12): the writer opens the DESTINATION file,
-    * so write under a dot-temp (invisible to readers: Spark skips
-    * dot-files; the ledger seed and trim filter on the part- prefix; the
-    * .inprogress suffix keeps it out of tableExists' *.parquet probe) and
-    * rename after close() — rename is atomic on a posix fs.
-    */
-  private def writeTokenFile(hconf: org.apache.hadoop.conf.Configuration,
-      tokensDir: String, fileBatchId: Long, rows: Seq[TokenRow]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroup
-    val name =
-      s"part-$fileBatchId-${java.util.UUID.randomUUID()}.snappy.parquet"
-    val path = new org.apache.hadoop.fs.Path(tokensDir, name)
-    val tmp = new org.apache.hadoop.fs.Path(tokensDir, s".$name.inprogress")
-    val fs = tmp.getFileSystem(hconf)
-    val w = ParquetIO.groupWriter(tmp, tokenType, hconf)
-    try rows.foreach { case (batchId, value, nPublished) =>
-      val g = new SimpleGroup(tokenType)
-      g.add("batch_id", batchId)
-      if (value != null) g.add("value", value)
-      g.add("n_published", nPublished)
-      w.write(g)
-    } finally w.close()
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"token commit rename failed: $tmp -> $path")
-  }
-
-  private def readTokenRows(file: org.apache.hadoop.fs.Path,
-      hconf: org.apache.hadoop.conf.Configuration): Seq[TokenRow] = {
-    val r = ParquetIO.groupReader(file, hconf)
-    try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
-      (g.getLong("batch_id", 0),
-        if (g.getFieldRepetitionCount("value") > 0) g.getString("value", 0)
-        else null,
-        g.getLong("n_published", 0))
-    }.toList
-    finally r.close()
-  }
+    EpochTable.writeRows(spark, tokensDir, batchId, tokenSchema,
+      Seq(Row(batchId, value, nPublished)))
 
   /** D1 capped-collection analog: keep only the newest tokensMaxRows rows.
     * Both capped and uncapped converge to the same latestToken answer
     * (mirrors the dual-run acceptance tests, insert_test.go:55-61).
     *
-    * Crash-safe compaction (the tokens table is the COMMIT POINT — an
-    * `overwrite` here could lose the ledger if the process dies between
-    * delete and write): append the kept rows as a NEW file first, only
-    * then delete the pre-existing files. A crash in between leaves the
-    * kept rows duplicated next to the old files — `latestToken`
-    * (max_by) and the ledger (set membership) are insensitive to
-    * duplicates, and the next trim converges the row count.
+    * Decided from the footer row counts and compacted driver-side over at
+    * most cap + 1 tiny rows (plus the copies a crash in the compaction
+    * leaves, which the dedup here folds back): no Spark job.
     */
   private[graft] def trimTokensAt(spark: SparkSession, name: String,
       tokensDir: String, tokensMaxRows: Int): Unit = {
-    // decided from the footers, compacted driver-side: a commit runs no
-    // Spark job below the cap or past it. The table holds at most
-    // cap + 1 tiny rows (plus the kept copies a crash in the window below
-    // leaves behind, which this dedup folds back)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val (oldFiles, rows) = partFooterRows(spark, tokensDir)
-    if (rows > tokensMaxRows) {
-      val kept = oldFiles.toSeq.flatMap(readTokenRows(_, hconf))
-        .sortBy(_._1)(Ordering[Long].reverse).distinctBy(_._1)
+    val old = EpochTable.parts(spark, tokensDir)
+    if (old.map(_.rows).sum > tokensMaxRows) {
+      val kept = EpochTable.readRows(spark, old.map(_.path), tokenSchema)
+        .sortBy(_.getLong(0))(Ordering[Long].reverse).distinctBy(_.getLong(0))
         .take(tokensMaxRows)
-      writeTokenFile(hconf, tokensDir, kept.headOption.fold(0L)(_._1), kept)
-      // fault-injection hook in the trim RACE WINDOW (kept rows appended,
-      // old files not yet deleted — the crash point the scaladoc above
-      // reasons about; batchId -1 marks "inside trim"). No-op in
-      // production; StreamFuzz v2 kills here to probe the duplicate-file
-      // recovery path across restarts.
-      faultpoint(name, -1L)
-      val fs = new org.apache.hadoop.fs.Path(tokensDir).getFileSystem(hconf)
-      oldFiles.foreach(p => fs.delete(p, false))
+      EpochTable.replace(spark, old) {
+        EpochTable.writeRows(spark, tokensDir,
+          kept.headOption.fold(0L)(_.getLong(0)), tokenSchema, kept)
+      } {
+        // fault-injection hook in the trim's duplicate window (batchId -1
+        // marks "inside trim"); StreamFuzz kills here to probe recovery
+        // across restarts
+        faultpoint(name, -1L)
+      }
     }
   }
 

@@ -86,8 +86,7 @@ object StreamingDecontam {
       cosMin: Double)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // replay guard: the ledger append is the commit marker
-    val ledger = spark.read.parquet(ledgerDir)
-    if (!ledger.filter(col("batch_id") === batchId).isEmpty) return
+    if (EpochTable.committed(spark, ledgerDir, batchId)) return
 
     val idx = spark.read.parquet(indexDir)
     // hot-eval-bucket guard: a bucket holding more than capEval eval
@@ -121,12 +120,12 @@ object StreamingDecontam {
 
     contaminated.write.mode("append").parquet(contamDir)
     faultpoint(batchId)
-    val n = spark.read.parquet(contamDir)
-      .filter(col("batch_id") === batchId).count()
-    spark.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](
-          org.apache.spark.sql.Row(batchId, n)), ledgerSchema)
-      .coalesce(1).write.mode("append").parquet(ledgerDir)
+    // the batch's raw rows (a replay's duplicates included) from the
+    // footers: every part of this never-compacted table holds one batch
+    val n = EpochTable.parts(spark, contamDir)
+      .filter(_.batchIds.contains((batchId, batchId))).map(_.rows).sum
+    EpochTable.writeRows(spark, ledgerDir, batchId, ledgerSchema,
+      Seq(org.apache.spark.sql.Row(batchId, n)))
   }
 
   def start(spark: SparkSession, inputDir: String, contamDir: String,

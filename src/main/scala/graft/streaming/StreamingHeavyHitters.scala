@@ -29,13 +29,11 @@ import org.apache.spark.sql.types._
   * summary is always the max-batch_id generation. Generations are
   * KB-sized but a months-long stream accumulates one per trigger, so
   * after each commit the table is TRIMMED to the newest
-  * `keepGenerations` (crash-safe append-then-delete, the trimTokensAt
-  * discipline): only the newest generations can ever be read (summary)
-  * or replay-checked (Spark replays at most the latest uncommitted
-  * batch), so dropping older ones changes no answer. A crash inside the
-  * trim window leaves the kept rows duplicated next to the old files —
-  * `summary` and the replay guard are duplicate-insensitive by
-  * construction, and the next trim's DISTINCT converges the table.
+  * `keepGenerations`, crash-safe like every [[EpochTable]]: only the
+  * newest generations can ever be read (summary) or replay-checked (Spark
+  * replays at most the latest uncommitted batch), so dropping older ones
+  * changes no answer, and `summary` and the replay guard are insensitive
+  * to the duplicates a crash in the trim leaves.
   */
 object StreamingHeavyHitters {
 
@@ -75,13 +73,9 @@ object StreamingHeavyHitters {
   private def processBatch(summaryDir: String, capacity: Int,
       keepGenerations: Int)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val all = spark.read.parquet(summaryDir)
     // replay guard: this batch's generation already written = committed
-    if (!all.filter(col("batch_id") === batchId).isEmpty) return
-    val prev = all
-      .join(broadcast(all.agg(max(col("batch_id")).as("batch_id"))),
-        "batch_id")
-      .select(col("token"), col("cnt")).distinct()
+    if (EpochTable.committed(spark, summaryDir, batchId)) return
+    val prev = summary(spark, summaryDir)
     val batchCounts = batch
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
@@ -105,34 +99,22 @@ object StreamingHeavyHitters {
     trimGenerations(spark, summaryDir, keepGenerations, batchId)
   }
 
-  /** Keep only the newest `keep` generations — the long-stream bound on
-    * the summary table (without it the table grows one KB generation per
-    * trigger forever). Crash-safe append-then-delete, exactly the
-    * trimTokensAt discipline: the kept rows are re-appended as ONE new
-    * file first, the superseded files are deleted only after. A crash in
-    * between leaves duplicates that `summary`/the replay guard ignore
-    * and the next trim's DISTINCT collapses; a crash before the append
-    * just leaves extra generations for the next trim. Runs AFTER the
+  /** Keep only the newest `keep` generations, re-written as one file by
+    * [[EpochTable.replace]] — driver-side over the table's at most
+    * (keep + 1) · capacity rows, plus the copies a crash in its duplicate
+    * window leaves, which the distinct here folds back. Runs AFTER the
     * generation commit, so commit semantics never depend on it.
     */
   private[graft] def trimGenerations(spark: SparkSession,
       summaryDir: String, keep: Int, batchId: Long): Unit = {
-    val all = spark.read.parquet(summaryDir)
-    val gens = all.select(col("batch_id")).distinct()
-      .orderBy(col("batch_id").desc).limit(keep + 1).collect()
-      .map(_.getLong(0))
-    if (gens.length <= keep) return
-    val cutoff = gens(keep - 1) // keep-th newest generation id
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(summaryDir)
-    val fs = dir.getFileSystem(hconf)
-    val oldFiles = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    val keepRows = all.filter(col("batch_id") >= cutoff).distinct().collect()
-    spark.createDataFrame(java.util.Arrays.asList(keepRows: _*),
-      summarySchema).coalesce(1).write.mode("append").parquet(summaryDir)
-    trimFaultpoint(batchId)
-    oldFiles.foreach(p => fs.delete(p, false))
+    val old = EpochTable.parts(spark, summaryDir)
+    val rows = EpochTable.readRows(spark, old.map(_.path), summarySchema)
+    val gens = rows.map(_.getLong(2)).distinct.sorted(Ordering[Long].reverse)
+    if (gens.length > keep)
+      EpochTable.replace(spark, old) {
+        EpochTable.writeRows(spark, summaryDir, batchId, summarySchema,
+          rows.filter(_.getLong(2) >= gens(keep - 1)).distinct)
+      } { trimFaultpoint(batchId) }
   }
 
   def start(spark: SparkSession, inputDir: String, summaryDir: String,

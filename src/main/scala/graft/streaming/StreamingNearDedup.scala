@@ -26,18 +26,13 @@ import graft.operators.IncrementalDedup
   * readable by the batch path too. Intra-batch duplicates are the batch
   * pass's business (same contract as IncrementalDedup.probe).
   *
-  * Long-stream file hygiene: append-only at one file per trigger means a
-  * months-long stream accumulates millions of KB-sized files (every
-  * probe then pays an open/footer per file). Once the directory exceeds
-  * `compactAfterFiles`, the index is COMPACTED — all rows rewritten
-  * hash-clustered by (band, bkey) so probes of a band key touch few
-  * files — with the same crash-safe append-then-delete as the CDC token
-  * trim: new files land first, superseded ones are deleted after. A
-  * crash in the duplicate window leaves every index row doubled, which
-  * changes nothing that reads the index (replay guard = membership;
-  * probe candidates go through pairsView's keyed dedup), and the next
-  * compaction's DISTINCT converges the table (index rows are unique by
-  * construction: one row per (band, doc)).
+  * Long-stream file hygiene: one file per trigger would accumulate
+  * millions of KB-sized files (every probe paying an open per file), so
+  * past `compactAfterFiles` the index is COMPACTED ([[compactIndex]]),
+  * crash-safe like every [[EpochTable]]: a crash in the duplicate window
+  * leaves index rows doubled, which changes nothing that reads the index
+  * (replay guard = membership; probe candidates go through pairsView's
+  * keyed dedup), and the next compaction's DISTINCT converges the table.
   */
 object StreamingNearDedup {
 
@@ -83,11 +78,11 @@ object StreamingNearDedup {
       cap: Int, threshold: Double, compactAfterFiles: Int)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val index = spark.read.parquet(indexDir)
     // replay guard: the index append is the commit marker — a batch whose
-    // rows are already indexed is fully processed (a point filter on
-    // batch_id; parquet row-group stats prune it without a data scan)
-    if (!index.filter(col("batch_id") === batchId).isEmpty) return
+    // rows are already indexed is fully processed (decided from the
+    // footers' batch_id ranges)
+    if (EpochTable.committed(spark, indexDir, batchId)) return
+    val index = spark.read.parquet(indexDir)
     val deltaIdx = IncrementalDedup
       .buildIndex(batch.select(col("doc_id"), col("text")))
     IncrementalDedup
@@ -100,32 +95,23 @@ object StreamingNearDedup {
     compactIndex(spark, indexDir, compactAfterFiles, batchId)
   }
 
-  /** Rewrite the band index into few hash-clustered files once the
-    * one-file-per-trigger append pattern has accumulated more than
-    * `maxFiles` parquet parts. CONTENT is untouched (every row survives —
-    * this is file hygiene, not retention); DISTINCT only collapses exact
-    * duplicates left by a previous compaction crash. Rows are clustered
-    * by (band, bkey) — the probe join key — so a probe's shuffle reads
-    * land on few co-located files, and sized ~4M rows per file. Crash
-    * order mirrors trimTokensAt: append new files, only then delete the
-    * superseded ones. Runs AFTER the index commit marker, so batch
-    * commit semantics never depend on it.
+  /** Rewrite the band index into few hash-clustered files (by the probe
+    * join key (band, bkey), ~4M rows each) through [[EpochTable.replace]]
+    * once it has more than `maxFiles` parts. Every row survives; DISTINCT
+    * only collapses the duplicates of a previous compaction crash. Runs
+    * AFTER the index commit marker, so batch commit semantics never
+    * depend on it.
     */
   private[graft] def compactIndex(spark: SparkSession, indexDir: String,
       maxFiles: Int, batchId: Long): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(hconf)
-    val oldFiles = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    if (oldFiles.length <= maxFiles) return
-    val all = spark.read.parquet(indexDir).distinct()
-    val n = all.count()
-    val nFiles = (n / 4000000L).toInt + 1
-    all.repartition(nFiles, col("band"), col("bkey"))
-      .write.mode("append").parquet(indexDir)
-    compactFaultpoint(batchId)
-    oldFiles.foreach(p => fs.delete(p, false))
+    val old = EpochTable.parts(spark, indexDir)
+    if (old.length > maxFiles)
+      EpochTable.replace(spark, old) {
+        val all = spark.read.parquet(indexDir).distinct()
+        val nFiles = (all.count() / 4000000L).toInt + 1
+        all.repartition(nFiles, col("band"), col("bkey"))
+          .write.mode("append").parquet(indexDir)
+      } { compactFaultpoint(batchId) }
   }
 
   def start(spark: SparkSession, inputDir: String, pairsDir: String,

@@ -26,6 +26,31 @@ trait SparkSuite extends AnyFunSuite {
     }
     flatten(df.queryExecution.executedPlan)
   }
+
+  /** Spark jobs started while `f` runs, counted per the
+    * `streaming.sql.batchId` they carry ("" for none).
+    */
+  def jobsByBatch(f: => Unit): Map[String, Int] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .getOrElse("")): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try f
+    finally {
+      // the listener bus is async — settle before detaching
+      var last = -1
+      while (seen.size != last) { last = seen.size; Thread.sleep(300) }
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    seen.toArray.toSeq.groupBy(identity).map { case (k, v) =>
+      k.toString -> v.size }
+  }
 }
 
 object SparkSuite {

@@ -441,6 +441,31 @@ class StreamingCdcSpec extends SparkSuite {
     assert(jobs >= 8, s"implausibly few jobs: $jobs")
   }
 
+  test("restart budget: the ledger seed of a capped stream past its cap " +
+      "runs no Spark job, and a replayed, already-committed epoch is " +
+      "still skipped") {
+    val c = cfg("s-restart", tmp()).copy(maxRowsPerTrigger = Some(25L),
+      tokensCapped = true, tokensMaxRows = 2)
+    (0 until 4).foreach(b => writeBatchFile(c.inputDir,
+      (b * 25 + 1 to b * 25 + 25).map(ev(_, "insert"))))
+    StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    // epoch 3's token is committed, but the checkpoint forgets the epoch:
+    // the restart replays it, and its commit seeds the ledger
+    Seq("3", ".3.crc").foreach(f =>
+      new java.io.File(s"${c.checkpointDir}/commits", f).delete())
+    writeBatchFile(c.inputDir, (101 to 125).map(ev(_, "insert")))
+    val jobs = jobsByBatch {
+      StreamingCdc.runAll(spark, Seq(c), availableNow = true)
+    }
+    // epochs 3 and 4 run the same one-file write; only 3 seeds the ledger
+    assert(jobs.contains("4"), s"no new epoch ran: $jobs")
+    assert(jobs.getOrElse("3", 0) - jobs("4") == 0,
+      s"the ledger seed ran Spark jobs: $jobs")
+    assert(readMessages(c).count() == 125, "the committed epoch re-published")
+    assert(spark.read.parquet(c.tokensDir).count() == 2)
+    assert(StreamingCdc.latestToken(spark, c.tokensDir).contains("000125"))
+  }
+
   test("the CDC path leaves its Hadoop confs unmutated: after a " +
       "multi-file capped drain neither the JVM-wide ParquetIO conf nor " +
       "the session's holds a parquet read or write schema, and a read " +

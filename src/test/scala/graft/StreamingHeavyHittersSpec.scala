@@ -125,6 +125,34 @@ class StreamingHeavyHittersSpec extends SparkSuite {
     assert(got == exact, s"$got vs $exact")
   }
 
+  test("replaying an already-committed batch after the trim crash runs no " +
+      "Spark job: the replay guard decides from the parquet footers") {
+    val root = Files.createTempDirectory("graft-shh5").toString
+    val (in, sum, ckpt) = (s"$root/in", s"$root/sum", s"$root/ckpt")
+    val texts = (0 until 6).map(i => s"hot t$i t$i shared")
+    texts.zipWithIndex.foreach { case (t, i) => write(in, i.toLong, t) }
+    StreamingHeavyHitters.trimFaultpoint =
+      id => if (id == 5L) throw new RuntimeException("injected trim crash")
+    try {
+      intercept[Exception] {
+        StreamingHeavyHitters.runOnce(spark, in, sum, ckpt, capacity = 64,
+          keepGenerations = 3)
+      }
+    } finally StreamingHeavyHitters.trimFaultpoint = _ => ()
+    // batch 5 committed its generation before the crash, so the restart
+    // replays it only to skip it
+    val jobs = jobsByBatch {
+      StreamingHeavyHitters.runOnce(spark, in, sum, ckpt, capacity = 64,
+        keepGenerations = 3)
+    }
+    assert(jobs.getOrElse("5", 0) == 0, s"replayed batch 5 ran jobs: $jobs")
+    val got = StreamingHeavyHitters.summary(spark, sum)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val exact = texts.flatMap(_.split(" "))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(got == exact, s"$got vs $exact")
+  }
+
   test("streaming summary + exact recount converges to the batch " +
       "two-phase answer on real testdata") {
     val root = Files.createTempDirectory("graft-shh3").toString
