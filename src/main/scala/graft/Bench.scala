@@ -99,7 +99,7 @@ object Bench {
     val cpuRefStart = cpuRef()
     val cpuRefParStart = cpuRefPar()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt
+    val trials = LocalSession.envKnob("SPARK_GRAFT_BENCH_TRIALS", 3).toInt
     val timings =
       scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map.empty[String, String]
@@ -156,7 +156,8 @@ object Bench {
     // better estimator of the undisturbed time; this is more
     // measurement, not selection). Bounded: at most `retrials` extra
     // passes over only the noisy subset, skipped when nothing is noisy.
-    val retrials = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIALS", "3").toInt
+    val retrials =
+      LocalSession.envKnob("SPARK_GRAFT_BENCH_RETRIALS", 3, min = 0).toInt
     for (pass <- 0 until retrials) {
       val noisy = names.filter { case (name, _) => noisyRuns(timings(name)) }
       if (noisy.nonEmpty) {
@@ -262,7 +263,7 @@ object Bench {
     var streamEvPerSec: Double = -1.0
     var streamSpread: Double = 0.0
     val streamTrials =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_STREAM_TRIALS", "3").toInt
+      LocalSession.envKnob("SPARK_GRAFT_BENCH_STREAM_TRIALS", 3).toInt
     val streamingJson =
       try {
         val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
@@ -402,14 +403,8 @@ object Bench {
         s""""sf":"$sfDir","trials":$trials,$envJson,"summary":true}"""
     // Whatever the base line leaves under the cap is the map's budget
     // (a long regressions list must not push the line past the window).
-    val lineCap = sys.env.get("SPARK_GRAFT_BENCH_SUMMARY_CAP") match {
-      case None => 1950
-      case Some(v) => v.trim.toIntOption.getOrElse {
-        System.err.println(s"[bench] WARN SPARK_GRAFT_BENCH_SUMMARY_CAP=" +
-          s"'$v' is not an integer; using 1950")
-        1950
-      }
-    }
+    val lineCap =
+      LocalSession.envKnob("SPARK_GRAFT_BENCH_SUMMARY_CAP", 1950).toInt
     val budgetChars = lineCap - summaryWith("{}", nq).length
     val byCost = results.filter(_._2 >= 0).sortBy(-_._2)
     val qsTop = scala.collection.mutable.ListBuffer.empty[String]

@@ -33,7 +33,7 @@ object DualCheck {
 
   /** dedup_minhash_pairs, second implementation: banded self-join. */
   def minhashPairsJoin(s: SparkSession, dir: String): DataFrame = {
-    val bands = Tables.load(s, dir, "documents")
+    val bands = Tables.scan(s, dir, "documents")
       .select(col("doc_id"),
         expr(s"minhash_ngrams(${DedupQueries.toks}, 3, 32)").as("sig"))
       .select(col("doc_id"), col("sig"),
@@ -64,7 +64,7 @@ object DualCheck {
     */
   def knnGraphJoin(s: SparkSession, dir: String): DataFrame = {
     val pl = SimilarityQueries.autoPlanes(SimilarityQueries.embCount(s, dir))
-    val sigs = Tables.load(s, dir, "embeddings")
+    val sigs = Tables.scan(s, dir, "embeddings")
       .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
         posexplode(expr(
           s"lsh_buckets(embedding, ${SimilarityQueries.GraphTables}, $pl)"))
@@ -192,7 +192,7 @@ object DualCheck {
     if (which == "kmeans" || which == "all") {
       // centroid-level equality first — the strongest statement (bit-equal
       // models imply equal downstream queries; checked anyway)
-      val emb = Tables.load(spark, sfDir, "embeddings")
+      val emb = Tables.scan(spark, sfDir, "embeddings")
       val primModel = graft.operators.KMeans.fit(
         emb, "vec_id", "embedding", k = 8, iters = 3)
       val twinModel = DualCheckTwins.KMeansTwin.fitMany(

@@ -185,7 +185,7 @@ object DualCheckTwins {
 
   /** (vec_id, xq, sxx) quantized frame for the twin query paths. */
   private def quantFrame(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "embeddings")
+    Tables.scan(s, dir, "embeddings")
       .select(col("vec_id"),
         call_function("vec_quantize6", col("embedding")).as("__xq"))
       .withColumn("__sxx",
@@ -193,7 +193,7 @@ object DualCheckTwins {
 
   /** sim_kmeans_cells, end-to-end twin. */
   def kmeansCellsTwin(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
+    val emb = Tables.scan(s, dir, "embeddings")
     val model = KMeansTwin.fitMany(emb, "vec_id",
       Seq(col("embedding")), k = 8, iters = 3).head
     KMeansTwin.assignQ(quantFrame(s, dir), "vec_id", "__xq", "__sxx",
@@ -205,7 +205,7 @@ object DualCheckTwins {
 
   /** sim_pq_codes, end-to-end twin (4 × 16-dim sub-codebooks, k=16). */
   def pqCodesTwin(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
+    val emb = Tables.scan(s, dir, "embeddings")
     val slices = (0 until 4).map(sub =>
       expr(s"slice(embedding, ${sub * 16 + 1}, 16)"))
     val models = KMeansTwin.fitMany(emb, "vec_id", slices, k = 16, iters = 3)
@@ -228,7 +228,7 @@ object DualCheckTwins {
     * Query-vector set: vec_id < 10 (SimilarityQueries.NQueries).
     */
   def ivfTrainedTwin(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
+    val emb = Tables.scan(s, dir, "embeddings")
     val model = KMeansTwin.fitMany(emb, "vec_id",
       Seq(col("embedding")), k = 8, iters = 3).head
     val q = quantFrame(s, dir)
@@ -286,7 +286,7 @@ object DualCheckTwins {
       .filter(col("mutual") && col("vec_id") < col("nid"))
       .select(col("vec_id").as("a"), col("nid").as("b"))
     val labels = labelPropagate(edges, maxIter)
-    Tables.load(s, dir, "embeddings").select(col("vec_id"))
+    Tables.scan(s, dir, "embeddings").select(col("vec_id"))
       .join(labels.select(col("node").as("vec_id"), col("lbl")),
         Seq("vec_id"), "left")
       .select(col("vec_id"),
@@ -346,7 +346,7 @@ object DualCheckTwins {
   def incrementalPairsBatch(s: SparkSession, dir: String): DataFrame = {
     val isDelta = conv(substring(md5(concat(lit("delta:"),
       col("doc_id").cast("string"))), 1, 2), 16, 10).cast("int") < 26
-    val bands = Tables.load(s, dir, "documents")
+    val bands = Tables.scan(s, dir, "documents")
       .withColumn("side", when(isDelta, lit(1)).otherwise(lit(0)))
       .select(col("side"), col("doc_id"),
         expr(s"minhash_ngrams(${DedupQueries.toks}, 3, 32)").as("sig"))
@@ -393,7 +393,7 @@ object DualCheckTwins {
     */
   def winnowPairsJoin(s: SparkSession, dir: String): DataFrame = {
     import DedupQueries.{DfCap, WinnowK, WinnowMinShared, WinnowW}
-    val fp = Tables.load(s, dir, "documents")
+    val fp = Tables.scan(s, dir, "documents")
       .select(col("doc_id"),
         explode(expr(s"winnow_fingerprint(text, $WinnowK, $WinnowW)"))
           .as("f"))
@@ -414,7 +414,7 @@ object DualCheckTwins {
     * countDistinct pass (different partial-aggregation tree).
     */
   def cdcChunksTwoPhase(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
+    Tables.scan(s, dir, "documents")
       .select(col("doc_id"), explode(expr("cdc_chunks(text, 5)")).as("ch"))
       .groupBy(col("ch"), col("doc_id")).agg(count(lit(1)).as("hits"))
       .groupBy(col("ch"))
@@ -429,7 +429,7 @@ object DualCheckTwins {
     */
   def simhashPairsJoin(s: SparkSession, dir: String): DataFrame = {
     import DedupQueries.DfCap
-    val bands = Tables.load(s, dir, "documents")
+    val bands = Tables.scan(s, dir, "documents")
       .select(col("doc_id"), expr(s"simhash64(${DedupQueries.toks})").as("sh"))
       .select(col("doc_id"), col("sh"),
         posexplode(expr(
@@ -461,7 +461,7 @@ object DualCheckTwins {
   def embeddingNearJoin(s: SparkSession, dir: String): DataFrame = {
     import DedupQueries.{EmbCosMin, LshTables, VecBucketCap}
     val pl = DedupQueries.lshPlanes(s, dir)
-    val b = Tables.load(s, dir, "embeddings")
+    val b = Tables.scan(s, dir, "embeddings")
       .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
         posexplode(expr(s"lsh_buckets(embedding, $LshTables, $pl)"))
           .as(Seq("table_id", "bucket")))
@@ -490,7 +490,7 @@ object DualCheckTwins {
   def semanticSurvivorsTwin(s: SparkSession, dir: String): DataFrame = {
     import DedupQueries.{LshTables, SemCosMin, VecBucketCap}
     val pl = DedupQueries.lshPlanes(s, dir)
-    val emb = Tables.load(s, dir, "embeddings")
+    val emb = Tables.scan(s, dir, "embeddings")
     val b = emb.select(col("vec_id"), col("label"), col("embedding"),
       posexplode(expr(s"lsh_buckets(embedding, $LshTables, $pl)"))
         .as(Seq("table_id", "bucket")))
@@ -529,7 +529,7 @@ object DualCheckTwins {
     */
   def splitLeakproofTwin(s: SparkSession, dir: String): DataFrame = {
     import DedupQueries.{DfCap, JaccardMin}
-    val docs = Tables.load(s, dir, "documents")
+    val docs = Tables.scan(s, dir, "documents")
     val ex = docs.select(col("doc_id"),
       explode(expr(s"shingle_hashes(${DedupQueries.toks}, 3)")).as("sh"))
     // primary caps bucket SIZE at DfCap but keeps singletons for the
@@ -569,7 +569,7 @@ object DualCheckTwins {
     * instead of the mergeable simhash_agg summaries.
     */
   def corpusFingerprintVotes(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(s, dir, "documents")
+    val docs = Tables.scan(s, dir, "documents")
     val hv = docs
       .select(col("source"), col("lang"),
         explode(expr(DedupQueries.toks)).as("tok"))
@@ -600,7 +600,7 @@ object DualCheckTwins {
     * kernels. fp64 stays the shared fnv64 scalar (fuzz-pinned).
     */
   def fingerprintVotes(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(s, dir, "documents")
+    val docs = Tables.scan(s, dir, "documents")
     val sim = docs
       .select(col("doc_id"), explode(expr(DedupQueries.toks)).as("tok"))
       .select(col("doc_id"), expr("fnv64(tok)").as("h"))
@@ -649,7 +649,7 @@ object DualCheckTwins {
     */
   def labelAuditFold(s: SparkSession, dir: String): DataFrame = {
     val edges = DualCheck.knnGraphJoin(s, dir)
-    val labels = Tables.load(s, dir, "embeddings")
+    val labels = Tables.scan(s, dir, "embeddings")
       .select(col("vec_id"), col("label"))
     val vote = edges.select(col("vec_id"), col("nid"))
       .join(labels.select(col("vec_id").as("nid"), col("label").as("nl")),
@@ -698,7 +698,7 @@ object DualCheckTwins {
            r -> named_struct('r', r,
              'c', pmod(fnv64(concat(cast(r as string), '|', $tokCol)),
                        ${CmsWidth}L)))"""
-    val tk = Tables.load(s, dir, "documents")
+    val tk = Tables.scan(s, dir, "documents")
       .select(explode(expr(DedupQueries.toks)).as("tok"))
     val cells = tk
       .select(explode(expr(cellExpr("tok"))).as("rc"))

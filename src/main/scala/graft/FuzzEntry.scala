@@ -635,7 +635,7 @@ object FuzzEntry {
            |FROM $fromSql $whereSql
            |ORDER BY $ordSql""".stripMargin
       val build = (s: SparkSession, dir: String) =>
-        graft.queries.Tables.load(s, dir, "documents")
+        graft.queries.Tables.scan(s, dir, "documents")
           .filter(expr(guard))
           .select(col("doc_id") +: outs.map { case (n, sp, _) =>
             expr(sp).as(n) }: _*)
@@ -807,7 +807,7 @@ object FuzzEntry {
              |FROM $fromSql
              |ORDER BY $ordSql""".stripMargin
         val build = (s: SparkSession, dir: String) =>
-          graft.queries.Tables.load(s, dir, "embeddings")
+          graft.queries.Tables.scan(s, dir, "embeddings")
             .filter(expr(guard))
             .select(col("vec_id") +: outs.map { case (n, sp, _) =>
               expr(sp).as(n) }: _*)
@@ -827,7 +827,7 @@ object FuzzEntry {
   private def docKernelCase(kind: String, seed: Long, guard: String,
       outs: Seq[(String, String)], sql: String): FuzzCase = {
     val build = (s: SparkSession, dir: String) =>
-      graft.queries.Tables.load(s, dir, "documents")
+      graft.queries.Tables.scan(s, dir, "documents")
         .filter(expr(guard))
         .select(col("doc_id") +: outs.map { case (n, sp) =>
           expr(sp).as(n) }: _*)
@@ -992,7 +992,7 @@ object FuzzEntry {
          |ORDER BY ${ordSqlOf(Seq("doc_id", "n_words", "n_bpe"))}"""
         .stripMargin
     val build = (s: SparkSession, dir: String) =>
-      graft.queries.Tables.load(s, dir, "documents")
+      graft.queries.Tables.scan(s, dir, "documents")
         .filter(expr(guard))
         .select(col("doc_id"), explode(expr("split(text, ' ')")).as("w"))
         .select(col("doc_id"),
@@ -1119,7 +1119,7 @@ object FuzzEntry {
              |ORDER BY ${ordSqlOf(Seq("gk", "n_pairs", "amin", "bmax", "s"))}"""
             .stripMargin
         val build = (s: SparkSession, dir: String) =>
-          graft.queries.Tables.load(s, dir, "documents")
+          graft.queries.Tables.scan(s, dir, "documents")
             .groupBy((col("doc_id") % g).as("gk"))
             .agg(expr("sort_array(collect_list(doc_id))").as("ds"))
             .select(col("gk"), explode(expr("ordered_pairs(ds)")).as("p"))
@@ -1149,7 +1149,7 @@ object FuzzEntry {
              |ORDER BY ${ordSqlOf(Seq("gk", "n_pairs", "n_hcol", "amin",
                  "bmax"))}""".stripMargin
         val build = (s: SparkSession, dir: String) =>
-          graft.queries.Tables.load(s, dir, "documents")
+          graft.queries.Tables.scan(s, dir, "documents")
             .select(col("doc_id"), (col("doc_id") % g).as("gk"),
               expr(s"fnv64(substring(text, 1, $sl))").as("h"))
             .groupBy(col("gk"))
@@ -1207,7 +1207,7 @@ object FuzzEntry {
              |ORDER BY ${ordSqlOf(Seq("gk", "n_pairs", "s_match",
                  "m_match"))}""".stripMargin
         val build = (s: SparkSession, dir: String) =>
-          graft.queries.Tables.load(s, dir, "documents")
+          graft.queries.Tables.scan(s, dir, "documents")
             .filter(expr(guard))
             .select(col("doc_id"), (col("doc_id") % g).as("gk"),
               expr(s"minhash_ngrams(split(text, ' '), $ng, $k2)").as("sig"))
@@ -1280,7 +1280,7 @@ object FuzzEntry {
          |FROM nd LEFT JOIN sim USING (gk)
          |ORDER BY ${ordSqlOf(Seq("gk", "sh", "n_docs"))}""".stripMargin
     val build = (s: SparkSession, dir: String) => {
-      var df = graft.queries.Tables.load(s, dir, "documents")
+      var df = graft.queries.Tables.scan(s, dir, "documents")
       if (guarded) df = df.filter(expr(s"(doc_id % $m) = $g"))
       df.groupBy(expr(gkSpark).as("gk"))
         .agg(expr(s"simhash_agg($toksSpark)").as("sh"),
@@ -1312,7 +1312,7 @@ object FuzzEntry {
          |SELECT tok, cnt FROM c, t WHERE cnt * $thr >= n
          |ORDER BY cnt DESC, tok""".stripMargin
     val build = (s: SparkSession, dir: String) => {
-      val tk = graft.queries.Tables.load(s, dir, "documents")
+      val tk = graft.queries.Tables.scan(s, dir, "documents")
         .filter(expr(guard))
         .select(explode(expr("split(text, ' ')")).as("tok"))
       val sk = tk.agg(expr(s"mg_candidates(tok, $cap)").as("cs"),

@@ -15,21 +15,40 @@ object LocalSession {
     * else every available core (unset, non-integer and ≤ 0 alike).
     */
   def parseCpus(v: Option[String]): Int =
-    v.flatMap(_.trim.toIntOption).filter(_ > 0)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    parseKnob(CpusEnv, v, Runtime.getRuntime.availableProcessors).toInt
 
-  /** `parseCpus` of `SPARK_GRAFT_CPUS`, warning once on stderr when it
-    * falls back.
+  /** `parseCpus` of `SPARK_GRAFT_CPUS`, warning on stderr when it falls
+    * back.
     */
   lazy val envCpus: Int = {
-    val v = sys.env.get(CpusEnv)
-    val n = parseCpus(v)
-    if (!v.flatMap(_.trim.toIntOption).contains(n))
-      System.err.println(s"[graft] WARN $CpusEnv" +
-        v.fold(" is unset")(x => s"='$x' is not a positive integer") +
-        s"; using $n cores")
+    val n = parseCpus(sys.env.get(CpusEnv))
+    if (!sys.env.contains(CpusEnv))
+      System.err.println(s"[graft] WARN $CpusEnv is unset; using $n cores")
     n
   }
+
+  private val warned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The integer setting `name` from `v`: the value when it parses as an
+    * integer in [min, max], else `default` (malformed and out-of-range
+    * alike, with one stderr warning per name), and `default` when unset.
+    * Every numeric `SPARK_GRAFT_*` knob goes through it, so a bad value
+    * degrades to the default instead of failing a run.
+    */
+  def parseKnob(name: String, v: Option[String], default: Long,
+      min: Long = 1, max: Long = Int.MaxValue): Long = {
+    val n = v.flatMap(_.trim.toLongOption).filter(x => x >= min && x <= max)
+    if (v.isDefined && n.isEmpty && warned.add(name))
+      System.err.println(s"[graft] WARN $name='${v.get}' is not an " +
+        s"integer in [$min, $max]; using $default")
+    n.getOrElse(default)
+  }
+
+  /** `parseKnob` of the environment variable `name`. */
+  def envKnob(name: String, default: Long, min: Long = 1,
+      max: Long = Int.MaxValue): Long =
+    parseKnob(name, sys.env.get(name), default, min, max)
 
   /** A builder carrying the shared configs; callers add their own (app
     * name, scenario configs) before `getOrCreate()`.

@@ -37,14 +37,7 @@ object Multimodal {
     * (doc_id, n_chars). Exactly reproducible in SQL for the oracle.
     */
   def fromDocuments(docs: DataFrame): DataFrame =
-    // repartition by id before synthesis (round-16, guide §2.5): the
-    // testdata ships single-row-group parquet, so every downstream
-    // md5-decode/feature pass otherwise runs inside the scan as ONE
-    // task. Keyed (unique id: even + deterministic), count from
-    // spark.sql.shuffle.partitions — the same spread() rationale as
-    // graft.queries.Tables (inlined here to keep operators free of a
-    // queries-package dependency).
-    docs.repartition(col("doc_id")).select(
+    docs.select(
       col("doc_id").as("media_id"),
       expr("element_at(array('image','audio','video'), " +
         "cast(doc_id % 3 as int) + 1)").as("kind"),

@@ -114,10 +114,7 @@ object ClassifierQueries {
     */
   private def wideScores(s: SparkSession, dir: String)
       : (DataFrame, Seq[(String, Long, Long)]) = {
-    // spread (round-16, guide §2.5): the train-count and test-score
-    // explodes otherwise run inside the single-row-group scan as ONE
-    // task each.
-    val docs = spread(load(s, dir, "documents"), col("doc_id"))
+    val docs = load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), expr(toks).as("tokens"))
     val train = docs.filter(col("doc_id") % 5 =!= 0)
     val test = docs.filter(col("doc_id") % 5 === 0)

@@ -48,7 +48,7 @@ object CurationQueries {
   // stays 37; read ONCE at class init so the engine query and the oracle
   // SQL can never disagree within a run.
   private[graft] val DecontamMod: Int =
-    sys.env.getOrElse("SPARK_GRAFT_DECONTAM_MOD", "37").toInt
+    graft.LocalSession.envKnob("SPARK_GRAFT_DECONTAM_MOD", 37).toInt
 
   // DSIR hashed-feature bucket count (Xie et al. 2023, "Data Selection
   // for Language Models via Importance Resampling" — public technique).
@@ -107,7 +107,7 @@ object CurationQueries {
     */
   private def stagedCuration(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val docs = load(s, dir, "documents")
+    val docs = scan(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 37 =!= 0)
     val evalDocs = docs.filter(col("doc_id") % 37 === 0)
     val quality = col("n_chars").between(100, 500) &&
@@ -141,11 +141,9 @@ object CurationQueries {
     // column (non-q docs have k = false ⇒ c = false regardless). This
     // cuts the query's dominant stage (the gram explode + broadcast
     // probe) to the quality-survivor fraction of the corpus.
-    // spread BEFORE the gram explode (round-16, guide §2.5 — the
-    // decontam_overlap finding): the single-row-group documents scan ran
-    // the explode + broadcast probe + partial count as ONE task. doc_id
-    // prefixes the count's grouping keys, so the one exchange also
-    // completes the (doc_id, eval_doc_id) aggregation in-stage.
+    // Spread BEFORE the gram explode: doc_id prefixes the count's
+    // grouping keys, so the one exchange also completes the
+    // (doc_id, eval_doc_id) aggregation in-stage.
     val contaminated = spread(corpus.filter(quality), col("doc_id"))
       .select(col("doc_id"),
         explode(expr(s"array_distinct(word_ngrams($toks, 4))")).as("gram"))
@@ -178,9 +176,7 @@ object CurationQueries {
     // INSTANCE — at 100 TB that shuffle is the whole corpus re-keyed,
     // for stats each row already contains. (A/B at sf10: 15.8 s → 2.1 s.)
     "text_repetition" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"),
           expr(s"size($toks)").cast("bigint").as("n_words"),
           expr(s"size(array_distinct($toks))").cast("bigint")
@@ -206,9 +202,7 @@ object CurationQueries {
     // shape as text_repetition: every rule is a per-row function of the
     // token array; the corpus never leaves its scan partition.
     "curation_gopher_filter" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): the gopher per-doc features
-      // otherwise run inside the single-row-group scan as ONE task.
-      gopherAnnotate(spread(load(s, dir, "documents"), col("doc_id")))
+      gopherAnnotate(load(s, dir, "documents"))
         .select(col("doc_id"), col("n_words"), col("n_stop"), col("top_cnt"),
           col("reasons"), col("pass"))
         .orderBy(col("doc_id"))),
@@ -221,9 +215,7 @@ object CurationQueries {
     // ≤64-doc cap bounds the hottest window (boilerplate) exactly like
     // the near-dup candidate caps.
     "dedup_window_pairs" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr("char_windows(text, 64, 32)")).as("win"))
         .groupBy(col("win"))
@@ -251,18 +243,17 @@ object CurationQueries {
       def grams(df: org.apache.spark.sql.DataFrame) = df
         .select(col("doc_id"),
           explode(expr(s"array_distinct(word_ngrams($toks, 4))")).as("gram"))
-      val docs = load(s, dir, "documents")
+      val docs = scan(s, dir, "documents")
       val evalGrams = grams(docs.filter(col("doc_id") % 37 === 0))
         .withColumnRenamed("doc_id", "eval_doc_id")
-      // spread BEFORE the gram explode (round-16, guide §2.5): the
-      // single-row-group scan ran the whole explode + broadcast probe +
-      // partial count — ~55 of the query's ~60 s at sf10 — as ONE task.
-      // Keying by doc_id both parallelizes that stage and (doc_id
-      // prefixes the grouping, and Generate/BroadcastHashJoin preserve
-      // the child partitioning) makes the (doc_id, eval_doc_id) count
-      // complete WITHOUT its own exchange: the ~100M matched rows at
-      // sf10 collapse to pair counts in the same stage, and only the
-      // 21.8M result rows reach the final sort. sf10: 63-76 -> 5.1 s.
+      // Spread BEFORE the gram explode. Keying by doc_id both
+      // parallelizes the explode + broadcast probe + partial count and
+      // (doc_id prefixes the grouping, and Generate/BroadcastHashJoin
+      // preserve the child partitioning) completes the
+      // (doc_id, eval_doc_id) count WITHOUT its own exchange: the ~100M
+      // matched rows at sf10 collapse to pair counts in the same stage,
+      // and only the 21.8M result rows reach the final sort.
+      // sf10: 63-76 -> 5.1 s.
       spread(docs.filter(col("doc_id") % 37 =!= 0), col("doc_id"))
         .transform(grams)
         .join(broadcast(evalGrams), "gram")
@@ -299,7 +290,7 @@ object CurationQueries {
     "decontam_semantic" -> ((s, dir) => {
       val m = DecontamMod
       val pl = DedupQueries.lshPlanes(s, dir)
-      val emb = load(s, dir, "embeddings")
+      val emb = scan(s, dir, "embeddings")
       val b = emb.select(col("vec_id"),
         posexplode(
           expr(s"lsh_buckets(embedding, ${DedupQueries.LshTables}, $pl)"))
@@ -348,7 +339,7 @@ object CurationQueries {
         ascii(substring(col("h"), 2, 1))) % 8
       val pos = row_number().over(Window.partitionBy(col("shard"))
         .orderBy(col("h"), col("doc_id")))
-      load(s, dir, "documents")
+      scan(s, dir, "documents")
         .select(col("doc_id"), h.as("h"))
         .withColumn("shard", shard.cast("bigint"))
         .withColumn("pos", pos.cast("bigint"))
@@ -361,9 +352,7 @@ object CurationQueries {
     // HOF math — zero exchanges; summary stats (sum/min/max/#saturated)
     // verify the elementwise kernel without emitting arrays.
     "sim_quantize_int8" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "embeddings"), col("vec_id"))
+      load(s, dir, "embeddings")
         .withColumn("amax", expr(
           "array_max(transform(embedding, x -> abs(cast(x as double))))"))
         .withColumn("q", expr(
@@ -408,7 +397,7 @@ object CurationQueries {
     // frame (≈a dozen bucket rows), so the single-partition window is a
     // dozen rows — never the corpus.
     "text_length_histogram" -> ((s, dir) => {
-      val byBucket = load(s, dir, "documents")
+      val byBucket = scan(s, dir, "documents")
         .groupBy(expr("n_chars div 50").as("bucket"))
         .agg(count(lit(1)).as("n_docs"))
       byBucket
@@ -432,9 +421,7 @@ object CurationQueries {
       val passLang = col("lang").isin("en", "de", "fr", "es")
       def cnt(c: org.apache.spark.sql.Column) =
         sum(when(c, 1L).otherwise(0L))
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .groupBy(col("source")).agg(
           count(lit(1)).as("n_docs"),
           cnt(passLen).as("pass_len"),
@@ -460,9 +447,7 @@ object CurationQueries {
     // on a 1024-key space), the quantized ratio table is KB-sized so AQE
     // broadcasts the scoring join, and the doc-side pass is a narrow map.
     "curation_dsir_weights" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val docs = spread(load(s, dir, "documents"), col("doc_id"))
+      val docs = load(s, dir, "documents")
       val bg = docs.select(col("doc_id"), col("lang"),
         explode(expr(s"transform(word_ngrams($toks, 2), " +
           s"g -> pmod(fnv64(g), ${DsirBuckets}L))")).as("b"))

@@ -78,7 +78,7 @@ object DedupQueries {
   private def docCount(s: org.apache.spark.sql.SparkSession,
       dir: String): Long =
     docCountCache.computeIfAbsent(dir,
-      d => load(s, d, "documents").count()).longValue()
+      d => scan(s, d, "documents").count()).longValue()
 
   // Embedding-LSH knobs, shared by dedup_embedding_near and the semantic
   // dedup — interpolated into BOTH the Spark queries and their oracle SQL
@@ -149,14 +149,14 @@ object DedupQueries {
     // Exact dedup groups: one row per distinct content hash with the
     // surviving (minimum) doc_id and the duplicate count.
     "dedup_exact_groups" -> ((s, dir) =>
-      load(s, dir, "documents")
+      scan(s, dir, "documents")
         .groupBy(md5(col("text")).as("content_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
         .orderBy(col("content_hash"))),
 
     // Exact dedup survivors: the kept row per content group (keep = min id).
     "dedup_exact_keep" -> ((s, dir) =>
-      load(s, dir, "documents")
+      scan(s, dir, "documents")
         .groupBy(md5(col("text")).as("content_hash"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_dups"))
         .select(col("doc_id"), col("n_dups"))
@@ -210,9 +210,7 @@ object DedupQueries {
     // the index at all). The oracle is the BRUTE-FORCE pair set — the
     // gate proves losslessness, not just self-consistency.
     "dedup_prefix_pairs" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-doc shingle hashing otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val ex = spread(load(s, dir, "documents"), col("doc_id"))
+      val ex = load(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr(s"shingle_hashes($toks, 3)")).as("s"))
       val dfreq = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -226,15 +224,17 @@ object DedupQueries {
       // exhaustion hours in. The check only activates above a corpus-size
       // floor, so gate SFs pay nothing; both knobs are overridable
       // (props for tests, env for runs).
-      val checkMin = sys.props.getOrElse("graft.prefixPairsCheckMin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFIX_PAIRS_CHECK_MIN",
-          "100000")).toLong
+      def knob(prop: String, env: String, default: Long) =
+        graft.LocalSession.parseKnob(env,
+          sys.props.get(prop).orElse(sys.env.get(env)), default,
+          max = Long.MaxValue)
+      val checkMin = knob("graft.prefixPairsCheckMin",
+        "SPARK_GRAFT_PREFIX_PAIRS_CHECK_MIN", 100000L)
       // cached per (session, dir) like embCount — the activation test
       // costs one metadata-only count the FIRST time, nothing after
       if (docCount(s, dir) >= checkMin) {
-        val maxPairs = sys.props.getOrElse("graft.prefixPairsMax",
-          sys.env.getOrElse("SPARK_GRAFT_PREFIX_PAIRS_MAX",
-            "100000000")).toLong
+        val maxPairs = knob("graft.prefixPairsMax",
+          "SPARK_GRAFT_PREFIX_PAIRS_MAX", 100000000L)
         val est = dfreq.agg(
           sum(expr("df * (df - 1) div 2")).as("est")).head().getLong(0)
         if (est > maxPairs) throw new IllegalStateException(
@@ -343,9 +343,7 @@ object DedupQueries {
       // old plan exchanged the partially-aggregated stream twice.
       // Partial agg gave back little here (8-token spans are ~unique
       // within a doc), so the raw-row exchange carries ~the same bytes.
-      // spread (round-16, guide §2.5): the single-row-group scan
-      // otherwise runs the whole word_ngrams explode as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"),
           posexplode(expr(s"word_ngrams($toks, $SpanLen)"))
             .as(Seq("p", "gram")))
@@ -386,12 +384,7 @@ object DedupQueries {
     // and duplicates are immaterial: cov array_distincts and array_except
     // is membership-only, so the flatten needs no sort/dedup.
     "dedup_span_removal" -> ((s, dir) => {
-      // Both docs references are spread (round-16, guide §2.5): the gram
-      // side's explode and the output side's tokenize + array_except
-      // kept-token pass each otherwise run inside the single-row-group
-      // scan as ONE task. doc_id keying means the output side's exchange
-      // doubles as the join distribution if the planner merge-joins.
-      val docs = spread(load(s, dir, "documents"), col("doc_id"))
+      val docs = load(s, dir, "documents")
       val grams = docs.select(col("doc_id"),
         posexplode(expr(s"word_ngrams($toks, $SpanLen)"))
           .as(Seq("p", "gram")))
@@ -460,7 +453,7 @@ object DedupQueries {
       val bucket = conv(substring(
         md5(concat(lit("split:"), col("cluster_id").cast("string"))), 1, 2),
         16, 10).cast("int")
-      load(s, dir, "documents").select(col("doc_id"))
+      scan(s, dir, "documents").select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
         .withColumn("cluster_id", coalesce(col("cid"), col("doc_id")))
         .withColumn("split", when(bucket < 204, "train")
@@ -502,7 +495,7 @@ object DedupQueries {
       // consumers re-read a plain scan. sf1: 20.3 -> ~6 s.
       val pos = materialize(s, jaccardPairs(s, dir)
         .select(col("doc_a"), col("doc_b")))
-      val docs = load(s, dir, "documents").select(col("doc_id"))
+      val docs = scan(s, dir, "documents").select(col("doc_id"))
       val nRow = docs.agg(count(lit(1)).as("n"))
       val pool = docs.crossJoin(broadcast(nRow))
         .filter(
@@ -585,9 +578,7 @@ object DedupQueries {
     // TextHashesSpec/DedupSimilaritySpec. Same ≤64-doc bucket cap as
     // every candidate generator.
     "dedup_cdc_chunks" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): the Gear rolling hash per doc
-      // otherwise runs inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"), explode(expr("cdc_chunks(text, 5)")).as("ch"))
         .groupBy(col("ch"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
@@ -621,9 +612,7 @@ object DedupQueries {
       // (which promoted this query to bit-exact). The exchange carries 32
       // key bytes instead of 8; at any SF the band shuffle is dwarfed by
       // the signature payload it already carries.
-      // spread (round-16, guide §2.5): the 32-permutation MinHash per
-      // doc otherwise runs inside the single-row-group scan as ONE task.
-      val bands = spread(load(s, dir, "documents"), col("doc_id"))
+      val bands = load(s, dir, "documents")
         .select(col("doc_id"), expr(s"minhash_ngrams($toks, 3, 32)").as("sig"))
         .select(col("doc_id"), col("sig"),
           posexplode(expr(
@@ -659,9 +648,7 @@ object DedupQueries {
       import graft.operators.IncrementalDedup
       val isDelta = conv(substring(md5(concat(lit("delta:"),
         col("doc_id").cast("string"))), 1, 2), 16, 10).cast("int") < 26
-      // spread (round-16, guide §2.5): both index builds' shingle
-      // passes otherwise run inside the single-row-group scan as ONE task.
-      val docs = spread(load(s, dir, "documents"), col("doc_id"))
+      val docs = load(s, dir, "documents")
       IncrementalDedup.probe(
           IncrementalDedup.buildIndex(docs.filter(!isDelta)),
           IncrementalDedup.buildIndex(docs.filter(isDelta)),
@@ -673,7 +660,7 @@ object DedupQueries {
     // Groups directly on the vector value — at scale, group on a 128-bit
     // content hash of the vector bytes instead; same plan shape.
     "dedup_embedding_exact" -> ((s, dir) =>
-      load(s, dir, "embeddings")
+      scan(s, dir, "embeddings")
         .groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("keep_id"), count(lit(1)).as("n_dups"))
         .select(col("keep_id"), col("n_dups"))
@@ -691,9 +678,7 @@ object DedupQueries {
     // pinned by DedupSimilaritySpec.
     "dedup_embedding_near" -> ((s, dir) => {
       val pl = lshPlanes(s, dir)
-      // spread (round-16, guide §2.5): embeddings also ship as one row
-      // group; the LSH signature pass otherwise runs as ONE task.
-      val b = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val b = load(s, dir, "embeddings")
         // native codegen'd LSH signatures (graft.functions.LshBuckets) on
         // the RAW embedding — the form the oracle replays. Bucketing the
         // normalized vector was equivalent under the old double-sum
@@ -764,8 +749,7 @@ object DedupQueries {
     // and the transitive closure all replay in ANSI SQL.
     "dedup_semantic_survivors" -> ((s, dir) => {
       val pl = lshPlanes(s, dir)
-      // spread (round-16, guide §2.5): single-row-group embeddings.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       val b = emb.select(col("vec_id"), col("label"), col("embedding"),
         posexplode(expr(s"lsh_buckets(embedding, $LshTables, $pl)"))
           .as(Seq("table_id", "bucket")))
@@ -814,10 +798,7 @@ object DedupQueries {
     // CapDrops' listener on every action and pinned in CapDropsSpec.
     "dedup_winnow_pairs" -> ((s, dir) => {
       CapDrops.ensureListener(s)
-      // spread (round-16, guide §2.5): the winnow kernel — O(len·k)
-      // rolling hashes per document — otherwise runs inside the
-      // single-row-group scan as ONE task.
-      val fp = spread(load(s, dir, "documents"), col("doc_id"))
+      val fp = load(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr(s"winnow_fingerprint(text, $WinnowK, $WinnowW)"))
             .as("f"))
@@ -847,8 +828,7 @@ object DedupQueries {
     // dedup_winnow_pairs is legitimately 0-row there), DuckDB-replayed
     // bit-exactly at every gate SF.
     "dedup_winnow_dropped" -> ((s, dir) =>
-      // spread: same serial-scan fix as dedup_winnow_pairs above.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr(s"winnow_fingerprint(text, $WinnowK, $WinnowW)"))
             .as("f"))
@@ -868,9 +848,7 @@ object DedupQueries {
     // exploded quadratically; its pairs are recovered by the other 3
     // bands. Bit-exact oracle; recall pinned in DedupSimilaritySpec.
     "dedup_simhash_pairs" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): the per-doc SimHash otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val bands = spread(load(s, dir, "documents"), col("doc_id"))
+      val bands = load(s, dir, "documents")
         .select(col("doc_id"), expr(s"simhash64($toks)").as("sh"))
         .select(col("doc_id"), col("sh"),
           posexplode(expr(
@@ -905,9 +883,7 @@ object DedupQueries {
     // the per-doc reassembly of (k, ptext) segment rows — never exploded
     // tokens, never a global sort before the output ORDER BY.
     "dedup_paragraphs" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): the per-doc segmentation explode
-      // otherwise runs inside the single-row-group scan as ONE task.
-      val paras = spread(load(s, dir, "documents"), col("doc_id"))
+      val paras = load(s, dir, "documents")
         .select(col("doc_id"), expr(toks).as("t"))
         .select(col("doc_id"), size(col("t")).cast("long").as("n_tokens"),
           posexplode(expr(
@@ -967,10 +943,7 @@ object DedupQueries {
     * one scale argument).
     */
   private def pairStats(s: SparkSession, dir: String): DataFrame = {
-    // spread (round-16, guide §2.5): shingle_hashes per doc otherwise
-    // runs inside the single-row-group scan as ONE task — and this
-    // subtree replays per consumer (pairs + both size joins).
-    val ex = spread(load(s, dir, "documents"), col("doc_id"))
+    val ex = load(s, dir, "documents")
       .select(col("doc_id"),
         explode(expr(s"shingle_hashes($toks, 3)")).as("s"))
     val buckets = ex.groupBy(col("s"))

@@ -56,9 +56,7 @@ object RankMixQueries {
     // it per-partition-pruned), the output sort. Same tf/df/N integers,
     // same round(tf·ln(N/df), 6) expression ⇒ bit-identical rows.
     "text_tfidf_topk" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val docs = spread(load(s, dir, "documents"), col("doc_id"))
+      val docs = load(s, dir, "documents")
       val n = docs.agg(count(lit(1)).as("n"))
       val tf = docs
         .select(col("doc_id"), explode(expr(s"token_counts($toks)")).as("e"))
@@ -85,9 +83,7 @@ object RankMixQueries {
     // top-20 documents. Per-doc term counts are a narrow map; the only
     // exchanges are the 1-row stats broadcast and the final top-k.
     "text_bm25" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val base = spread(load(s, dir, "documents"), col("doc_id")).select(
+      val base = load(s, dir, "documents").select(
         col("doc_id"),
         expr(s"cast(size($toks) as bigint)").as("dl"),
         expr(s"cast(size(filter($toks, t -> t = 'spark')) as bigint)")
@@ -123,9 +119,7 @@ object RankMixQueries {
     "sample_stratified" -> ((s, dir) => {
       val rn = row_number().over(Window.partitionBy(col("lang"))
         .orderBy(col("h"), col("doc_id")))
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("lang"), col("doc_id"), md5(col("text")).as("h"))
         .withColumn("rn", rn).filter(col("rn") <= 10)
         .select(col("lang"), col("doc_id"), col("rn").cast("bigint").as("rn"),
@@ -137,7 +131,7 @@ object RankMixQueries {
     // deterministic md5-rate sample, heavier sources downsampled harder.
     // Pure per-row predicate — no shuffle except the output sort.
     "mix_weighted_sample" -> ((s, dir) =>
-      load(s, dir, "documents")
+      scan(s, dir, "documents")
         .filter(substring(md5(col("text")), 1, 1) <
           when(col("source").isInCollection(heavySources), lit("4"))
             .otherwise(lit("c")))
@@ -149,9 +143,7 @@ object RankMixQueries {
     // DISTINCT for approx_count_distinct — RankMixSpec pins the HLL
     // estimate within 5% of this exact answer.)
     "mix_vocab_by_source" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("source"), col("doc_id"),
           explode(expr(toks)).as("token"))
         .groupBy(col("source")).agg(
@@ -166,7 +158,7 @@ object RankMixQueries {
     // a 1-row broadcast; weights are ROUND(,6) so both engines rank the
     // identical values.
     "mix_token_budget" -> ((s, dir) => {
-      val per = load(s, dir, "documents")
+      val per = scan(s, dir, "documents")
         .groupBy(col("source"))
         .agg(expr(s"cast(sum(size($toks)) as bigint)").as("n_tokens"))
         .withColumn("w", sqrt(col("n_tokens").cast("double")))
@@ -189,7 +181,7 @@ object RankMixQueries {
     // partial-agg over the corpus to the per-source table, a 1-row total
     // broadcast back across it; the corpus itself is scanned once.
     "mix_epoch_schedule" -> ((s, dir) => {
-      val st = load(s, dir, "documents")
+      val st = scan(s, dir, "documents")
         .groupBy(col("source"))
         .agg(expr(s"cast(sum(size($toks)) as bigint)").as("n_tokens"))
       val tot = st.agg(sum(col("n_tokens")).as("budget"),
@@ -215,7 +207,7 @@ object RankMixQueries {
     // w_dedup − w_raw can be negative. Scale: two corpus aggs with
     // map-side partials; everything after is #sources-sized.
     "mix_dedup_adjusted_weights" -> ((s, dir) => {
-      val docs = load(s, dir, "documents")
+      val docs = scan(s, dir, "documents")
       val raw = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"))
       val kept = docs.groupBy(md5(col("text")))
@@ -249,7 +241,7 @@ object RankMixQueries {
     // division. Scale: one corpus agg to #sources rows; everything after
     // is #sources-sized with two 1-row broadcasts.
     "mix_temperature_weights" -> ((s, dir) => {
-      val st = load(s, dir, "documents")
+      val st = scan(s, dir, "documents")
         .groupBy(col("source"))
         .agg(expr(s"cast(sum(size($toks)) as bigint)").as("n_tokens"))
       val tot = st.agg(sum(col("n_tokens")).as("tot"))
@@ -286,9 +278,7 @@ object RankMixQueries {
     // marginal is a re-agg of the count table, the per-source totals are
     // #sources rows broadcast back, and the final agg is #sources rows.
     "mix_source_kl" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val cst = spread(load(s, dir, "documents"), col("doc_id"))
+      val cst = load(s, dir, "documents")
         .select(col("source"), explode(expr(toks)).as("token"))
         .groupBy(col("source"), col("token"))
         .agg(count(lit(1)).as("c_st"))
@@ -318,7 +308,7 @@ object RankMixQueries {
     // The mix report: per-source before/after counts + realized keep rate
     // (single IEEE division of exact ints).
     "mix_source_rates" -> ((s, dir) =>
-      load(s, dir, "documents")
+      scan(s, dir, "documents")
         .groupBy(col("source")).agg(
           count(lit(1)).as("n_docs"),
           sum(when(substring(md5(col("text")), 1, 1) <

@@ -60,7 +60,7 @@ object SimilarityQueries {
   private[graft] def embCount(s: org.apache.spark.sql.SparkSession,
       dir: String): Long =
     embCountCache.computeIfAbsent(dir,
-      d => load(s, d, "embeddings").count()).longValue()
+      d => scan(s, d, "embeddings").count()).longValue()
   // Farthest-point coreset size — single-sourced into the engine query
   // AND the unrolled oracle so the two sides cannot desynchronize.
   private val CoresetK = 16
@@ -149,12 +149,9 @@ object SimilarityQueries {
     // is broadcast; corpus is scanned once, top-k per query via window.
     "sim_knn_brute" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = load(s, dir, "embeddings")
+      val emb = scan(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      // spread the corpus side only (round-16, guide §2.5): the per-row
-      // cosine against every broadcast query otherwise runs inside the
-      // single-row-group scan as ONE task; q is NQueries rows.
       val c = spread(emb, col("vec_id"))
         .select(col("vec_id").as("nid"), col("embedding").as("ne"))
       val scored = c.join(broadcast(q), col("qid") =!= col("nid"))
@@ -175,11 +172,10 @@ object SimilarityQueries {
     // partition pruning before the scan.
     "sim_knn_filtered" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = load(s, dir, "embeddings")
+      val emb = scan(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           col("label").as("qlabel"))
-      // spread the corpus side only (round-16, guide §2.5).
       val c = spread(emb, col("vec_id")).select(col("vec_id").as("nid"),
         col("embedding").as("ne"), col("label"))
       val scored = c.join(broadcast(q),
@@ -200,9 +196,7 @@ object SimilarityQueries {
     // every downstream cosine starts from identical inputs; the exploded
     // (label, dim) join is a 640-row broadcast.
     "sim_cluster_quality" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val d = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val d = load(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           posexplode(col("embedding")).as(Seq("dim", "xf")))
         .withColumn("x", col("xf").cast("double"))
@@ -231,9 +225,7 @@ object SimilarityQueries {
     // IVF coarse quantizer: per-label centroid, one row per (label, dim).
     // Single scan + posexplode + partial agg on (label, dim) — 640 groups.
     "sim_centroids" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "embeddings"), col("vec_id"))
+      load(s, dir, "embeddings")
         .select(col("label"), posexplode(col("embedding")).as(Seq("p", "x")))
         .groupBy(col("label").cast("long").as("label"),
           (col("p") + 1).cast("long").as("d"))
@@ -249,9 +241,7 @@ object SimilarityQueries {
     // (interpreted lambdas), the native loop is whole-stage codegen —
     // A/B-measured 30× faster at sf0.1, bit-identical output. Zero shuffle.
     "sim_lsh_buckets" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "embeddings"), col("vec_id"))
+      load(s, dir, "embeddings")
         .select(col("vec_id"),
           expr("element_at(lsh_buckets(embedding, 1, 16), 1)").as("bucket"))
         .orderBy(col("vec_id"))),
@@ -273,9 +263,7 @@ object SimilarityQueries {
     // so the whole dataflow replays in DuckDB; recall additionally
     // pinned by DedupSimilaritySpec.
     "sim_knn_ivf" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       val cents = ivfCentroids(emb)
       ivfRerank(ivfAssign(emb, cents), ivfProbes(emb, cents, nprobe = 3))
     }),
@@ -291,9 +279,7 @@ object SimilarityQueries {
     // micro-units) replays as unrolled MATERIALIZED CTEs; ADC-recall
     // additionally pinned in DedupSimilaritySpec.
     "sim_pq_codes" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       val slices = (0 until 4).map(sub =>
         expr(s"slice(embedding, ${sub * 16 + 1}, 16)"))
       // all 4 sub-codebooks train in the SAME Lloyd passes over one
@@ -318,9 +304,7 @@ object SimilarityQueries {
     // seeding, Lloyd passes, probes and re-rank replay in DuckDB);
     // recall@5 vs brute force additionally pinned in DedupSimilaritySpec.
     "sim_knn_ivf_trained" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       val cents = graft.operators.KMeans.fit(
         emb, "vec_id", "embedding", k = 8, iters = 3)
       ivfRerank(ivfAssign(emb, cents), ivfProbes(emb, cents, nprobe = 3))
@@ -343,16 +327,12 @@ object SimilarityQueries {
     // Per-step self-consistency, separation monotonicity and determinism
     // additionally pinned by CoresetSpec.
     "sim_diverse_coreset" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): the quantized distance folds
-      // otherwise run inside the single-row-group scan as ONE task.
       graft.operators.Coreset.farthestPoint(
-        spread(load(s, dir, "embeddings"), col("vec_id")),
+        load(s, dir, "embeddings"),
         "vec_id", "embedding", k = CoresetK)),
 
     "sim_kmeans_cells" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       val model = graft.operators.KMeans.fit(
         emb, "vec_id", "embedding", k = 8, iters = 3)
       graft.operators.KMeans.assign(emb, "embedding", model)
@@ -368,9 +348,7 @@ object SimilarityQueries {
     // sim_knn_brute is pinned by a ScalaTest.
     "sim_knn_lsh" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      // spread (round-16, guide §2.5): per-row vector work otherwise
-      // runs inside the single-row-group scan as ONE task.
-      val emb = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val emb = load(s, dir, "embeddings")
       // plane p = t·6+j — the native expression's indexing, so these
       // buckets are bit-identical to the previous HOF formulation
       val sigs = emb.select(col("vec_id"), col("embedding"),
@@ -464,7 +442,7 @@ object SimilarityQueries {
       // beyond knnGraphEdges' own two reads — A/B wins at every measured
       // size (sf1 5.69 -> 4.16 s, sf10 15.1 -> 13.9 s warm).
       val edges = knnGraphEdges(s, dir, cut = Some(true))
-      val labels = load(s, dir, "embeddings")
+      val labels = scan(s, dir, "embeddings")
         .select(col("vec_id"), col("label"))
       val nbr = edges.select(col("vec_id"), col("nid"))
         .join(labels.select(col("vec_id").as("nid"), col("label").as("nl")),
@@ -499,7 +477,7 @@ object SimilarityQueries {
         .run(mutual, "va", "vb")
         .withColumnRenamed("node", "vec_id")
         .withColumnRenamed("component", "cid")
-      load(s, dir, "embeddings").select(col("vec_id"))
+      scan(s, dir, "embeddings").select(col("vec_id"))
         .join(comp, Seq("vec_id"), "left")
         .select(col("vec_id"),
           coalesce(col("cid"), col("vec_id")).as("cluster_id"))
@@ -528,10 +506,7 @@ object SimilarityQueries {
       cut: Option[Boolean] = None): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val pl = if (planes > 0) planes else autoPlanes(embCount(s, dir))
-      // spread (round-16, guide §2.5): normalize + LSH per vector
-      // otherwise run inside the single-row-group scan as ONE task (and
-      // this subtree evaluates twice: bucket census + candidate join).
-      val sigs = spread(load(s, dir, "embeddings"), col("vec_id"))
+      val sigs = load(s, dir, "embeddings")
         .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
           posexplode(expr(s"lsh_buckets(embedding, $tables, $pl)"))
             .as(Seq("table_id", "bucket")))

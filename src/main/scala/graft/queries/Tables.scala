@@ -38,33 +38,60 @@ import org.apache.spark.sql.types.DecimalType
 object Tables {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Load a testdata table. The `events` table's `ts` column is
-    * normalized to a canonical TIMESTAMP at this boundary (the driver's
+  /** The id each corpus table is spread by. */
+  private val CorpusKeys = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
+
+  /** Read a testdata table as it is on disk. The `events` table's `ts`
+    * column is normalized to a canonical TIMESTAMP at this boundary (the
     * testdata has shipped it as both TIMESTAMP(NANOS)-as-long and
     * TIMESTAMP(MICROS) across regenerations) — every query downstream
     * sees one type. See EventsCdc.normalizeTs.
+    *
+    * The contract: no exchange is added. Use it where a query deliberately
+    * keeps its light work inside the scan stage (metadata counts, a
+    * `select(doc_id)` feeding a keyed aggregation, a plan pinned to have
+    * no shuffle before its output sort) and on the reference side of the
+    * verification twins, which must read exactly what the gate reads.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  def scan(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.operators.EventsCdc.normalizeTs(
       spark.read.parquet(s"$dir/$name.parquet"))
 
-  /** Spread a deficiently-split scan across the session's shuffle
-    * parallelism BEFORE heavy row-local work (guide §2.5, "input skew:
-    * one huge unsplittable file — repartition immediately after the
-    * read"). The testdata tables ship as single-row-group parquet files
-    * at every SF (sf10 documents: 500k rows / 58 MB / ONE row group) and
-    * a parquet scan cannot split inside a row group, so every
-    * explode/kernel/probe that precedes the first exchange otherwise
-    * runs as ONE task regardless of core count — measured round 16:
-    * decontam_overlap spent ~55 of its 60 s at sf10 in that serial scan
-    * stage. Used only on paths whose per-row work dominates the moved
-    * bytes (the id-keyed text/vector rows are tiny next to the explode
-    * fan-out they feed). Keyed repartition: a unique id spreads evenly
-    * and deterministically, skips round-robin's sort-before-repartition,
-    * and — when the key prefixes the downstream grouping — the one
-    * exchange also satisfies the aggregation (the q20/span_detect subset
-    * pattern). Partition count comes from spark.sql.shuffle.partitions
-    * (scale-configured, never a local constant).
+  /** Read a testdata table for heavy row-local work: `scan`, and for the
+    * corpus tables [[spread]] by their id (`documents` by `doc_id`,
+    * `embeddings` by `vec_id`).
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = scan(spark, dir, name)
+    CorpusKeys.get(name).fold(df)(k => spread(df, col(k)))
+  }
+
+  /** Repartition a corpus frame by `key` right after the read, before its
+    * per-row work (one huge unsplittable file is input skew). A parquet
+    * scan cannot split inside a row group: Spark plans splits by bytes,
+    * but a split reads rows only if a row group starts in it. The
+    * testdata corpus files are one row
+    * group at every SF, so without the exchange every explode, kernel or
+    * probe before the first shuffle runs as one task (decontam_overlap
+    * spent ~55 of its 60 s at sf10 in that serial scan stage). Neither the
+    * planned split count nor the row-group count tells alone whether a
+    * scan fills the cores; measured on sf0.1 `documents` at 4 cores:
+    *
+    * | file | confs | splits | rows per split |
+    * |---|---|---|---|
+    * | 1 row group | defaults | 1 | 5000 |
+    * | 8 row groups | defaults | 1 | 5000 |
+    * | 1 row group | maxPartitionBytes 128k, openCostInBytes 4k | 5 | 0, 0, 5000, 0, 0 |
+    * | 8 row groups | maxPartitionBytes 128k, openCostInBytes 4k | 5 | 1250, 625, 1250, 1250, 625 |
+    *
+    * So the spread is unconditional; skipping it on a well-split scan
+    * would need a benchmark workload on such a corpus to show it wins.
+    * Keyed repartition: a unique id spreads evenly and deterministically,
+    * skips round-robin's sort-before-repartition, and — when the key
+    * prefixes the downstream grouping — the one exchange also satisfies
+    * the aggregation. Partition count comes from
+    * spark.sql.shuffle.partitions. Call it directly only on a frame
+    * derived from a `scan` (a filter that must run before the exchange).
     */
   def spread(df: DataFrame, key: Column): DataFrame = df.repartition(key)
 

@@ -56,9 +56,7 @@ object TextQueries {
   val queries: Map[String, Q] = Map(
     // Quality scoring: length / word / stopword-ratio features
     "text_quality" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         expr(s"cast(size($toks) as bigint)").as("n_words"),
         expr(s"cast(size($stopFilter) as bigint)").as("n_stop"),
@@ -70,9 +68,7 @@ object TextQueries {
 
     // Token counting: counts, vocabulary size, type-token ratio
     "text_token_counts" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         col("n_chars"),
         expr(s"cast(size($toks) as bigint)").as("n_tokens"),
@@ -225,10 +221,7 @@ object TextQueries {
     // and DuckDB agree. Scale: narrow per-row map, no shuffle at all
     // except the final ORDER BY for the gate.
     "text_pii_scrub" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): 4 regex passes per document with
-      // NO exchange after them — the whole query otherwise runs inside
-      // the single-row-group scan as ONE task (20.6 s serial at sf10).
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         expr(s"cast(regexp_count(text, '${sqlEsc(PiiEmail)}') as bigint)")
           .as("n_emails"),
@@ -242,9 +235,7 @@ object TextQueries {
     // Language-ID heuristic: stopword-profile scoring with deterministic
     // argmax tie-break (n-gram/stopword profiling — public technique)
     "text_langid" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         expr(s"cast($langScoreEn as bigint)").as("score_en"),
         expr(s"cast($langScoreEs as bigint)").as("score_es"),
@@ -262,9 +253,7 @@ object TextQueries {
     // one corpus scan into a ≤|langs|²-row aggregate, then a broadcast
     // of the per-lang totals.
     "text_langid_confusion" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val cnt = spread(load(s, dir, "documents"), col("doc_id"))
+      val cnt = load(s, dir, "documents")
         .groupBy(col("lang"), expr(langCase).as("lang_pred"))
         .agg(count(lit(1)).as("n"))
       val tot = cnt.groupBy(col("lang")).agg(sum(col("n")).as("n_lang"))
@@ -277,9 +266,7 @@ object TextQueries {
     // BPE-ish regex tokenization (word / number / other classes) — the
     // subword-precursor token accounting a training pipeline budgets with
     "text_bpe_tokens" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         expr("cast(size(regexp_extract_all(text, '[A-Za-z]+', 0)) as bigint)")
           .as("n_word"),
@@ -291,7 +278,7 @@ object TextQueries {
 
     // Corpus rollup by (source, lang) — ingestion-monitoring shape
     "text_corpus_stats" -> ((s, dir) =>
-      load(s, dir, "documents").groupBy(col("source"), col("lang")).agg(
+      scan(s, dir, "documents").groupBy(col("source"), col("lang")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"),
         (sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"),
@@ -313,9 +300,7 @@ object TextQueries {
     // IEEE +,·,/,ln chains on both engines, 6dp-floored ⇒ bit-exact.
     // ≤5% relative error vs the exact count pinned in RankMixSpec.
     "text_vocab_sketch" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
         .select(col("source"), expr("fnv64(token)").as("w"))
         .select(col("source"),
@@ -353,9 +338,7 @@ object TextQueries {
     // equivalence additionally pinned by SimHashAggSpec.
     "text_corpus_fingerprint" -> ((s, dir) => {
       graft.functions.SimHashAgg.register(s)
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(expr(s"simhash_agg($toks)").as("corpus_simhash"),
           count(lit(1)).as("n_docs"))
@@ -368,9 +351,7 @@ object TextQueries {
     // oracle's naive global window computes the identical integers.
     "text_pack_shards" -> ((s, dir) =>
       graft.operators.Pack.packShards(
-        // spread (round-16, guide §2.5): per-row work otherwise runs
-        // inside the single-row-group scan as ONE task.
-        spread(load(s, dir, "documents"), col("doc_id"))
+        load(s, dir, "documents")
           .select(col("doc_id"), expr(s"cast(size($toks) as bigint)").as("n_tokens")),
         "doc_id", "n_tokens", budget = PackBudget)
         .select(col("doc_id"), col("n_tokens"), col("shard_id"))
@@ -400,9 +381,7 @@ object TextQueries {
     // are dropped unless they are the document's only chunk (every doc
     // must survive into training). All arithmetic is integer-exact.
     "text_train_chunks" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"), expr(toks).as("tokens"),
           expr(s"cast(size($toks) as bigint)").as("n"))
         .select(col("doc_id"), col("tokens"), col("n"),
@@ -424,9 +403,7 @@ object TextQueries {
     // contain them — the vocab-building / stopword-discovery pass. Explode
     // of per-doc DISTINCT tokens, partial-agg counts, TakeOrdered top-k.
     "text_doc_freq" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(explode(expr(s"array_distinct($toks)")).as("token"))
         .groupBy(col("token"))
         .agg(count(lit(1)).as("df"))
@@ -440,9 +417,7 @@ object TextQueries {
     // Purely row-local: one sequence + explode per document, no shuffle
     // at all until the output sort — embarrassingly parallel at 100 TB.
     "text_rag_chunks" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"), expr(toks).as("tk"))
         .withColumn("len", expr("size(tk)"))
         .withColumn("maxo", expr(s"greatest(0, len - $RagChunkTokens)"))
@@ -468,11 +443,10 @@ object TextQueries {
     // same key — two keyed exchanges total, no joins.
     "text_doc_entropy" -> ((s, dir) => {
       val w = Window.partitionBy(col("doc_id"))
-      // spread (round-16, guide §2.5) keyed by doc_id: parallelizes the
-      // serial single-row-group explode AND — doc_id prefixes both the
-      // (doc_id, token) grouping, the window partition and the re-agg —
-      // replaces BOTH of the old keyed exchanges (3 exchanges -> 1).
-      spread(load(s, dir, "documents"), col("doc_id"))
+      // load's doc_id spread also serves the (doc_id, token) grouping,
+      // the window partition and the re-agg (doc_id prefixes all three),
+      // so it replaces both of their keyed exchanges (3 exchanges -> 1).
+      load(s, dir, "documents")
         .select(col("doc_id"), explode(expr(toks)).as("token"))
         .groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf"))
@@ -495,9 +469,7 @@ object TextQueries {
     // BPE trainer would apply). Two narrow explodes through the native
     // char_windows kernel, one partial-agg count, TakeOrdered top-20.
     "text_bpe_merge_pairs" -> ((s, dir) =>
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(explode(expr(toks)).as("word"))
         .select(explode(expr("char_windows(word, 2, 1)")).as("pair"))
         .groupBy(col("pair"))
@@ -507,9 +479,7 @@ object TextQueries {
     // Document fingerprinting via native Catalyst expressions (FNV-64 +
     // winnowing + SimHash) — all three replay bit-exactly in the oracle
     "text_fingerprint" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      spread(load(s, dir, "documents"), col("doc_id")).select(
+      load(s, dir, "documents").select(
         col("doc_id"),
         expr("fnv64(text)").as("fp64"),
         expr("cast(size(winnow_fingerprint(text)) as bigint)").as("n_winnow"),
@@ -534,9 +504,7 @@ object TextQueries {
     // k-means centroids.
     "text_heavy_hitters" -> ((s, dir) => {
       graft.functions.MisraGriesAgg.register(s)
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val tk = spread(load(s, dir, "documents"), col("doc_id"))
+      val tk = load(s, dir, "documents")
         .select(explode(expr(toks)).as("tok"))
       val sk = tk.agg(expr("mg_candidates(tok, 512)").as("cs"),
         count(lit(1)).as("n")).head()
@@ -589,10 +557,7 @@ object TextQueries {
     "text_bpe_encode" -> ((s, dir) => {
       val flat = bpeTrain(s, dir).orderBy(col("rank")).collect()
         .flatMap(r => Seq(r.getString(1), r.getString(2))).mkString(" ")
-      // spread (round-16, guide §2.5): bpe_apply — the iterative
-      // merge-table walk per word — otherwise runs inside the
-      // single-row-group scan as ONE task (20.1 s serial at sf10).
-      spread(load(s, dir, "documents"), col("doc_id"))
+      load(s, dir, "documents")
         .select(col("doc_id"), explode(expr(toks)).as("w"))
         .select(col("doc_id"), col("w"),
           call_function("bpe_apply", col("w"), lit(flat)).as("enc"))
@@ -621,9 +586,7 @@ object TextQueries {
              r -> named_struct('r', r,
                'c', pmod(fnv64(concat(cast(r as string), '|', $tokCol)),
                          ${CmsWidth}L)))"""
-      // spread (round-16, guide §2.5): per-row work otherwise runs
-      // inside the single-row-group scan as ONE task.
-      val tk = spread(load(s, dir, "documents"), col("doc_id"))
+      val tk = load(s, dir, "documents")
         .select(explode(expr(toks)).as("tok"))
       // Cells from the VOCAB aggregation, not raw token instances: count
       // each distinct token once (the same map-side-partial groupBy the
@@ -677,10 +640,7 @@ object TextQueries {
     // array (0-gram docs: empty explode == size 0), and the df=1 group's
     // min(doc_id) is its only member.
     "text_ngram_novelty" -> ((s, dir) => {
-      // spread (round-16, guide §2.5): both subtrees' word_ngrams +
-      // array_distinct work otherwise runs inside the single-row-group
-      // scan as ONE task.
-      val docs = spread(load(s, dir, "documents"), col("doc_id"))
+      val docs = load(s, dir, "documents")
       val novel = docs.select(col("doc_id"),
           explode(expr(s"array_distinct(word_ngrams($toks, 3))")).as("g"))
         .groupBy(col("g"))
@@ -720,8 +680,7 @@ object TextQueries {
       s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    // spread (round-16, guide §2.5): parallelize the word-count pass.
-    val words = spread(load(s, dir, "documents"), col("doc_id"))
+    val words = load(s, dir, "documents")
       .select(explode(expr(toks)).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -1379,11 +1338,7 @@ object TextQueries {
     */
   private def lmScores(s: org.apache.spark.sql.SparkSession,
       dir: String, carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    // spread (round-16, guide §2.5): both corpus passes' tokenize +
-    // (tok, nxt) explode otherwise run inside the single-row-group scan
-    // as ONE task — the lmScores consumers were 4 of the 7 priciest sf10
-    // queries (32-38 s each).
-    val docs = spread(load(s, dir, "documents"), col("doc_id"))
+    val docs = load(s, dir, "documents")
     // Round-15 shape, from the round-14 redundancy measurement: the old
     // form ran SEPARATE token and bigram streams (tk, bg) through
     // separate count aggs and separate per-doc score aggs, and because

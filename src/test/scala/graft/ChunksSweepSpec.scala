@@ -32,7 +32,7 @@ class ChunksSweepSpec extends SparkSuite {
     val dir = sf("sf0.001")
     val rows = TextQueries.queries("text_rag_chunks")(spark, dir).collect()
     assert(rows.nonEmpty)
-    val lens = graft.queries.Tables.load(spark, dir, "documents")
+    val lens = graft.queries.Tables.scan(spark, dir, "documents")
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     rows.groupBy(_.getLong(0)).foreach { case (doc, g) =>

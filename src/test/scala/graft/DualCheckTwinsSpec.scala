@@ -37,7 +37,7 @@ class DualCheckTwinsSpec extends SparkSuite {
 
   test("kmeans twin trainer: identical centroids, k=8 and PQ k=16") {
     val dir = sf("sf0.001")
-    val emb = Tables.load(spark, dir, "embeddings")
+    val emb = Tables.scan(spark, dir, "embeddings")
     val prim = graft.operators.KMeans.fit(
       emb, "vec_id", "embedding", k = 8, iters = 3)
     val twin = DualCheckTwins.KMeansTwin.fitMany(

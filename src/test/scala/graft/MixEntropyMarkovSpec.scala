@@ -181,7 +181,7 @@ class MixEntropyMarkovSpec extends SparkSuite {
       g.foreach(r => assert(r.getAs[Long]("p_ppm") <= 1000000L))
     }
     // cross-check one cell against the classifier joined to the corpus
-    val docs = graft.queries.Tables.load(spark, dir, "documents")
+    val docs = graft.queries.Tables.scan(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
     val pred = TextQueries.queries("text_langid")(spark, dir)
       .select(col("doc_id"), col("lang_pred"))
