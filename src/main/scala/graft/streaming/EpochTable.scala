@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** The crash-safe protocol of every batch-committed parquet table: the
@@ -17,11 +18,13 @@ import org.apache.spark.sql.types._
   *
   *  - [[parts]] and [[committed]] answer from the parquet footers.
   *  - [[writeRows]] / [[readRows]] move the rows of small flat tables
-  *    driver-side, the writer through a two-phase file commit.
+  *    driver-side, the writer through a two-phase file commit; [[newest]]
+  *    reads the current generation of one.
   *  - [[replace]] is the compaction order: append, seam, delete. A crash
   *    in between leaves rows doubled, never lost; every reader of these
   *    tables is insensitive to duplicates, and the next compaction folds
   *    them back.
+  *  - [[drainFiles]] is the file-fed twins' one AvailableNow drain.
   */
 object EpochTable {
 
@@ -72,6 +75,21 @@ object EpochTable {
     }
   }
 
+  /** The rows of the newest batch: those carrying the max `batch_id`,
+    * read driver-side (as `schema`, which holds `batch_id`) from the
+    * parts whose footer range ends at that max and from any part without
+    * statistics. Empty when the table holds no rows.
+    */
+  def newest(spark: SparkSession, dir: String, schema: StructType): Seq[Row] = {
+    val ps = parts(spark, dir).filter(_.rows > 0)
+    val top = ps.flatMap(_.batchIds).map(_._2).maxOption
+    val rows = readRows(spark,
+      ps.filter(_.batchIds.forall(r => top.contains(r._2))).map(_.path), schema)
+    val b = schema.fieldIndex("batch_id")
+    rows.map(_.getLong(b)).maxOption.fold(Seq.empty[Row])(m =>
+      rows.filter(_.getLong(b) == m))
+  }
+
   private def value(g: Group, f: StructField): Any =
     if (g.getFieldRepetitionCount(f.name) == 0) null
     else f.dataType match {
@@ -120,4 +138,23 @@ object EpochTable {
     val hconf = spark.sparkContext.hadoopConfiguration
     old.foreach(p => p.path.getFileSystem(hconf).delete(p.path, false))
   }
+
+  /** The one drain of the foreachBatch twins: every parquet file now under
+    * `inputDir` (read as `schema`, at most `maxFilesPerTrigger` files per
+    * batch) through `batchFn`, checkpointed in `checkpointDir`, with an
+    * AvailableNow trigger; returns when the input is drained and rethrows
+    * a failed batch.
+    */
+  def drainFiles(spark: SparkSession, schema: StructType, inputDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int)(
+      batchFn: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(inputDir)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(batchFn)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 }

@@ -137,16 +137,11 @@ object StreamingCdc {
   var faultpoint: (String, Long) => Unit = (_, _) => ()
 
   /** S2 — latest committed token: the value of the max-batch_id row,
-    * read driver-side from the part whose footer range holds that max
-    * (and from any part without statistics).
+    * read driver-side through [[EpochTable.newest]].
     */
-  def latestToken(spark: SparkSession, tokensDir: String): Option[String] = {
-    val ps = EpochTable.parts(spark, tokensDir).filter(_.rows > 0)
-    val newest = ps.flatMap(_.batchIds).map(_._2).maxOption
-    EpochTable.readRows(spark, ps.filter(_.batchIds.forall(r =>
-        newest.contains(r._2))).map(_.path), tokenSchema)
-      .maxByOption(_.getLong(0)).flatMap(r => Option(r.getString(1)))
-  }
+  def latestToken(spark: SparkSession, tokensDir: String): Option[String] =
+    EpochTable.newest(spark, tokensDir, tokenSchema).headOption
+      .flatMap(r => Option(r.getString(1)))
 
   /** Committed batch ids — the idempotence ledger for replay skips.
     * Read from the tokens table ONCE per run (start() drops the cache

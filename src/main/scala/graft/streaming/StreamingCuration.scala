@@ -21,19 +21,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingCuration {
 
-  /** Starts the curation stream over parquet `documents` files appearing
-    * under `inputDir`. One pass per micro-batch: the batch is persisted,
-    * split by the verdict, and appended to `curatedDir` (doc_id, scrubbed
-    * text, lang, source) and `rejectedDir` (doc_id, reasons).
+  /** Starts the curation stream over the parquet `documents` files now
+    * under `inputDir` (AvailableNow). One pass per micro-batch: the batch
+    * is persisted, split by the verdict, and appended to `curatedDir`
+    * (doc_id, scrubbed text, lang, source) and `rejectedDir` (doc_id,
+    * reasons).
     */
   def start(spark: SparkSession, inputDir: String, curatedDir: String,
-      rejectedDir: String, checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      rejectedDir: String, checkpointDir: String): StreamingQuery = {
     val schema = spark.read.parquet(inputDir).schema
     val annotated = graft.queries.CurationQueries.gopherAnnotate(
       spark.readStream.schema(schema).parquet(inputDir))
 
-    val writer = annotated.writeStream
+    annotated.writeStream
       .queryName("curation")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -50,7 +50,7 @@ object StreamingCuration {
         } finally b.unpersist()
         ()
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 }

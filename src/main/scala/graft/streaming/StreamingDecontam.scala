@@ -1,9 +1,10 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming semantic DECONTAMINATION for the training-ingest path: the
@@ -38,7 +39,7 @@ import org.apache.spark.sql.types._
   * where the combined cap binds).
   *
   * Eval updates: `indexEval` is append-able (a new eval shard = one more
-  * call); batches probe the index as-of their trigger. Vectors cleared
+  * call); batches probe the index as of the run's start. Vectors cleared
   * BEFORE an eval shard arrived are not re-checked — that is the
   * documented semantics (a real pipeline re-enqueues the corpus slice it
   * wants re-screened), not a correctness gap in the per-batch contract.
@@ -82,21 +83,11 @@ object StreamingDecontam {
       .agg(max(col("cos")).as("cos"))
 
   private def processBatch(contamDir: String, ledgerDir: String,
-      indexDir: String, tables: Int, planes: Int, capEval: Int,
-      cosMin: Double)(batch: DataFrame, batchId: Long): Unit = {
+      evalIdx: DataFrame, tables: Int, planes: Int, cosMin: Double)(
+      batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // replay guard: the ledger append is the commit marker
     if (EpochTable.committed(spark, ledgerDir, batchId)) return
-
-    val idx = spark.read.parquet(indexDir)
-    // hot-eval-bucket guard: a bucket holding more than capEval eval
-    // vectors is dropped from the probe (its pairs recoverable via the
-    // other tables) — bounds fan-out per arriving vector at any scale
-    val okBuckets = idx.groupBy(col("table_id"), col("bucket"))
-      .agg(count(lit(1)).as("ne"))
-      .filter(col("ne") <= capEval)
-      .select(col("table_id"), col("bucket"))
-    val evalIdx = idx.join(okBuckets, Seq("table_id", "bucket"))
 
     val b = batch
       .select(col("vec_id"), expr("vec_normalize(embedding)").as("cn"),
@@ -128,11 +119,13 @@ object StreamingDecontam {
       Seq(org.apache.spark.sql.Row(batchId, n)))
   }
 
-  def start(spark: SparkSession, inputDir: String, contamDir: String,
+  /** Drain the currently-available input (AvailableNow), one file per
+    * batch, against the eval index as of this call.
+    */
+  def runOnce(spark: SparkSession, inputDir: String, contamDir: String,
       ledgerDir: String, indexDir: String, checkpointDir: String,
-      tables: Int, planes: Int, capEval: Int = 200, cosMin: Double = 0.35,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = false): StreamingQuery = {
+      tables: Int, planes: Int, capEval: Int = 200,
+      cosMin: Double = 0.35): Unit = {
     Ddl.ensureTable(spark, ledgerDir, ledgerSchema)
     val contamSchema = StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
@@ -140,23 +133,20 @@ object StreamingDecontam {
       StructField("cos", DoubleType, nullable = true),
       StructField("batch_id", LongType, nullable = false)))
     Ddl.ensureTable(spark, contamDir, contamSchema)
-    val w = spark.readStream
-      .schema(inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(processBatch(contamDir, ledgerDir, indexDir, tables,
-        planes, capEval, cosMin) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    val idx = spark.read.parquet(indexDir)
+    // hot-eval-bucket guard, decided once per run (only indexEval changes
+    // the index): a bucket holding more than capEval eval vectors is
+    // dropped from the probe (its pairs recoverable via the other tables)
+    // — bounds fan-out per arriving vector at any scale
+    val hot = idx.groupBy(col("table_id"), col("bucket"))
+      .agg(count(lit(1)).as("ne"))
+      .filter(col("ne") > capEval)
+      .select(col("table_id"), col("bucket"))
+    val evalIdx = idx.join(broadcast(spark.createDataFrame(
+      hot.collect().toSeq.asJava, hot.schema)), Seq("table_id", "bucket"),
+      "left_anti")
+    EpochTable.drainFiles(spark, inputSchema, inputDir, checkpointDir,
+      maxFilesPerTrigger = 1)(
+      processBatch(contamDir, ledgerDir, evalIdx, tables, planes, cosMin))
   }
-
-  /** Run to completion over the currently-available input (AvailableNow). */
-  def runOnce(spark: SparkSession, inputDir: String, contamDir: String,
-      ledgerDir: String, indexDir: String, checkpointDir: String,
-      tables: Int, planes: Int, capEval: Int = 200,
-      cosMin: Double = 0.35, maxFilesPerTrigger: Int = 1): Unit =
-    start(spark, inputDir, contamDir, ledgerDir, indexDir, checkpointDir,
-      tables, planes, capEval, cosMin, maxFilesPerTrigger,
-      availableNow = true).awaitTermination()
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Streaming exact-dedup for the document ingest path — the training-data
@@ -28,17 +28,16 @@ object StreamingDedup {
     StructField("text", StringType, nullable = false),
     StructField("ingest_ts", TimestampType, nullable = false)))
 
-  /** Start the dedup stream: first-seen docs (with their content hash)
-    * append to `outDir`; state lives under `checkpointDir` and survives
-    * restarts (a re-sent duplicate after a crash is still dropped).
+  /** Drain the currently-available input (AvailableNow, at most 8 files
+    * per batch): first-seen docs (with their content hash) append to
+    * `outDir`; state lives under `checkpointDir` and survives restarts (a
+    * re-sent duplicate after a crash is still dropped).
     */
-  def start(spark: SparkSession, inputDir: String, outDir: String,
-      checkpointDir: String, horizon: String = "1 day",
-      maxFilesPerTrigger: Int = 8,
-      availableNow: Boolean = false): StreamingQuery = {
-    val w = spark.readStream
+  def runOnce(spark: SparkSession, inputDir: String, outDir: String,
+      checkpointDir: String, horizon: String = "1 day"): Unit =
+    spark.readStream
       .schema(inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", 8)
       .parquet(inputDir)
       .withColumn("content_hash", md5(col("text")))
       .withWatermark("ingest_ts", horizon)
@@ -48,12 +47,7 @@ object StreamingDedup {
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
-
-  /** Run to completion over the currently-available input (AvailableNow). */
-  def runOnce(spark: SparkSession, inputDir: String, outDir: String,
-      checkpointDir: String, horizon: String = "1 day"): Unit =
-    start(spark, inputDir, outDir, checkpointDir, horizon,
-      availableNow = true).awaitTermination()
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 }

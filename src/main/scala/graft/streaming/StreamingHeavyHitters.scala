@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming frequent-tokens for the document ingest path: a Misra-Gries
@@ -58,44 +59,40 @@ object StreamingHeavyHitters {
   @volatile private[graft]
   var trimFaultpoint: Long => Unit = _ => ()
 
-  /** The current candidate summary: the max-generation rows. DISTINCT on
-    * (token, cnt): a crash inside the trim window can leave the current
-    * generation's file duplicated, and generation rows are unique per
-    * token, so distinct recovers exactly the committed summary.
+  /** The current candidate summary: the max-generation rows
+    * ([[EpochTable.newest]]), as a local frame. DISTINCT on (token, cnt):
+    * a crash inside the trim window can leave the current generation's
+    * file duplicated, and generation rows are unique per token, so
+    * distinct recovers exactly the committed summary.
     */
-  def summary(spark: SparkSession, summaryDir: String): DataFrame = {
-    val all = spark.read.parquet(summaryDir)
-    all.join(broadcast(all.agg(max(col("batch_id")).as("batch_id"))),
-      "batch_id")
-      .select(col("token"), col("cnt")).distinct()
-  }
+  def summary(spark: SparkSession, summaryDir: String): DataFrame =
+    spark.createDataFrame(
+      EpochTable.newest(spark, summaryDir, summarySchema)
+        .map(r => Row(r.getString(0), r.getLong(1))).distinct.asJava,
+      StructType(summarySchema.fields.take(2)))
 
+  /** The merge in one Spark action: one aggregate sums the batch's
+    * tokens with the stored summary (a local relation) and returns its
+    * top capacity + 1 rows, and the driver finishes the merge on them —
+    * every row that survives the pivot subtraction is among them.
+    */
   private def processBatch(summaryDir: String, capacity: Int,
       keepGenerations: Int)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     // replay guard: this batch's generation already written = committed
     if (EpochTable.committed(spark, summaryDir, batchId)) return
-    val prev = summary(spark, summaryDir)
-    val batchCounts = batch
-      .select(explode(split(col("text"), " ")).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val merged = prev.union(batchCounts)
+    val top = batch
+      .select(explode(split(col("text"), " ")).as("token"), lit(1L).as("cnt"))
+      .union(summary(spark, summaryDir))
       .groupBy(col("token")).agg(sum(col("cnt")).as("cnt"))
-      .persist()
-    try {
-      val n = merged.count()
-      val out = if (n <= capacity) merged
-      else {
-        // the (capacity+1)-th largest counter — one bounded scalar
-        val pivot = merged.orderBy(col("cnt").desc).limit(capacity + 1)
-          .agg(min(col("cnt"))).head().getLong(0)
-        merged.withColumn("cnt", col("cnt") - pivot)
-          .filter(col("cnt") > 0)
-      }
-      faultpoint(batchId)
-      out.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(summaryDir)
-    } finally merged.unpersist()
+      .orderBy(col("cnt").desc).limit(capacity + 1)
+      .collect()
+    // the (capacity+1)-th largest counter, 0 when the merge fits
+    val pivot = if (top.length > capacity) top(capacity).getLong(1) else 0L
+    val out = top.toSeq.filter(_.getLong(1) > pivot)
+      .map(r => Row(r.getString(0), r.getLong(1) - pivot, batchId))
+    faultpoint(batchId)
+    EpochTable.writeRows(spark, summaryDir, batchId, summarySchema, out)
     trimGenerations(spark, summaryDir, keepGenerations, batchId)
   }
 
@@ -117,27 +114,13 @@ object StreamingHeavyHitters {
       } { trimFaultpoint(batchId) }
   }
 
-  def start(spark: SparkSession, inputDir: String, summaryDir: String,
-      checkpointDir: String, capacity: Int = 512,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = false,
-      keepGenerations: Int = 8): StreamingQuery = {
-    Ddl.ensureTable(spark, summaryDir, summarySchema)
-    val w = spark.readStream
-      .schema(StreamingDedup.inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(processBatch(summaryDir, capacity, keepGenerations) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
-
-  /** Run to completion over the currently-available input (AvailableNow). */
+  /** Drain the currently-available input (AvailableNow). */
   def runOnce(spark: SparkSession, inputDir: String, summaryDir: String,
       checkpointDir: String, capacity: Int = 512,
-      maxFilesPerTrigger: Int = 1, keepGenerations: Int = 8): Unit =
-    start(spark, inputDir, summaryDir, checkpointDir, capacity,
-      maxFilesPerTrigger, availableNow = true,
-      keepGenerations = keepGenerations).awaitTermination()
+      maxFilesPerTrigger: Int = 1, keepGenerations: Int = 8): Unit = {
+    Ddl.ensureTable(spark, summaryDir, summarySchema)
+    EpochTable.drainFiles(spark, StreamingDedup.inputSchema, inputDir,
+      checkpointDir, maxFilesPerTrigger)(
+      processBatch(summaryDir, capacity, keepGenerations))
+  }
 }

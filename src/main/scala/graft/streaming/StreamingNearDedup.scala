@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.IncrementalDedup
@@ -114,31 +113,16 @@ object StreamingNearDedup {
       } { compactFaultpoint(batchId) }
   }
 
-  def start(spark: SparkSession, inputDir: String, pairsDir: String,
-      indexDir: String, checkpointDir: String,
-      cap: Int = 50, threshold: Double = 0.5,
-      maxFilesPerTrigger: Int = 1,
-      availableNow: Boolean = false,
-      compactAfterFiles: Int = 64): StreamingQuery = {
-    Ddl.ensureTable(spark, indexDir, indexSchema)
-    Ddl.ensureTable(spark, pairsDir, pairsSchema)
-    val w = spark.readStream
-      .schema(StreamingDedup.inputSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(
-        processBatch(pairsDir, indexDir, cap, threshold, compactAfterFiles) _)
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
-
-  /** Run to completion over the currently-available input (AvailableNow). */
+  /** Drain the currently-available input (AvailableNow), one file per
+    * batch.
+    */
   def runOnce(spark: SparkSession, inputDir: String, pairsDir: String,
       indexDir: String, checkpointDir: String, cap: Int = 50,
-      threshold: Double = 0.5, maxFilesPerTrigger: Int = 1,
-      compactAfterFiles: Int = 64): Unit =
-    start(spark, inputDir, pairsDir, indexDir, checkpointDir, cap,
-      threshold, maxFilesPerTrigger, availableNow = true,
-      compactAfterFiles = compactAfterFiles).awaitTermination()
+      threshold: Double = 0.5, compactAfterFiles: Int = 64): Unit = {
+    Ddl.ensureTable(spark, indexDir, indexSchema)
+    Ddl.ensureTable(spark, pairsDir, pairsSchema)
+    EpochTable.drainFiles(spark, StreamingDedup.inputSchema, inputDir,
+      checkpointDir, maxFilesPerTrigger = 1)(
+      processBatch(pairsDir, indexDir, cap, threshold, compactAfterFiles))
+  }
 }

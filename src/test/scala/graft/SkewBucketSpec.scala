@@ -1,33 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Skew
 
-/** Scale-technique pins: salted joins preserve results while spreading
-  * hot keys; bucketed tables co-locate joins (no exchange before the
-  * join when both sides are bucketed on the key).
+/** Scale-technique pin: bucketed tables co-locate joins (no exchange
+  * before the join when both sides are bucketed on the key).
   */
 class SkewBucketSpec extends SparkSuite {
-  import spark.implicits._
-
-  test("salted join returns exactly the plain join's rows, with the " +
-      "salt in the shuffle key") {
-    val events = spark.read.parquet(sf("sf0.001") + "/events.parquet")
-      .select("event_id", "user_id", "event_type")
-    val dim = events.select(col("user_id")).distinct()
-      .withColumn("segment", (col("user_id") % 5).cast("long"))
-
-    val plain = events.join(dim, "user_id")
-      .select("event_id", "segment").as[(Long, Long)].collect().sorted.toSeq
-    val salted = Skew.saltedJoin(events, dim, "user_id", salts = 8)
-      .select("event_id", "segment").as[(Long, Long)].collect().sorted.toSeq
-    assert(salted == plain)
-
-    val plan = Skew.saltedJoin(events, dim, "user_id", salts = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("__salt"), plan)
-  }
-
   test("bucketed tables join without a shuffle exchange (co-located)") {
     val db = "graft_bucket_test"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")

@@ -140,4 +140,54 @@ class StreamingDecontamSpec extends SparkSuite {
       s"planted copies must match their eval twins at cos 1.0: " +
         late.mkString(", "))
   }
+
+  test("job budget: each corpus batch probes with at most 4 Spark jobs; " +
+      "the hot-bucket cap is not recounted per batch") {
+    graft.functions.TextHashes.register(spark)
+    val root = Files.createTempDirectory("sdc-budget").toString
+    val tables = DedupQueries.LshTables
+    val planes = DedupQueries.lshPlanes(spark, sf("sf0.001"))
+    StreamingDecontam.indexEval(spark, emb.filter(col("vec_id") % 7 === 0),
+      s"$root/idx", tables, planes)
+    val corpus = emb.filter(col("vec_id") % 7 =!= 0)
+    (0 until 3).foreach { k =>
+      corpus.filter(col("vec_id") % 3 === k)
+        .coalesce(1).write.mode("append").parquet(s"$root/in")
+    }
+    val jobs = jobsByBatch {
+      StreamingDecontam.runOnce(spark, s"$root/in", s"$root/out",
+        s"$root/ledger", s"$root/idx", s"$root/ckpt", tables, planes,
+        cosMin = cosMin)
+    }
+    val perBatch = jobs - ""
+    assert(perBatch.keySet == Set("0", "1", "2"), s"$jobs")
+    assert(perBatch.values.forall(_ <= 4), s"jobs per batch: $perBatch")
+    assert(spark.read.parquet(s"$root/ledger").count() == 3)
+  }
+
+  test("the hot-bucket cap: buckets holding more than capEval eval " +
+      "vectors are not probed") {
+    graft.functions.TextHashes.register(spark)
+    val root = Files.createTempDirectory("sdc-cap").toString
+    val tables = DedupQueries.LshTables
+    val planes = DedupQueries.lshPlanes(spark, sf("sf0.001"))
+    // five identical eval vectors share every bucket: 5 per bucket
+    val v = emb.orderBy(col("vec_id")).limit(1)
+    StreamingDecontam.indexEval(spark,
+      (0 until 5).map(i => v.withColumn("vec_id", lit(i.toLong)))
+        .reduce(_ union _), s"$root/idx", tables, planes)
+    v.withColumn("vec_id", lit(100L)).coalesce(1)
+      .write.parquet(s"$root/in")
+    def found(capEval: Int): Seq[(Long, Long)] = {
+      val run = s"$root/cap$capEval"
+      StreamingDecontam.runOnce(spark, s"$root/in", s"$run/out",
+        s"$run/ledger", s"$root/idx", s"$run/ckpt", tables, planes,
+        capEval = capEval, cosMin = cosMin)
+      StreamingDecontam.contamView(spark, s"$run/out")
+        .select(col("vec_id"), col("eval_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    assert(found(4).isEmpty)
+    assert(found(5) == Seq((100L, 0L)))
+  }
 }

@@ -53,6 +53,65 @@ class StreamingHeavyHittersSpec extends SparkSuite {
     }
   }
 
+  /** The PODS'12 merge of one exact batch count into a summary: pointwise
+    * sum, subtract the (capacity+1)-th largest count, drop counts ≤ 0.
+    */
+  private def mergeRef(summary: Map[String, Long], text: String,
+      capacity: Int): Map[String, Long] = {
+    val sum = text.split(" ").foldLeft(summary) { (m, t) =>
+      m.updated(t, m.getOrElse(t, 0L) + 1L)
+    }
+    val pivot = sum.values.toSeq.sorted(Ordering[Long].reverse)
+      .lift(capacity).getOrElse(0L)
+    sum.map { case (t, c) => t -> (c - pivot) }.filter(_._2 > 0)
+  }
+
+  // one file per batch; capacity 4 binds in batches 0, 1, 2, 3 and 5,
+  // with a tie at the pivot in 0, 2, 3 and 5
+  private val mergeTexts = Seq(
+    "a a a b b c d e",
+    "a b c c c d d f",
+    "a a b c d d e e",
+    "x y z w v",
+    "a c c d d d",
+    "d g g h h")
+
+  test("when capacity binds, the summary after every batch equals the " +
+      "PODS'12 merge of the batches' exact counts") {
+    val root = Files.createTempDirectory("graft-shh6").toString
+    val (in, sum, ckpt) = (s"$root/in", s"$root/sum", s"$root/ckpt")
+    val cap = 4
+    var want = Map.empty[String, Long]
+    var tiedPivots = 0
+    mergeTexts.zipWithIndex.foreach { case (t, i) =>
+      val counts = t.split(" ").foldLeft(want) { (m, w) =>
+        m.updated(w, m.getOrElse(w, 0L) + 1L) }.values.toSeq
+        .sorted(Ordering[Long].reverse)
+      if (counts.length > cap && counts(cap - 1) == counts(cap))
+        tiedPivots += 1
+      want = mergeRef(want, t, cap)
+      write(in, i.toLong, t)
+      StreamingHeavyHitters.runOnce(spark, in, sum, ckpt, capacity = cap)
+      val got = StreamingHeavyHitters.summary(spark, sum)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == want, s"after batch $i")
+    }
+    assert(tiedPivots >= 1 && want.nonEmpty, s"fixture: $tiedPivots, $want")
+  }
+
+  test("job budget: each batch merges with at most 2 Spark jobs") {
+    val root = Files.createTempDirectory("graft-shh7").toString
+    val (in, sum, ckpt) = (s"$root/in", s"$root/sum", s"$root/ckpt")
+    mergeTexts.zipWithIndex.foreach { case (t, i) => write(in, i.toLong, t) }
+    val jobs = jobsByBatch {
+      StreamingHeavyHitters.runOnce(spark, in, sum, ckpt, capacity = 4)
+    }
+    val perBatch = jobs - ""
+    assert(perBatch.keySet == mergeTexts.indices.map(_.toString).toSet,
+      s"$jobs")
+    assert(perBatch.values.forall(_ <= 2), s"jobs per batch: $perBatch")
+  }
+
   test("crash between consuming a batch and committing its generation: " +
       "replay produces the generation exactly once") {
     val root = Files.createTempDirectory("graft-shh2").toString
