@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.CandidatePairs
 import graft.queries.{DedupQueries, SimilarityQueries, Tables}
 
 /** Dual-implementation differential check (round-11 VERDICT #6): the five
@@ -42,7 +43,7 @@ object DualCheck {
           .as(Seq("band", "bkey")))
     val good = bands.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, DedupQueries.DfCap))
+      .filter(col("n").between(2, CandidatePairs.DfCap))
       .select(col("band"), col("bkey"))
     val bg = bands.join(good, Seq("band", "bkey"))
     bg.select(col("band"), col("bkey"),
@@ -71,7 +72,7 @@ object DualCheck {
           .as(Seq("table_id", "bucket")))
     val good = sigs.groupBy(col("table_id"), col("bucket"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, SimilarityQueries.GraphBucketCap))
+      .filter(col("n").between(2, CandidatePairs.VecBucketCap))
       .select(col("table_id"), col("bucket"))
     val bg = sigs.join(good, Seq("table_id", "bucket"))
     val pairs = bg.select(col("table_id"), col("bucket"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.CandidatePairs.{DfCap, VecBucketCap}
 import graft.queries.{DedupQueries, SimilarityQueries, Tables}
 
 /** Round-12 DualCheck twins: independent second implementations for the
@@ -356,7 +357,7 @@ object DualCheckTwins {
           .as(Seq("band", "bkey")))
     val good = bands.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, DedupQueries.DfCap))
+      .filter(col("n").between(2, DfCap))
       .select(col("band"), col("bkey"))
     val bg = bands.join(good, Seq("band", "bkey"))
     bg.filter(col("side") === 0)
@@ -392,7 +393,7 @@ object DualCheckTwins {
     * join, not ordered_pairs over a collected posting list.
     */
   def winnowPairsJoin(s: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.{DfCap, WinnowK, WinnowMinShared, WinnowW}
+    import DedupQueries.{WinnowK, WinnowMinShared, WinnowW}
     val fp = Tables.scan(s, dir, "documents")
       .select(col("doc_id"),
         explode(expr(s"winnow_fingerprint(text, $WinnowK, $WinnowW)"))
@@ -428,7 +429,6 @@ object DualCheckTwins {
     * instead of the primary's capped bucket-collect + struct_pairs.
     */
   def simhashPairsJoin(s: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.DfCap
     val bands = Tables.scan(s, dir, "documents")
       .select(col("doc_id"), expr(s"simhash64(${DedupQueries.toks})").as("sh"))
       .select(col("doc_id"), col("sh"),
@@ -459,7 +459,7 @@ object DualCheckTwins {
     * struct_pairs.
     */
   def embeddingNearJoin(s: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.{EmbCosMin, LshTables, VecBucketCap}
+    import DedupQueries.{EmbCosMin, LshTables}
     val pl = DedupQueries.lshPlanes(s, dir)
     val b = Tables.scan(s, dir, "embeddings")
       .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
@@ -488,7 +488,7 @@ object DualCheckTwins {
     * instead of bucket-collect + large-star/small-star.
     */
   def semanticSurvivorsTwin(s: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.{LshTables, SemCosMin, VecBucketCap}
+    import DedupQueries.{LshTables, SemCosMin}
     val pl = DedupQueries.lshPlanes(s, dir)
     val emb = Tables.scan(s, dir, "embeddings")
     val b = emb.select(col("vec_id"), col("label"), col("embedding"),
@@ -528,7 +528,7 @@ object DualCheckTwins {
     * split mapping is the shared contract.
     */
   def splitLeakproofTwin(s: SparkSession, dir: String): DataFrame = {
-    import DedupQueries.{DfCap, JaccardMin}
+    import DedupQueries.JaccardMin
     val docs = Tables.scan(s, dir, "documents")
     val ex = docs.select(col("doc_id"),
       explode(expr(s"shingle_hashes(${DedupQueries.toks}, 3)")).as("sh"))

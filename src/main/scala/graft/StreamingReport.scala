@@ -392,7 +392,7 @@ object StreamingReport {
       val m = CurationQueries.DecontamMod
       val planes = DedupQueries.lshPlanes(spark, sfDir)
       val tables = DedupQueries.LshTables
-      val cap = DedupQueries.VecBucketCap
+      val cap = graft.operators.CandidatePairs.VecBucketCap
       // parity precondition: no bucket over the cap on the FULL corpus
       val maxOcc = emb.select(
           posexplode(expr(s"lsh_buckets(embedding, $tables, $planes)"))

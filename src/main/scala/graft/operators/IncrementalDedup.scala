@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *    exchange. With the index table stored bucketed by (band, bkey)
   *    (SkewBucketSpec shows the zero-exchange read), only the delta —
   *    typically orders of magnitude smaller — shuffles at all.
-  *  - buckets are capped like every candidate generator in this engine
-  *    (an uncapped boilerplate bucket is n²/2 pairs in one task); hot
-  *    buckets drop, recall is recovered across the other bands.
+  *  - buckets are capped by [[CandidatePairs]] like every candidate
+  *    generator in this engine; hot buckets drop, recall is recovered
+  *    across the other bands.
   */
 object IncrementalDedup {
 
@@ -58,11 +58,8 @@ object IncrementalDedup {
         col("bkey"), col("doc_id"), col("sig"))
       .unionByName(deltaIndex.select(lit(1).as("side"), col("band"),
         col("bkey"), col("doc_id"), col("sig")))
-    tagged.groupBy(col("band"), col("bkey"))
-      .agg(expr("sort_array(collect_list(struct(side, doc_id, sig)))")
-        .as("ds"))
-      .filter(size(col("ds")).between(2, cap))
-      .select(explode(expr("struct_pairs(ds)")).as("p"))
+    CandidatePairs.collected(tagged, "incremental", Seq("band", "bkey"),
+        struct("side", "doc_id", "sig"), cap)
       // sort order puts side=0 (corpus) before side=1 (delta) in every
       // pair, so a cross-side pair is exactly (a=corpus, b=delta)
       .filter(col("p.a.side") === 0 && col("p.b.side") === 1)

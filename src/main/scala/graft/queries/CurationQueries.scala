@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
 import OracleSql.fnvSql
+import graft.operators.CandidatePairs
 
 /** Corpus-curation operators — the remaining pillars of a training-data
   * pipeline beyond dedup/similarity/ranking: repetition quality signals
@@ -211,9 +212,9 @@ object CurationQueries {
     // a window seen in >1 distinct document marks verbatim cross-doc
     // duplication (the fixed-window form of suffix-array dedup). Group
     // keys are the window text for oracle comparability; the 100 TB form
-    // groups on xxhash64(window) — same pairs, 8-byte shuffle keys. The
-    // ≤64-doc cap bounds the hottest window (boilerplate) exactly like
-    // the near-dup candidate caps.
+    // groups on xxhash64(window) — same pairs, 8-byte shuffle keys.
+    // Windows shared by more than WindowDocCap docs are boilerplate and
+    // dropped, as dedup_cdc_chunks drops chunks.
     "dedup_window_pairs" -> ((s, dir) =>
       load(s, dir, "documents")
         .select(col("doc_id"),
@@ -221,7 +222,7 @@ object CurationQueries {
         .groupBy(col("win"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
           count(lit(1)).as("n_hits"))
-        .filter(col("n_docs").between(2, 64))
+        .filter(col("n_docs").between(2, DedupQueries.WindowDocCap))
         .select(col("win"), col("n_docs").cast("bigint").as("n_docs"),
           col("n_hits").cast("bigint").as("n_hits"))
         .orderBy(col("win"))),
@@ -295,17 +296,13 @@ object CurationQueries {
         posexplode(
           expr(s"lsh_buckets(embedding, ${DedupQueries.LshTables}, $pl)"))
           .as(Seq("table_id", "bucket")))
-      val good = b.groupBy(col("table_id"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, DedupQueries.VecBucketCap))
-        .select(col("table_id"), col("bucket"))
       // Round-15 lineage cut: bg feeds BOTH candidate sides (corpus probe
       // and eval build) and each reference re-ran the LSH bucket explode +
       // cap join (no ReuseExchange across the differently-filtered
       // subtrees). One AQE-planned temp-parquet evaluation — 3-long rows,
       // corpus-growing, so the distributed cut, not a collect.
-      val bg = DedupQueries.materialize(s,
-        b.join(good, Seq("table_id", "bucket")))
+      val bg = DedupQueries.materialize(s, CandidatePairs
+        .inCappedBuckets(b, "decontam_semantic", Seq("table_id", "bucket")))
       val cand = bg.filter(col("vec_id") % m =!= 0)
         .join(bg.filter(col("vec_id") % m === 0)
             .select(col("table_id"), col("bucket"),
@@ -543,7 +540,7 @@ object CurationQueries {
                 CAST(top_cnt AS DOUBLE) / n_words AS top_word_frac
          FROM pd JOIN top USING (doc_id) ORDER BY doc_id""",
     "dedup_window_pairs" ->
-      """WITH w AS (SELECT doc_id,
+      s"""WITH w AS (SELECT doc_id,
                            substr(text, 1 + 32*i, 64) AS win
                     FROM documents,
                          UNNEST(RANGE(0, ((LEN(text)-64)//32) + 1)) AS u(i)
@@ -553,7 +550,8 @@ object CurationQueries {
                     FROM w GROUP BY win)
          SELECT win, CAST(n_docs AS BIGINT) AS n_docs,
                 CAST(n_hits AS BIGINT) AS n_hits
-         FROM g WHERE n_docs BETWEEN 2 AND 64 ORDER BY win""",
+         FROM g WHERE n_docs BETWEEN 2 AND ${DedupQueries.WindowDocCap}
+         ORDER BY win""",
     // Full LSH replay (same HUGEINT bucket chain as dedup_embedding_near's
     // oracle, single-sourced plane count via DedupQueries.duckPl), then
     // exact cosine on the candidate pairs only — the oracle computes the
@@ -584,7 +582,7 @@ object CurationQueries {
                        FROM bkt c
                        JOIN bkt e ON e.t = c.t AND e.bucket = c.bucket
                        JOIN grp g ON g.t = c.t AND g.bucket = c.bucket
-                       WHERE g.n BETWEEN 2 AND ${DedupQueries.VecBucketCap}
+                       WHERE g.n BETWEEN 2 AND ${CandidatePairs.VecBucketCap}
                          AND c.vec_id % $DecontamMod <> 0
                          AND e.vec_id % $DecontamMod = 0),
               nrm AS (SELECT vec_id, SQRT(SUM(x * x)) AS nrm

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextHashes
-import graft.operators.ConnectedComponents
+import graft.operators.{CandidatePairs, ConnectedComponents, IncrementalDedup}
+import graft.operators.CandidatePairs.{DfCap, VecBucketCap}
 import Tables._
 
 /** Deduplication operators over the `documents` table — the training-data
@@ -37,14 +38,12 @@ object DedupQueries {
   // (shingle_hashes / minhash_ngrams, graft.functions.TextHashes): <3-token
   // docs yield an empty signature, matching DuckDB's empty range(1, 0).
   // Shingles occurring in more than DfCap documents are dropped before the
-  // candidate join — bounds pair fan-out per shingle at scale.
-  private[graft] val DfCap = 50
-  // Embedding-LSH buckets get a larger cap: clustered embeddings
-  // legitimately co-bucket whole semantic clusters (~10% of a label at 6
-  // planes), so the shingle df-cap would drop real neighborhoods. Any
-  // constant bounds the worst bucket's pair fan-out (≤ cap²/2 ≈ 20k pairs
-  // per task) — the point is an upper bound, not shingle-level sparsity.
-  private[graft] val VecBucketCap = 200
+  // candidate join — bounds pair fan-out per shingle at scale. DfCap and
+  // the embedding-LSH VecBucketCap live with the candidate-pair operator.
+  // A substring window or content-defined chunk shared by more than
+  // WindowDocCap documents is boilerplate, not reported as a duplicate
+  // (dedup_window_pairs, dedup_cdc_chunks and both their oracles).
+  private[graft] val WindowDocCap = 64
 
   /** Distributed lineage cut: evaluate `df` ONCE under the normal
     * AQE-planned path by writing it to a session-temp parquet table and
@@ -69,16 +68,6 @@ object DedupQueries {
       dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
     dirs
   }
-
-  // Corpus doc count for the prefix-pairs activation floor — cached per
-  // dir like SimilarityQueries.embCount (footer-only count, but the bench
-  // re-invokes the query every trial).
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def docCount(s: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
-    docCountCache.computeIfAbsent(dir,
-      d => scan(s, d, "documents").count()).longValue()
 
   // Embedding-LSH knobs, shared by dedup_embedding_near and the semantic
   // dedup — interpolated into BOTH the Spark queries and their oracle SQL
@@ -230,9 +219,8 @@ object DedupQueries {
           max = Long.MaxValue)
       val checkMin = knob("graft.prefixPairsCheckMin",
         "SPARK_GRAFT_PREFIX_PAIRS_CHECK_MIN", 100000L)
-      // cached per (session, dir) like embCount — the activation test
-      // costs one metadata-only count the FIRST time, nothing after
-      if (docCount(s, dir) >= checkMin) {
+      // the activation test costs one metadata-only count job per call
+      if (scan(s, dir, "documents").count() >= checkMin) {
         val maxPairs = knob("graft.prefixPairsMax",
           "SPARK_GRAFT_PREFIX_PAIRS_MAX", 100000000L)
         val est = dfreq.agg(
@@ -575,15 +563,15 @@ object DedupQueries {
     // miss after an insertion). Bit-exact oracle (the Gear boundary test
     // only sees the low 5 bits, so it replays as a 5-term LAG window);
     // edit-locality and dup-coverage additionally pinned in
-    // TextHashesSpec/DedupSimilaritySpec. Same ≤64-doc bucket cap as
-    // every candidate generator.
+    // TextHashesSpec/DedupSimilaritySpec. Chunks shared by more than
+    // WindowDocCap docs are dropped, as dedup_window_pairs drops windows.
     "dedup_cdc_chunks" -> ((s, dir) =>
       load(s, dir, "documents")
         .select(col("doc_id"), explode(expr("cdc_chunks(text, 5)")).as("ch"))
         .groupBy(col("ch"))
         .agg(countDistinct(col("doc_id")).as("n_docs"),
           count(lit(1)).as("n_hits"))
-        .filter(col("n_docs").between(2, 64))
+        .filter(col("n_docs").between(2, WindowDocCap))
         .select(col("ch"), col("n_docs").cast("bigint").as("n_docs"),
           col("n_hits").cast("bigint").as("n_hits"))
         .orderBy(col("ch"))),
@@ -603,32 +591,16 @@ object DedupQueries {
     // never ReuseExchange), and that CPU dwarfs the signature bytes saved
     // from the shuffle at any SF where compute ∝ shuffle volume.
     "dedup_minhash_pairs" -> ((s, dir) => {
-      // minhash_ngrams fuses shingling + MinHash in one codegen'd pass
-      // (bit-identical signature — duplicate shingles can't lower a min —
-      // A/B 3.8 s → 0.3 s at sf0.1, pinned by TextHashesSpec)
-      // Band key = the 4-long slice ITSELF (not a hash of it): bucket
-      // equality is exactly slice equality — no collision term in the
-      // candidate set, and the key replays verbatim in the DuckDB oracle
-      // (which promoted this query to bit-exact). The exchange carries 32
-      // key bytes instead of 8; at any SF the band shuffle is dwarfed by
-      // the signature payload it already carries.
-      val bands = load(s, dir, "documents")
-        .select(col("doc_id"), expr(s"minhash_ngrams($toks, 3, 32)").as("sig"))
-        .select(col("doc_id"), col("sig"),
-          posexplode(expr(
-            "transform(sequence(0, 7), b -> slice(sig, b * 4 + 1, 4))"))
-            .as(Seq("band", "bkey")))
-      // Cap as well as floor the bucket: a duplicate-heavy corpus (the
-      // input of a dedup pipeline) puts every copy of a boilerplate doc in
-      // the same band bucket — an uncapped bucket is n²/2 pairs in ONE
-      // task. Over-full buckets are dropped; their pairs are recovered by
-      // the other 7 bands (recall pinned in DedupSimilaritySpec).
-      bands.groupBy(col("band"), col("bkey"))
-        .agg(expr("sort_array(collect_list(struct(doc_id, sig)))").as("ds"))
-        .filter(size(col("ds")).between(2, DfCap))
-        // struct_pairs + sig_match: the whole pair path is native (no
-        // interpreted lambda per pair)
-        .select(explode(expr("struct_pairs(ds)")).as("p"))
+      // The banding is IncrementalDedup.buildIndex: minhash_ngrams fuses
+      // shingling + MinHash in one codegen'd pass, and the band key is the
+      // 4-long slice ITSELF (not a hash of it), so bucket equality is
+      // exactly slice equality and the key replays verbatim in the DuckDB
+      // oracle. Over-full buckets (every copy of a boilerplate doc) are
+      // dropped; their pairs are recovered by the other 7 bands (recall
+      // pinned in DedupSimilaritySpec).
+      CandidatePairs.collected(
+          IncrementalDedup.buildIndex(load(s, dir, "documents")), "minhash",
+          Seq("band", "bkey"), struct("doc_id", "sig"))
         .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
           (expr("sig_match(p.a.sig, p.b.sig)").cast("double") / 32.0)
             .as("est"))
@@ -645,7 +617,6 @@ object DedupQueries {
     // Same signature kernels as dedup_minhash_pairs, so the estimates
     // replay bit-exactly in the oracle; same 2..DfCap bucket cap.
     "dedup_incremental_pairs" -> ((s, dir) => {
-      import graft.operators.IncrementalDedup
       val isDelta = conv(substring(md5(concat(lit("delta:"),
         col("doc_id").cast("string"))), 1, 2), 16, 10).cast("int") < 26
       val docs = load(s, dir, "documents")
@@ -693,26 +664,11 @@ object DedupQueries {
         .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
           posexplode(expr(s"lsh_buckets(embedding, $LshTables, $pl)"))
             .as(Seq("table_id", "bucket")))
-      // Capped like minhash/winnow: an over-full bucket (many identical
-      // vectors hash to the same cell in every table) would otherwise
-      // explode n²/2 pairs in one task AND collect n full 64-float vectors
-      // into a single aggregation buffer. Dropped buckets' pairs are
-      // recovered by the other 5 tables (recall pinned). Bucket IDS are
-      // pre-filtered before the vector exchange (the count agg ships only
-      // partial counts), so over-full buckets' vectors never shuffle. No
-      // forced broadcast: with auto-sized planes the qualifying list is
-      // O(n/occupancy) keys — KBs at the gate SFs (AQE broadcasts it
-      // there anyway) but not something to pin to the driver at petabyte
-      // corpus sizes (same reasoning as knnGraphEdges).
-      val good = b.groupBy(col("table_id"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, VecBucketCap))
-        .select(col("table_id"), col("bucket"))
-      val cands = b.join(good, Seq("table_id", "bucket"))
-        .groupBy(col("table_id"), col("bucket"))
-        .agg(expr("sort_array(collect_list(struct(vec_id, ne)))").as("vs"))
-        // struct_pairs + vec_dot: fully native pair path
-        .select(explode(expr("struct_pairs(vs)")).as("p"))
+      // An over-full bucket (many identical vectors hash to the same cell
+      // in every table) is dropped before its 64-float vectors shuffle;
+      // its pairs are recovered by the other 5 tables (recall pinned).
+      val cands = CandidatePairs.prefiltered(b, "embedding_near",
+          Seq("table_id", "bucket"), struct("vec_id", "ne"))
         .select(col("p.a.vec_id").as("vec_a"), col("p.b.vec_id").as("vec_b"),
           round(expr("vec_dot(p.a.ne, p.b.ne)"), 6).as("cos"))
         .groupBy(col("vec_a"), col("vec_b")).agg(max(col("cos")).as("cos"))
@@ -754,16 +710,9 @@ object DedupQueries {
         posexplode(expr(s"lsh_buckets(embedding, $LshTables, $pl)"))
           .as(Seq("table_id", "bucket")))
       // same bucket-id pre-filter as dedup_embedding_near, keyed by
-      // (label, table, bucket); unforced for the same sizing reason
-      val good = b.groupBy(col("label"), col("table_id"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, VecBucketCap))
-        .select(col("label"), col("table_id"), col("bucket"))
-      val pairs = b.join(good, Seq("label", "table_id", "bucket"))
-        .groupBy(col("label"), col("table_id"), col("bucket"))
-        .agg(expr("sort_array(collect_list(struct(vec_id, embedding)))")
-          .as("vs"))
-        .select(explode(expr("struct_pairs(vs)")).as("p"))
+      // (label, table, bucket)
+      val pairs = CandidatePairs.prefiltered(b, "semantic",
+          Seq("label", "table_id", "bucket"), struct("vec_id", "embedding"))
         .select(col("p.a.vec_id").as("va"), col("p.b.vec_id").as("vb"),
           round(expr("vec_cos(p.a.embedding, p.b.embedding)"), 6).as("cos"))
         .groupBy(col("va"), col("vb")).agg(max(col("cos")).as("cos"))
@@ -789,29 +738,16 @@ object DedupQueries {
     // than the full shingle index — the cheap first-pass at 100 TB.
     // Bit-exact oracle (same window-minima replay as text_fingerprint).
     //
-    // No silent caps (round-14 VERDICT #8): at sf10's 100-replica corpus
-    // the DfCap drops EVERY bucket (each fingerprint lives in ≥100 docs),
-    // which is correct per the cap contract but must not be invisible — a
-    // real corpus with hot boilerplate would lose those pairs the same
-    // way. The dropped-bucket count and posting mass ride the existing
-    // aggregation pass as an OBSERVED metric (zero extra jobs), logged by
-    // CapDrops' listener on every action and pinned in CapDropsSpec.
+    // At sf10's 100-replica corpus the DfCap drops EVERY bucket (each
+    // fingerprint lives in ≥100 docs): correct per the cap contract, and
+    // observed like every capped generator's drops (pinned in
+    // CapDropsSpec).
     "dedup_winnow_pairs" -> ((s, dir) => {
-      CapDrops.ensureListener(s)
       val fp = load(s, dir, "documents")
         .select(col("doc_id"),
           explode(expr(s"winnow_fingerprint(text, $WinnowK, $WinnowW)"))
             .as("f"))
-      fp.groupBy(col("f"))
-        .agg(expr("sort_array(collect_list(doc_id))").as("ds"))
-        .observe(s"graft_dropped_winnow_${CapDrops.nextId()}",
-          count(when(size(col("ds")) > DfCap, lit(1)))
-            .as("dropped_buckets"),
-          coalesce(sum(when(size(col("ds")) > DfCap,
-            size(col("ds")).cast("long"))), lit(0L)).as("dropped_postings"),
-          count(lit(1)).as("total_buckets"))
-        .filter(size(col("ds")).between(2, DfCap))
-        .select(explode(expr("ordered_pairs(ds)")).as("p"))
+      CandidatePairs.collected(fp, "winnow", Seq("f"), col("doc_id"))
         .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
         .agg(count(lit(1)).cast("long").as("shared_fp"))
         .filter(col("shared_fp") >= WinnowMinShared)
@@ -819,7 +755,7 @@ object DedupQueries {
     }),
 
     // Companion drop audit for the winnow cap — ORACLE-GATED telemetry
-    // (round-14 VERDICT #8). The observed metric above logs the drop on
+    // (round-14 VERDICT #8). The observed metric logs the drop on
     // every non-empty run, but AQE's empty-relation propagation replaces
     // the plan subtree (CollectMetrics included) exactly when EVERYTHING
     // was dropped and the result is empty — the case that most needs the
@@ -851,14 +787,9 @@ object DedupQueries {
       val bands = load(s, dir, "documents")
         .select(col("doc_id"), expr(s"simhash64($toks)").as("sh"))
         .select(col("doc_id"), col("sh"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> shiftrightunsigned(sh, b * 16) & 65535)"))
-            .as(Seq("band", "bkey")))
-      bands.groupBy(col("band"), col("bkey"))
-        .agg(expr("sort_array(collect_list(struct(doc_id, sh)))").as("ds"))
-        .filter(size(col("ds")).between(2, DfCap))
-        // struct_pairs + native xor/bit_count: no interpreted lambda
-        .select(explode(expr("struct_pairs(ds)")).as("p"))
+          posexplode(CandidatePairs.bands16("sh")).as(Seq("band", "bkey")))
+      CandidatePairs.collected(bands, "simhash", Seq("band", "bkey"),
+          struct("doc_id", "sh"))
         .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
           expr("cast(bit_count(p.a.sh ^ p.b.sh) as bigint)").as("hamming"))
         .groupBy(col("doc_a"), col("doc_b"))
@@ -1538,7 +1469,7 @@ object DedupQueries {
     // hash mod 32 is a 5-term weighted LAG window over the per-byte gear
     // values (gear = splitmix64(byte), mod 32 up front) — no sequential
     // fold needed. Chunk = [prev boundary + 1, boundary]; chunk key = FNV
-    // of the substring; same ≤64-doc cap as the engine.
+    // of the substring; same WindowDocCap as the engine.
     "dedup_cdc_chunks" ->
       s"""WITH g32 AS (
             SELECT b, gm % 32 AS g FROM (${OracleSql.mix64ChainSql("b",
@@ -1573,7 +1504,7 @@ object DedupQueries {
           SELECT ch, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
                  CAST(COUNT(*) AS BIGINT) AS n_hits
           FROM chs GROUP BY ch
-          HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND 64
+          HAVING COUNT(DISTINCT doc_id) BETWEEN 2 AND $WindowDocCap
           ORDER BY ch""",
     // Paragraph dedup: the same non-overlapping segmentation (DuckDB list
     // slice is inclusive-both-ends, so [a : a+ParaLen-1] = Spark's

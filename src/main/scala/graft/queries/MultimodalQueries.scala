@@ -1,7 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.operators.Multimodal
+import graft.operators.{CandidatePairs, Multimodal}
+import graft.operators.CandidatePairs.DfCap
 import Tables._
 
 /** Multimodal-column queries over the media table derived from `documents`
@@ -9,12 +10,6 @@ import Tables._
   * this container); schema/partitioning/rollup are the real surface.
   */
 object MultimodalQueries {
-
-  /** Same hot-band guard as the text near-dup generators (DedupQueries):
-    * a band bucket holding more than this many media is dropped, its pairs
-    * recovered by the other bands — never exploded quadratically.
-    */
-  private val BandCap = 50
 
   /** dHash Hamming threshold (of 64): exact dups are 0; planted token-level
     * near-dups land ≤ 6; the background pair distribution sits at median 26
@@ -96,14 +91,10 @@ object MultimodalQueries {
         .filter(col("kind") === "image")
         .select(col("media_id"),
           expr("dhash64(split(cast(content as string), ' '))").as("dh"))
-      img.select(col("media_id"), col("dh"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> shiftrightunsigned(dh, b * 16) & 65535)"))
-            .as(Seq("band", "bkey")))
-        .groupBy(col("band"), col("bkey"))
-        .agg(expr("sort_array(collect_list(struct(media_id, dh)))").as("ds"))
-        .filter(size(col("ds")).between(2, BandCap))
-        .select(explode(expr("struct_pairs(ds)")).as("p"))
+      val bands = img.select(col("media_id"), col("dh"),
+        posexplode(CandidatePairs.bands16("dh")).as(Seq("band", "bkey")))
+      CandidatePairs.collected(bands, "phash", Seq("band", "bkey"),
+          struct("media_id", "dh"))
         .select(col("p.a.media_id").as("media_a"),
           col("p.b.media_id").as("media_b"),
           expr("cast(bit_count(p.a.dh ^ p.b.dh) as bigint)").as("hamming"))
@@ -123,7 +114,7 @@ object MultimodalQueries {
     // re-encodes with localized edits (only the touched windows move)
     // the way image dHash catches resizes. Candidate pairs come from the
     // one keyed exchange on the exact frame signature, bucket-capped at
-    // BandCap like every near-dup family here — never all-pairs: at
+    // DfCap like every near-dup family here — never all-pairs: at
     // 100 TB a boilerplate window shared by millions of videos is
     // dropped (loudly, by the same cap the oracle replays), not exploded
     // quadratically; the per-video signature-set collect is bounded by
@@ -144,10 +135,8 @@ object MultimodalQueries {
         .agg(collect_set(col("sig")).as("ss"))
         .select(col("media_id"), size(col("ss")).cast("bigint").as("nsig"),
           explode(col("ss")).as("sig"))
-      vsets.groupBy(col("sig"))
-        .agg(expr("sort_array(collect_list(struct(media_id, nsig)))").as("vs"))
-        .filter(size(col("vs")).between(2, BandCap))
-        .select(explode(expr("struct_pairs(vs)")).as("p"))
+      CandidatePairs.collected(vsets, "video", Seq("sig"),
+          struct("media_id", "nsig"))
         .groupBy(col("p.a.media_id").as("media_a"),
           col("p.b.media_id").as("media_b"),
           col("p.a.nsig").as("n_a"), col("p.b.nsig").as("n_b"))
@@ -199,14 +188,10 @@ object MultimodalQueries {
                    ${energy("b * 2 + 1")} < ${energy("b * 2 + 3")},
                    shiftleft(cast(1 as bigint), b), cast(0 as bigint)))""")
             .as("fp"))
-      au.select(col("media_id"), col("fp"),
-          posexplode(expr(
-            "transform(sequence(0, 3), b -> shiftrightunsigned(fp, b * 16) & 65535)"))
-            .as(Seq("band", "bkey")))
-        .groupBy(col("band"), col("bkey"))
-        .agg(expr("sort_array(collect_list(struct(media_id, fp)))").as("ds"))
-        .filter(size(col("ds")).between(2, BandCap))
-        .select(explode(expr("struct_pairs(ds)")).as("p"))
+      val bands = au.select(col("media_id"), col("fp"),
+        posexplode(CandidatePairs.bands16("fp")).as(Seq("band", "bkey")))
+      CandidatePairs.collected(bands, "audio", Seq("band", "bkey"),
+          struct("media_id", "fp"))
         .select(col("p.a.media_id").as("media_a"),
           col("p.b.media_id").as("media_b"),
           expr("cast(bit_count(p.a.fp ^ p.b.fp) as bigint)").as("hamming"))
@@ -305,7 +290,7 @@ object MultimodalQueries {
                    JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
                                AND a.media_id < b.media_id
                    JOIN grp g ON g.band = a.band AND g.bkey = a.bkey
-                   WHERE g.n BETWEEN 2 AND $BandCap),
+                   WHERE g.n BETWEEN 2 AND $DfCap),
           ham AS (SELECT media_a, media_b,
                          MIN(bit_count(xor(${OracleSql.signedSql("ua")},
                                            ${OracleSql.signedSql("ub")}))) AS hamming
@@ -361,7 +346,7 @@ object MultimodalQueries {
                    FROM sized a
                    JOIN sized b ON a.sig = b.sig AND a.media_id < b.media_id
                    JOIN grp g ON g.sig = a.sig
-                   WHERE g.n BETWEEN 2 AND $BandCap),
+                   WHERE g.n BETWEEN 2 AND $DfCap),
           agg AS (SELECT media_a, media_b, n_a, n_b, COUNT(*) AS shared_frames
                   FROM cand GROUP BY 1, 2, 3, 4)
           SELECT media_a, media_b, shared_frames,
@@ -400,7 +385,7 @@ object MultimodalQueries {
                    JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
                                AND a.media_id < b.media_id
                    JOIN grp g ON g.band = a.band AND g.bkey = a.bkey
-                   WHERE g.n BETWEEN 2 AND $BandCap),
+                   WHERE g.n BETWEEN 2 AND $DfCap),
           ham AS (SELECT media_a, media_b,
                          MIN(bit_count(xor(${OracleSql.signedSql("ua")},
                                            ${OracleSql.signedSql("ub")}))) AS hamming

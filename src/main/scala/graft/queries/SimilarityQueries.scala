@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import Tables._
+import graft.operators.CandidatePairs
+import graft.operators.CandidatePairs.VecBucketCap
 
 /** Similarity-search operators over the `embeddings` table (vec_id BIGINT,
   * embedding ARRAY<FLOAT> 64-dim, label INT) — SURVEY.md §7 step 6.
@@ -36,11 +38,6 @@ object SimilarityQueries {
 
   private val NQueries = 10 // vec_id < 10 are the query vectors
   private[graft] val TopK = 5
-  // kNN-graph bucket cap: same role (and value) as DedupQueries'
-  // VecBucketCap — bounds the worst bucket's pair fan-out (≤ cap²/2 pairs
-  // per task) without assuming the bucket histogram; replayed verbatim in
-  // the oracle so the cap is part of the checked contract.
-  private[graft] val GraphBucketCap = 200
   // kNN-graph LSH sizing, single-sourced into the engine AND the oracle's
   // pl CTE: tables is fixed; the plane count auto-sizes to the smallest
   // p in [6, GraphMaxPlanes] with 2^p · GraphOccupancy ≥ corpus, keeping
@@ -52,15 +49,10 @@ object SimilarityQueries {
   private[graft] def autoPlanes(n: Long): Int =
     (6 to GraphMaxPlanes).find(p => (1L << p) * GraphOccupancy >= n)
       .getOrElse(GraphMaxPlanes)
-  // Corpus-count cache (same shape as TextQueries' trained-BPE cache):
-  // the count is a parquet-footer-only job, but the graph queries call
-  // knnGraphEdges repeatedly per bench trial.
-  private val embCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  // The corpus count that sizes the planes: one metadata-only count job
+  // per call, so a corpus rewritten at the same path is sized afresh.
   private[graft] def embCount(s: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
-    embCountCache.computeIfAbsent(dir,
-      d => scan(s, d, "embeddings").count()).longValue()
+      dir: String): Long = scan(s, dir, "embeddings").count()
   // Farthest-point coreset size — single-sourced into the engine query
   // AND the unrolled oracle so the two sides cannot desynchronize.
   private val CoresetK = 16
@@ -502,7 +494,7 @@ object SimilarityQueries {
     */
   def knnGraphEdges(s: org.apache.spark.sql.SparkSession,
       dir: String, tables: Int = GraphTables, planes: Int = 0,
-      cap: Int = GraphBucketCap, k: Int = TopK,
+      cap: Int = VecBucketCap, k: Int = TopK,
       cut: Option[Boolean] = None): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val pl = if (planes > 0) planes else autoPlanes(embCount(s, dir))
@@ -510,20 +502,10 @@ object SimilarityQueries {
         .select(col("vec_id"), expr("vec_normalize(embedding)").as("ne"),
           posexplode(expr(s"lsh_buckets(embedding, $tables, $pl)"))
             .as(Seq("table_id", "bucket")))
-      // Pre-filter bucket IDS before shuffling vectors: the count agg
-      // ships only (table, bucket, partial count), and over-full buckets'
-      // vectors never enter the candidate exchange at all — collect-then-
-      // drop would shuffle every 64-float vector of every dropped bucket
-      // first (at sf0.1 most buckets exceed the cap: that's most of the
-      // corpus × 4 tables of avoided shuffle). No broadcast hint: with
-      // auto-sized planes the qualifying-bucket list is O(n/occupancy)
-      // keys — KBs at the gate SFs (where AQE's size-based planning
-      // broadcasts it anyway) but too large to FORCE onto the driver at
-      // petabyte corpus sizes, where a shuffle join is the right plan.
-      val good = sigs.groupBy(col("table_id"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n").between(2, cap))
-        .select(col("table_id"), col("bucket"))
+      // Pre-filter bucket IDS before shuffling vectors (the prefiltered
+      // shape): collect-then-drop would shuffle every 64-float vector of
+      // every dropped bucket first (at sf0.1 most buckets exceed the cap:
+      // that's most of the corpus × 4 tables of avoided shuffle).
       // Round-16 single-pass symmetrization (VERDICT r15 #6). The old
       // form referenced `pairs` twice (the symmetrizing union) and
       // `edges` twice (the mutuality reverse join) — DataFrame subtrees
@@ -547,10 +529,8 @@ object SimilarityQueries {
       // row_number ordering (cos desc, vb), same mutual predicate.
       // Multi-consumer callers (sim_label_audit reads the RESULT twice)
       // still materialize the finished edge list via cut = Some(true).
-      val sym = sigs.join(good, Seq("table_id", "bucket"))
-        .groupBy(col("table_id"), col("bucket"))
-        .agg(expr("sort_array(collect_list(struct(vec_id, ne)))").as("vs"))
-        .select(explode(expr("struct_pairs(vs)")).as("p"))
+      val sym = CandidatePairs.prefiltered(sigs, "knn_graph",
+          Seq("table_id", "bucket"), struct("vec_id", "ne"), cap)
         .select(col("p.a.vec_id").as("a"), col("p.b.vec_id").as("b"),
           round(expr("vec_dot(p.a.ne, p.b.ne)"), 6).as("c"))
         .select(expr("inline(array(struct(a as va, b as vb, c as cos), " +
@@ -1116,7 +1096,7 @@ object SimilarityQueries {
     * same-object forward val reference would read null at init.
     *
     * All constants interpolated from the SAME vals the engine call uses
-    * (GraphTables/GraphOccupancy/GraphMaxPlanes/GraphBucketCap/TopK), and
+    * (GraphTables/GraphOccupancy/GraphMaxPlanes/VecBucketCap/TopK), and
     * the plane count derived IN SQL from COUNT(*) with the engine's exact
     * integer rule — the oracle cannot drift from the registered query
     * even if the sizing parameters change (round-8 ADVICE.md).
@@ -1153,7 +1133,7 @@ object SimilarityQueries {
             JOIN bkt b ON a.t = b.t AND a.bucket = b.bucket
                       AND a.vec_id < b.vec_id
             JOIN grp g ON g.t = a.t AND g.bucket = a.bucket
-            WHERE g.n BETWEEN 2 AND $GraphBucketCap),
+            WHERE g.n BETWEEN 2 AND $VecBucketCap),
           nrm AS (SELECT vec_id, SQRT(SUM(x * x)) AS nrm
                   FROM d GROUP BY vec_id),
           nd AS (SELECT d.vec_id, d.dim, d.x / nrm.nrm AS xn

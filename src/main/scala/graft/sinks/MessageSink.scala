@@ -30,10 +30,12 @@ import graft.streaming.{EpochTable, ParquetIO, StreamingCdc}
   *  1. Data writers append rows to DOT-PREFIXED staging files in the
   *     messages dir (invisible to Spark's listing and every part- filter),
   *     skipping `invalidate` rows but reporting the minimum invalidate
-  *     msgId they saw.
+  *     msgId they saw. A replayed epoch whose token the ledger already
+  *     holds is decided on the driver when its writer factory is built:
+  *     its writers report the minimum invalidate and write no file.
   *  2. `commit(epochId)` — driver-side, after every task commits:
-  *     a. replayed epoch (token already committed) → staging deleted,
-  *        nothing re-published; an invalidate in it still marks the
+  *     a. replayed epoch (token already committed) → staging (if any)
+  *        deleted, nothing re-published; an invalidate in it still marks the
   *        stream terminated (a crash can land between the token write
   *        and the marker);
   *     b. F2: with a minimum invalidate token m, staging files entirely
@@ -128,9 +130,19 @@ final case class MsgStaging(path: String, minMsg: String, maxMsg: String,
 final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     name: String, capped: Boolean, maxTokRows: Int) extends StreamingWrite {
 
+  /** Built on the stream thread, which carries the epoch's id as the
+    * `streaming.sql.batchId` local property: an epoch the ledger already
+    * holds gets writers that stage nothing.
+    */
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new MessageWriterFactory(messagesDir)
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val spark = SparkSession.active
+    val replayed = Option(spark.sparkContext
+        .getLocalProperty("streaming.sql.batchId"))
+      .exists(b => StreamingCdc.committedBatchIds(spark, name, tokensDir)
+        .contains(b.toLong))
+    new MessageWriterFactory(messagesDir, replayed)
+  }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -148,7 +160,8 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
     }.sorted.headOption
 
     // F2 entry check + C2/C3 ledger skip: a terminated stream publishes
-    // nothing; a replayed committed epoch is idempotently dropped, but
+    // nothing; a replayed committed epoch (normally already skipped by its
+    // writers, checked again here) is idempotently dropped, but
     // its invalidate is still honoured (F2 durability: the crash may have
     // landed between the token write and the marker write below).
     if (StreamingCdc.wasInvalidated(name)) { dropStaging(); return }
@@ -244,11 +257,11 @@ final class MessageStreamingWrite(messagesDir: String, tokensDir: String,
   }
 }
 
-final class MessageWriterFactory(messagesDir: String)
+final class MessageWriterFactory(messagesDir: String, replayed: Boolean)
   extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new MessageDataWriter(messagesDir, partitionId, taskId, epochId)
+    new MessageDataWriter(messagesDir, partitionId, taskId, epochId, replayed)
 }
 
 /** Buffers the partition's published rows, sorts them by msgId at commit
@@ -257,10 +270,11 @@ final class MessageWriterFactory(messagesDir: String)
   * staging parquet file. Skips invalidate rows but records the smallest
   * invalidate msgId. The buffer holds one partition of one micro-batch —
   * the same data any sort would materialize, bounded by the source's
-  * per-trigger admission control. Empty partitions write nothing.
+  * per-trigger admission control. Empty partitions, and every partition
+  * of a `replayed` epoch, write nothing.
   */
 final class MessageDataWriter(messagesDir: String, partitionId: Int,
-    taskId: Long, epochId: Long)
+    taskId: Long, epochId: Long, replayed: Boolean)
   extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   import org.apache.parquet.example.data.simple.SimpleGroup
@@ -279,7 +293,7 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
     if (op == MessageSink.InvalidateOp) {
       if (minInvalidate == null || msgId < minInvalidate)
         minInvalidate = msgId
-    } else
+    } else if (!replayed)
       rows += ((msgId, row.getUTF8String(0).toString,
         row.getUTF8String(2).toString))
   }

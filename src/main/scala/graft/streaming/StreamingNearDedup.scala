@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.IncrementalDedup
+import graft.operators.{CandidatePairs, IncrementalDedup}
 
 /** Streaming NEAR-dedup for the document ingest path: every arriving
   * micro-batch is probed against the persisted MinHash band index of
@@ -117,7 +117,8 @@ object StreamingNearDedup {
     * batch.
     */
   def runOnce(spark: SparkSession, inputDir: String, pairsDir: String,
-      indexDir: String, checkpointDir: String, cap: Int = 50,
+      indexDir: String, checkpointDir: String,
+      cap: Int = CandidatePairs.DfCap,
       threshold: Double = 0.5, compactAfterFiles: Int = 64): Unit = {
     Ddl.ensureTable(spark, indexDir, indexSchema)
     Ddl.ensureTable(spark, pairsDir, pairsSchema)

@@ -67,4 +67,29 @@ class CapDropsSpec extends SparkSuite {
       s"nothing exceeds the cap: $droppedBuckets buckets, " +
         s"$droppedPostings postings")
   }
+
+  test("a non-winnow generator observes its drops too: dedup_simhash_pairs " +
+      "with a planted hot band reports the dropped buckets and postings") {
+    val tmp = Files.createTempDirectory("graft-capdrop-sh").toString
+    // 60 identical docs (> DfCap = 50) fill one bucket in each of the 4
+    // bands; 3 near-identical docs still produce pairs, so the observation
+    // survives on a non-empty result
+    val hot = "the quick brown fox jumps over the lazy dog again and again"
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val docs = (0 until 60).map(i => (i.toLong, hot)) ++
+      Seq((100L, base), (101L, base), (102L, base + " extra"))
+    import spark.implicits._
+    docs.toDF("doc_id", "text").write.parquet(s"$tmp/documents.parquet")
+
+    val df = DedupQueries.queries("dedup_simhash_pairs")(spark, tmp)
+    val rows = df.collect()
+    assert(rows.nonEmpty, "the in-cap near-dups must still pair")
+    assert(rows.forall(_.getLong(0) >= 100L), "no hot doc pairs")
+    val m = df.queryExecution.observedMetrics.collectFirst {
+      case (name, row) if name.startsWith("graft_dropped_simhash") => row
+    }.getOrElse(fail("no graft_dropped_simhash observation on the plan"))
+    assert(m.getAs[Long]("dropped_buckets") == 4L)
+    assert(m.getAs[Long]("dropped_postings") == 4L * 60)
+    assert(m.getAs[Long]("total_buckets") > 4L)
+  }
 }

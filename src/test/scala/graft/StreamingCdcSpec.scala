@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.{ChangeEvent, ChangeEventId, Ns}
@@ -454,9 +456,22 @@ class StreamingCdcSpec extends SparkSuite {
     Seq("3", ".3.crc").foreach(f =>
       new java.io.File(s"${c.checkpointDir}/commits", f).delete())
     writeBatchFile(c.inputDir, (101 to 125).map(ev(_, "insert")))
+    // every file the restart creates in the messages dir, staging included
+    // (a staging file lives only until its epoch's commit deletes or
+    // renames it)
+    val watch = java.nio.file.FileSystems.getDefault.newWatchService()
+    java.nio.file.Paths.get(c.messagesDir)
+      .register(watch, java.nio.file.StandardWatchEventKinds.ENTRY_CREATE)
     val jobs = jobsByBatch {
       StreamingCdc.runAll(spark, Seq(c), availableNow = true)
     }
+    val created = try Iterator.continually(watch.poll()).takeWhile(_ != null)
+        .flatMap(_.pollEvents().asScala.map(_.context.toString)).toList
+      finally watch.close()
+    assert(created.exists(_.startsWith(".staging-4-")),
+      s"the new epoch staged no file: $created")
+    assert(!created.exists(_.contains("staging-3-")),
+      s"the replayed epoch 3 wrote staging files: $created")
     // epochs 3 and 4 run the same one-file write; only 3 seeds the ledger
     assert(jobs.contains("4"), s"no new epoch ran: $jobs")
     assert(jobs.getOrElse("3", 0) - jobs("4") == 0,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.CandidatePairs
 import graft.queries.DedupQueries
 import graft.streaming.StreamingDecontam
 
@@ -35,7 +36,7 @@ class StreamingDecontamSpec extends SparkSuite {
     val b = buckets(corpusDf.unionByName(evalDf))
     val good = b.groupBy(col("table_id"), col("bucket"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n").between(2, DedupQueries.VecBucketCap))
+      .filter(col("n").between(2, CandidatePairs.VecBucketCap))
       .select(col("table_id"), col("bucket"))
     val bg = b.join(good, Seq("table_id", "bucket"))
     // the registered query's candidate shape, with the spec's partition
@@ -78,7 +79,7 @@ class StreamingDecontamSpec extends SparkSuite {
           .as(Seq("t", "b")))
       .groupBy(col("t"), col("b")).agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head().getLong(0)
-    assert(maxOcc <= DedupQueries.VecBucketCap,
+    assert(maxOcc <= CandidatePairs.VecBucketCap,
       s"precondition: max bucket occupancy $maxOcc exceeds the cap")
 
     StreamingDecontam.indexEval(spark, evalDf, s"$root/idx", tables, planes)
