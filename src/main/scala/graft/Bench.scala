@@ -99,7 +99,7 @@ object Bench {
     val cpuRefStart = cpuRef()
     val cpuRefParStart = cpuRefPar()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    val trials = LocalSession.envKnob("SPARK_GRAFT_BENCH_TRIALS", 3).toInt
+    val trials = 3
     val timings =
       scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val errors = scala.collection.mutable.Map.empty[String, String]
@@ -156,8 +156,7 @@ object Bench {
     // better estimator of the undisturbed time; this is more
     // measurement, not selection). Bounded: at most `retrials` extra
     // passes over only the noisy subset, skipped when nothing is noisy.
-    val retrials =
-      LocalSession.envKnob("SPARK_GRAFT_BENCH_RETRIALS", 3, min = 0).toInt
+    val retrials = 3
     for (pass <- 0 until retrials) {
       val noisy = names.filter { case (name, _) => noisyRuns(timings(name)) }
       if (noisy.nonEmpty) {
@@ -262,8 +261,7 @@ object Bench {
     // >1.5x marks the slice contaminated like any query.
     var streamEvPerSec: Double = -1.0
     var streamSpread: Double = 0.0
-    val streamTrials =
-      LocalSession.envKnob("SPARK_GRAFT_BENCH_STREAM_TRIALS", 3).toInt
+    val streamTrials = 3
     val streamingJson =
       try {
         val root = java.nio.file.Files.createTempDirectory("graft-bench").toString
@@ -401,11 +399,10 @@ object Bench {
         s""""regressions":$regressions,""" +
         s""""queries":$qsTopJson,"queries_omitted":$omitted,""" +
         s""""sf":"$sfDir","trials":$trials,$envJson,"summary":true}"""
-    // Whatever the base line leaves under the cap is the map's budget
-    // (a long regressions list must not push the line past the window).
-    val lineCap =
-      LocalSession.envKnob("SPARK_GRAFT_BENCH_SUMMARY_CAP", 1950).toInt
-    val budgetChars = lineCap - summaryWith("{}", nq).length
+    // Whatever the base line leaves under the 1950-char line cap is the
+    // map's budget (a long regressions list must not push the line past
+    // the window).
+    val budgetChars = 1950 - summaryWith("{}", nq).length
     val byCost = results.filter(_._2 >= 0).sortBy(-_._2)
     val qsTop = scala.collection.mutable.ListBuffer.empty[String]
     var used = 0
@@ -427,18 +424,17 @@ object Bench {
     // Total time" trailer defeating a last-line parser).
     //
     // Gated by construction (VERDICT r11 #1a): a self-flagged-contaminated
-    // run REFUSES to overwrite the committed summary artifact unless
-    // SPARK_GRAFT_BENCH_FORCE=1 — the round-11 snapshot shipped its
+    // run REFUSES to overwrite the committed summary artifact — the
+    // round-11 snapshot shipped its
     // noisiest session only because nothing stopped a dirty run from
     // clobbering a clean one. bench_last.json / bench_full.json above are
     // still written (bench_capture.py's retry loop reads bench_last.json
     // and the JSONL history must record every run, dirty ones included).
-    val force = sys.env.get("SPARK_GRAFT_BENCH_FORCE").contains("1")
     val sumFile =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "bench_summary.json")
-    if (ncontam > 0 && !force)
+    if (ncontam > 0)
       System.err.println(s"[bench] contaminated run ($contaminated): " +
-        s"NOT overwriting $sumFile (set SPARK_GRAFT_BENCH_FORCE=1 to force)")
+        s"NOT overwriting $sumFile")
     else
       try java.nio.file.Files.write(java.nio.file.Paths.get(sumFile),
         (summaryLine + "\n").getBytes("UTF-8"),

@@ -13,8 +13,8 @@ import graft.functions._
   *
   * (or `.withExtensions(new GraftExtensions)` when building the session
   * programmatically). Registers the codegen'd Catalyst expressions so
-  * `spark.sql("SELECT fnv64(text) ...")` works in any session without
-  * calling TextHashes.register by hand.
+  * `spark.sql("SELECT fnv64(text) ...")` works in any session. This is
+  * the only registration path: no session-scoped copy exists.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -154,7 +154,7 @@ object StreamingReport {
         pass)
     }
 
-    // ---- 2. Gap-sessionization (flatMapGroupsWithState) ---------------
+    // ---- 2. Gap-sessionization (session_window on a stream) ----------
     // Stream the whole events table plus one far-future sentinel per
     // user; once the watermark passes the sentinels, every REAL session
     // has closed (sentinel sessions stay open and are withheld). The
@@ -188,8 +188,7 @@ object StreamingReport {
         val q = graft.streaming.StreamingSessionization
           .sessions(spark, stream, gap = "1 day", watermarkDelay = "30 days")
           .writeStream
-          .foreachBatch((d: org.apache.spark.sql.Dataset[
-              graft.streaming.StreamingSessionization.SessionRow], _: Long) =>
+          .foreachBatch((d: DataFrame, _: Long) =>
             d.write.mode("append").parquet(s"$root/sess-log"))
           .option("checkpointLocation", s"$root/sess-ckpt")
           .outputMode("append").start()
@@ -271,7 +270,6 @@ object StreamingReport {
     // Three arrival slices by doc_id; the streamed pair log must equal
     // the batch incremental operator probed slice-by-slice.
     locally {
-      graft.functions.TextHashes.register(spark)
       val ids = docs.select(col("doc_id")).orderBy(col("doc_id"))
         .as[Long].collect()
       val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -344,8 +342,7 @@ object StreamingReport {
           .option("maxFilesPerTrigger", "2").parquet(msgsDir)
         val q = graft.streaming.StreamingStateView.stateView(spark, src)
           .writeStream.outputMode("update")
-          .foreachBatch((d: org.apache.spark.sql.Dataset[
-              graft.streaming.StreamingStateView.StateRow], bid: Long) => {
+          .foreachBatch((d: DataFrame, bid: Long) => {
             d.write.mode("append").parquet(s"$root/state-log")
             if (bid >= 1 && svArmed) {
               svArmed = false

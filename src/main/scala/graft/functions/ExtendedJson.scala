@@ -131,11 +131,4 @@ object ToExtendedJson {
     }
     sb.toString
   }
-
-  /** SQL surface: `to_extended_json(struct(...))` — composes with
-    * built-ins inside codegen'd stages via `expr(...)`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "to_extended_json", es => ToExtendedJson(es.head), "built-in")
 }

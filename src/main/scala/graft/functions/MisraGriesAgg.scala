@@ -150,9 +150,3 @@ case class MisraGriesAgg(
       newChildren: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = newChildren(0), capExpr = newChildren(1))
 }
-
-object MisraGriesAgg {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_candidates", es => MisraGriesAgg(es(0), es(1)), "built-in")
-}

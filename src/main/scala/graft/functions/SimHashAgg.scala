@@ -96,9 +96,3 @@ case class SimHashAgg(
       newChildren: IndexedSeq[Expression]): SimHashAgg =
     copy(child = newChildren.head)
 }
-
-object SimHashAgg {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg", es => SimHashAgg(es.head), "built-in")
-}

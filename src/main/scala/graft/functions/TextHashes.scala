@@ -767,11 +767,10 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression
     copy(child = c)
 }
 
-/** SQL registration — makes the expressions usable from `expr(...)` /
-  * `spark.sql` so they compose with built-ins inside codegen'd stages.
+/** Validated builders for the argument-checked functions that
+  * [[graft.GraftExtensions]] injects.
   */
 object TextHashes {
-  import org.apache.spark.sql.SparkSession
 
   /** Validated builder for `minhash_sig(arr, k)`: k must be a foldable
     * integral literal (it sizes the signature at plan time). Without the
@@ -852,47 +851,5 @@ object TextHashes {
     require(w > 0 && st > 0,
       s"char_windows: width and stride must be positive, got ($w, $st)")
     CharWindows(es.head, w, st)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // Spark 4.1.2 validates the source tag: must be "built-in".
-    reg.createOrReplaceTempFunction("fnv64", es => Fnv64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fingerprint",
-      winnowBuilder, "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("dhash64",
-      es => Dhash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      minHashSigBuilder, "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      shingleHashesBuilder, "built-in")
-    reg.createOrReplaceTempFunction("ordered_pairs",
-      es => OrderedPairs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("sig_match",
-      es => SigMatch(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("struct_pairs",
-      es => StructPairs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("minhash_ngrams",
-      minHashNgramsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      wordNgramsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("token_mode",
-      es => TokenMode(es.head), "built-in")
-    reg.createOrReplaceTempFunction("token_counts",
-      es => TokenCounts(es.head), "built-in")
-    reg.createOrReplaceTempFunction("char_windows",
-      charWindowsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("cdc_chunks",
-      cdcChunksBuilder, "built-in")
-    reg.createOrReplaceTempFunction("lsh_buckets",
-      VectorLsh.builder, "built-in")
-    reg.createOrReplaceTempFunction("vec_dot",
-      VectorOps.dotBuilder, "built-in")
-    reg.createOrReplaceTempFunction("vec_cos",
-      VectorOps.cosBuilder, "built-in")
-    reg.createOrReplaceTempFunction("vec_normalize",
-      VectorOps.normalizeBuilder, "built-in")
   }
 }

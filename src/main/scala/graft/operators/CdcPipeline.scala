@@ -107,23 +107,19 @@ object CdcPipeline {
       expr("min_by(data, msgId)").as("data"))
     .select("subject", "msgId", "data")
 
-  /** Consumer-side materialized view over the PUBLISHED stream: the table
-    * a downstream consumer of the NATS messages converges to. msgId dedup
-    * first (the JetStream Nats-Msg-Id exactly-once view, README.md:124-127
-    * — so at-least-once re-publishes cannot change the result), then
-    * latest-per-documentKey with delete semantics (the per-key last-event
-    * state the acceptance tests assert, update_test.go:52-56,
-    * delete_test.go:50). Reads only published fields: the subject's op
-    * suffix and the payload JSON. Two keyed shuffles (msgId, then key),
-    * no window/sort.
+  /** Latest state per (stream, documentKey) of published messages: the
+    * max-msgId event's op and payload. Reads only published fields: op is
+    * the subject's final segment, stream the prefix before it, key the
+    * payload's documentKey (rows without one are dropped).
     *
     * State is PER COLLECTION, like the reference's: the group key pairs
-    * the subject's stream prefix with the documentKey, so identical keys
-    * from different collections (the C1 fan-out shape feeding one
-    * consumer) never merge.
+    * the stream prefix with the documentKey, so identical keys from
+    * different collections (the C1 fan-out shape feeding one consumer)
+    * never merge. The batch [[stateView]] and its streaming twin
+    * ([[graft.streaming.StreamingStateView]]) both run this aggregation.
     */
-  def stateView(messages: DataFrame): DataFrame =
-    dedupByMsgId(messages)
+  def latestPerKey(messages: DataFrame): DataFrame =
+    messages
       .withColumn("op", element_at(split(col("subject"), "\\."), -1))
       // subject = "<STREAM>.<op>" — strip the final segment, keeping any
       // dots inside the stream name itself
@@ -136,6 +132,17 @@ object CdcPipeline {
         max(col("msgId")).as("last_msg_id"),
         expr("max_by(op, msgId)").as("last_op"),
         expr("max_by(data, msgId)").as("doc"))
+
+  /** Consumer-side materialized view over the PUBLISHED stream: the table
+    * a downstream consumer of the NATS messages converges to. msgId dedup
+    * first (the JetStream Nats-Msg-Id exactly-once view, README.md:124-127
+    * — so at-least-once re-publishes cannot change the result), then
+    * [[latestPerKey]] with delete semantics (the per-key last-event state
+    * the acceptance tests assert, update_test.go:52-56, delete_test.go:50).
+    * Two keyed shuffles (msgId, then key), no window/sort.
+    */
+  def stateView(messages: DataFrame): DataFrame =
+    latestPerKey(dedupByMsgId(messages))
       .filter(col("last_op") =!= "delete")
 
   /** A3 — health roll-up (internal/server/health.go:13-29): per-component

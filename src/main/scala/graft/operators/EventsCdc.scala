@@ -136,6 +136,21 @@ object EventsCdc {
       row_number().over(w).cast("long").as("seq"))
   }
 
+  /** Gap sessions per user via Spark's `session_window(ts, gap)`: row
+    * count and exact money sum per session, the start rendered as a
+    * string for engine-exact compare. The batch `events_session_windows`
+    * query and its streaming twin
+    * ([[graft.streaming.StreamingSessionization]]) both run it.
+    */
+  def sessionWindows(events: DataFrame, gap: String): DataFrame = {
+    import graft.queries.Tables.moneySum
+    events.groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
+      .select(col("user_id"),
+        date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n"), col("sum_value"))
+  }
+
   /** Consumer-side state materialization — compact the change log into
     * "latest state per document": the table a downstream consumer of the
     * published stream maintains (the reference's acceptance tests assert

@@ -606,15 +606,10 @@ object AnalyticsQueries {
     // Gap-based sessionization via Spark's session_window() — the
     // Structured-Streaming session primitive, batch form: a session ends
     // after 1 day of user inactivity. The oracle rebuilds the same
-    // islands with LAG + running sum. Start is rendered as a string for
-    // engine-exact compare.
+    // islands with LAG + running sum. Product path:
+    // EventsCdc.sessionWindows, which the streaming twin also runs.
     "events_session_windows" -> ((s, dir) =>
-      load(s, dir, "events")
-        .groupBy(col("user_id"), session_window(col("ts"), "1 day").as("w"))
-        .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
-        .select(col("user_id"),
-          date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n"), col("sum_value"))
+      graft.operators.EventsCdc.sessionWindows(load(s, dir, "events"), "1 day")
         .orderBy(col("user_id"), col("session_start"))),
 
     // Event-time tumbling windows via Spark's window() — the idiomatic

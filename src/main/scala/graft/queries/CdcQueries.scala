@@ -143,7 +143,6 @@ object CdcQueries {
     // envelope is built from the events analog, rendered by the native
     // ToExtendedJson expression inside codegen.
     "cdc_extjson_messages" -> ((s, dir) => {
-      graft.functions.ToExtendedJson.register(s)
       EventsCdc.filterPublishable(load(s, dir, "events"))
         .select(
           concat(lit("EVENTS."), col("event_type")).as("subject"),

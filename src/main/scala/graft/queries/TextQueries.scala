@@ -337,7 +337,6 @@ object TextQueries {
     // vote math replays in DuckDB); group-equals-document-level
     // equivalence additionally pinned by SimHashAggSpec.
     "text_corpus_fingerprint" -> ((s, dir) => {
-      graft.functions.SimHashAgg.register(s)
       load(s, dir, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(expr(s"simhash_agg($toks)").as("corpus_simhash"),
@@ -503,7 +502,6 @@ object TextQueries {
     // bounded model-style bookkeeping (≤512 strings + one long), like the
     // k-means centroids.
     "text_heavy_hitters" -> ((s, dir) => {
-      graft.functions.MisraGriesAgg.register(s)
       val tk = load(s, dir, "documents")
         .select(explode(expr(toks)).as("tok"))
       val sk = tk.agg(expr("mg_candidates(tok, 512)").as("cs"),

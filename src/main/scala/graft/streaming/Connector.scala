@@ -43,13 +43,13 @@ object Connector {
     val streams = cfg.collections.map(ConnectorConfig.validate)
       .map(toStreamConfig(dataRoot, _))
     val listener = Observability.attach(spark)
-    val http = Option(cfg.serverAddr).filter(_.nonEmpty)
-      .map(a => new HttpObservability(spark, listener, a))
-    http.foreach(_.start())
-    try StreamingCdc.runAll(spark, streams, availableNow)
-    finally { // C4 teardown (connector.go:180-198)
-      http.foreach(_.stop())
-      spark.streams.removeListener(listener)
-    }
+    try {
+      // a malformed addr throws here, before any query starts
+      val http = Option(cfg.serverAddr).filter(_.nonEmpty)
+        .map(a => new HttpObservability(spark, listener, a))
+      http.foreach(_.start())
+      try StreamingCdc.runAll(spark, streams, availableNow)
+      finally http.foreach(_.stop()) // C4 teardown (connector.go:180-198)
+    } finally spark.streams.removeListener(listener)
   }
 }

@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.config.ConnectorConfig.ConfigException
+
 /** The reference's HTTP observability surface (internal/server/server.go:
   * 34-38): `GET /healthz` → component JSON (health.go:13-29), `GET
   * /metrics` → prometheus text exposition. Runs on the driver (as the
@@ -20,11 +22,7 @@ final class HttpObservability(
     listener: Observability.MetricsListener,
     addr: String = ":0") {
 
-  private val (host, port) = addr.split(":") match {
-    case Array("", p) => ("0.0.0.0", p.toInt)
-    case Array(h, p) => (h, p.toInt)
-    case _ => ("0.0.0.0", 0)
-  }
+  private val (host, port) = HttpObservability.parseAddr(addr)
   private val server =
     HttpServer.create(new InetSocketAddress(host, port), 0)
 
@@ -53,4 +51,30 @@ final class HttpObservability(
 
   def start(): Int = { server.start(); server.getAddress.getPort }
   def stop(): Unit = server.stop(0)
+}
+
+object HttpObservability {
+
+  /** `host:port` → (host, port), as Go's `net.Listen` reads it: the port
+    * follows the last `:` and is 0..65535, an IPv6 host is bracketed
+    * (`[::1]:8080`) and an empty host (`:8080`) means every interface.
+    * Anything else is a [[ConfigException]] naming the value, thrown
+    * before the server or any query starts.
+    */
+  def parseAddr(addr: String): (String, Int) = {
+    def bad(why: String) =
+      throw new ConfigException(s"server addr '$addr': $why")
+    val i = addr.lastIndexOf(':')
+    if (i < 0) bad("missing port in address")
+    val h = addr.substring(0, i)
+    val host =
+      if (h.startsWith("[") && h.endsWith("]")) h.substring(1, h.length - 1)
+      else if (h.exists(":[]".contains(_))) bad("too many colons in address")
+      else if (h.isEmpty) "0.0.0.0"
+      else h
+    val p = addr.substring(i + 1)
+    if (p.isEmpty || p.length > 5 || !p.forall(_.isDigit) || p.toInt > 65535)
+      bad("port must be an integer in 0..65535")
+    (host, p.toInt)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicLongArray, DoubleAdder, LongAdder}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -28,6 +29,41 @@ object Observability {
   val DurationBuckets: Seq[Double] =
     Seq(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0)
 
+  /** Cumulative-bucket duration histogram over [[DurationBuckets]]
+    * (prometheus exposition semantics): one count per bucket plus +Inf.
+    */
+  final class Histo {
+    val buckets = new AtomicLongArray(DurationBuckets.length + 1)
+    val sum = new DoubleAdder
+    val count = new LongAdder
+    def observe(sec: Double): Unit = {
+      var i = 0
+      while (i < DurationBuckets.length) {
+        if (sec <= DurationBuckets(i)) buckets.incrementAndGet(i)
+        i += 1
+      }
+      buckets.incrementAndGet(DurationBuckets.length) // +Inf
+      sum.add(sec)
+      count.increment()
+    }
+  }
+
+  private val BucketLabels = DurationBuckets.map(_.toString) :+ "+Inf"
+
+  private def header(sb: StringBuilder, family: String, help: String,
+      kind: String): Unit =
+    sb ++= s"# HELP $family $help\n# TYPE $family $kind\n"
+
+  /** The bucket, sum and count lines of one histogram series. */
+  private def series(sb: StringBuilder, family: String, labels: String,
+      h: Histo): Unit = {
+    BucketLabels.zipWithIndex.foreach { case (le, i) =>
+      sb ++= s"""${family}_bucket{$labels,le="$le"} ${h.buckets.get(i)}""" + "\n"
+    }
+    sb ++= s"${family}_sum{$labels} ${h.sum.sum()}\n"
+    sb ++= s"${family}_count{$labels} ${h.count.sum()}\n"
+  }
+
   /** K4 — storage-command metrics, the engine analog of the reference's
     * MongoDB command monitor (internal/mongo/client.go:83-126 feeding
     * prometheus.go:44-90): every storage "command" the runtime issues
@@ -39,26 +75,7 @@ object Observability {
     * at batch granularity, observed once per subject present in the batch.
     */
   object CommandMetrics {
-    import java.util.concurrent.atomic.{AtomicLongArray, DoubleAdder, LongAdder}
-
     final case class Key(database: String, command: String)
-
-    /** Cumulative-bucket histogram (prometheus exposition semantics). */
-    final class Histo {
-      val buckets = new AtomicLongArray(DurationBuckets.length + 1)
-      val sum = new DoubleAdder
-      val count = new LongAdder
-      def observe(sec: Double): Unit = {
-        var i = 0
-        while (i < DurationBuckets.length) {
-          if (sec <= DurationBuckets(i)) buckets.incrementAndGet(i)
-          i += 1
-        }
-        buckets.incrementAndGet(DurationBuckets.length) // +Inf
-        sum.add(sec)
-        count.increment()
-      }
-    }
 
     private[streaming] val started = new ConcurrentHashMap[Key, LongAdder]
     private[streaming] val succeeded = new ConcurrentHashMap[Key, LongAdder]
@@ -99,8 +116,7 @@ object Observability {
       batches: Long,
       eventsIn: Long, // source rows seen (pre-filter)
       failures: Long,
-      durationBucketCounts: Seq[Long], // cumulative, one per bucket + +Inf
-      durationSumSeconds: Double) {
+      duration: Histo) { // trigger execution time per batch
     /** Post-filter publish count (nats_messages_published_total
       * semantics), maintained by the engine at the commit point.
       */
@@ -116,12 +132,12 @@ object Observability {
     // key nothing reads and report 0 forever.
     private val idToName = new ConcurrentHashMap[String, String]()
 
+    private def fresh(name: String) = QueryStats(name, 0L, 0L, 0L, new Histo)
+
     override def onQueryStarted(e: QueryStartedEvent): Unit = {
       val name = Option(e.name).getOrElse(e.id.toString) // unnamed-safe
       idToName.put(e.id.toString, name)
-      stats.putIfAbsent(name,
-        QueryStats(name, 0L, 0L, 0L,
-          Seq.fill(DurationBuckets.length + 1)(0L), 0.0))
+      stats.putIfAbsent(name, fresh(name))
     }
 
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
@@ -130,18 +146,10 @@ object Observability {
       val sec = Option(p.durationMs.get("triggerExecution"))
         .map(_.toDouble / 1000.0).getOrElse(0.0)
       stats.compute(name, (_, prev0) => {
-        val prev = Option(prev0).getOrElse(QueryStats(name, 0L, 0L, 0L,
-          Seq.fill(DurationBuckets.length + 1)(0L), 0.0))
-        val buckets = prev.durationBucketCounts.zipWithIndex.map {
-          case (c, i) =>
-            if (i == DurationBuckets.length || sec <= DurationBuckets(i)) c + 1
-            else c
-        }
-        prev.copy(
-          batches = prev.batches + 1,
-          eventsIn = prev.eventsIn + p.numInputRows,
-          durationBucketCounts = buckets,
-          durationSumSeconds = prev.durationSumSeconds + sec)
+        val prev = Option(prev0).getOrElse(fresh(name))
+        prev.duration.observe(sec)
+        prev.copy(batches = prev.batches + 1,
+          eventsIn = prev.eventsIn + p.numInputRows)
       })
     }
 
@@ -157,18 +165,14 @@ object Observability {
     /** Prometheus text exposition, family names per prometheus.go. */
     def renderPrometheus(): String = {
       val sb = new StringBuilder
-      sb ++= "# HELP connector_change_event_processing_duration_seconds " +
-        "Duration of change event processing in seconds.\n"
-      sb ++= "# TYPE connector_change_event_processing_duration_seconds histogram\n"
+      val fam = "connector_change_event_processing_duration_seconds"
+      header(sb, fam, "Duration of change event processing in seconds.",
+        "histogram")
       for (s <- snapshot.values.toSeq.sortBy(_.collection)) {
-        val le = DurationBuckets.map(_.toString) :+ "+Inf"
-        s.durationBucketCounts.zip(le).foreach { case (c, b) =>
-          sb ++= s"""connector_change_event_processing_duration_seconds_bucket{collection="${s.collection}",le="$b"} $c""" + "\n"
-        }
-        sb ++= s"""connector_change_event_processing_duration_seconds_sum{collection="${s.collection}"} ${s.durationSumSeconds}""" + "\n"
-        sb ++= s"""connector_change_event_processing_duration_seconds_count{collection="${s.collection}"} ${s.batches}""" + "\n"
-        sb ++= s"""nats_messages_published_total{collection="${s.collection}"} ${s.eventsPublished}""" + "\n"
-        sb ++= s"""nats_messages_failed_total{collection="${s.collection}"} ${s.failures}""" + "\n"
+        val lbl = s"""collection="${s.collection}""""
+        series(sb, fam, lbl, s.duration)
+        sb ++= s"nats_messages_published_total{$lbl} ${s.eventsPublished}\n"
+        sb ++= s"nats_messages_failed_total{$lbl} ${s.failures}\n"
       }
       renderCommandMetrics(sb)
       sb.result()
@@ -179,15 +183,14 @@ object Observability {
       */
     private def renderCommandMetrics(sb: StringBuilder): Unit = {
       import CommandMetrics._
-      val le = DurationBuckets.map(_.toString) :+ "+Inf"
+      def sorted[V](m: ConcurrentHashMap[Key, V]) =
+        m.asScala.toSeq.sortBy(e => (e._1.database, e._1.command))
       def lbl(k: Key) = s"""database="${k.database}",command="${k.command}""""
       def counters(fam: String, help: String,
-          m: ConcurrentHashMap[Key, java.util.concurrent.atomic.LongAdder]): Unit =
+          m: ConcurrentHashMap[Key, LongAdder]): Unit =
         if (!m.isEmpty) {
-          sb ++= s"# HELP $fam $help\n# TYPE $fam counter\n"
-          m.asScala.toSeq.sortBy(e => (e._1.database, e._1.command)).foreach {
-            case (k, v) => sb ++= s"$fam{${lbl(k)}} ${v.sum()}" + "\n"
-          }
+          header(sb, fam, help, "counter")
+          sorted(m).foreach { case (k, v) => sb ++= s"$fam{${lbl(k)}} ${v.sum()}\n" }
         }
       counters("mongodb_commands_started_total",
         "Total number of started commands.", started)
@@ -196,27 +199,15 @@ object Observability {
       counters("mongodb_commands_failed_total",
         "Total number of failed commands.", failed)
       if (!durations.isEmpty) {
-        sb ++= "# HELP mongodb_command_duration_seconds Duration of " +
-          "commands in seconds.\n" +
-          "# TYPE mongodb_command_duration_seconds histogram\n"
-        durations.asScala.toSeq.sortBy(e => (e._1.database, e._1.command))
-          .foreach { case (k, h) =>
-            le.zipWithIndex.foreach { case (b, i) =>
-              sb ++= s"""mongodb_command_duration_seconds_bucket{${lbl(k)},le="$b"} ${h.buckets.get(i)}""" + "\n"
-            }
-            sb ++= s"mongodb_command_duration_seconds_sum{${lbl(k)}} ${h.sum.sum()}\n"
-            sb ++= s"mongodb_command_duration_seconds_count{${lbl(k)}} ${h.count.sum()}\n"
-          }
+        val fam = "mongodb_command_duration_seconds"
+        header(sb, fam, "Duration of commands in seconds.", "histogram")
+        sorted(durations).foreach { case (k, h) => series(sb, fam, lbl(k), h) }
       }
       if (!natsDurations.isEmpty) {
-        sb ++= "# HELP nats_message_duration_seconds Duration of messages " +
-          "in seconds.\n# TYPE nats_message_duration_seconds histogram\n"
+        val fam = "nats_message_duration_seconds"
+        header(sb, fam, "Duration of messages in seconds.", "histogram")
         natsDurations.asScala.toSeq.sortBy(_._1).foreach { case (subj, h) =>
-          le.zipWithIndex.foreach { case (b, i) =>
-            sb ++= s"""nats_message_duration_seconds_bucket{subject="$subj",le="$b"} ${h.buckets.get(i)}""" + "\n"
-          }
-          sb ++= s"""nats_message_duration_seconds_sum{subject="$subj"} ${h.sum.sum()}""" + "\n"
-          sb ++= s"""nats_message_duration_seconds_count{subject="$subj"} ${h.count.sum()}""" + "\n"
+          series(sb, fam, s"""subject="$subj"""", h)
         }
       }
     }

@@ -1,132 +1,33 @@
 package graft.streaming
 
-import java.time.{Instant, ZoneOffset}
-import java.time.format.DateTimeFormatter
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.EventsCdc
 
 /** Streaming gap-sessionization: the stream-time twin of
-  * `events_session_windows` (batch `session_window()`), as a
-  * `flatMapGroupsWithState` operator with event-time timeout.
+  * `events_session_windows`, running the same aggregation
+  * ([[EventsCdc.sessionWindows]], Spark's `session_window`) under a
+  * watermark.
   *
-  * Semantics match Spark's `session_window(ts, gap)` exactly: an event
-  * extends a session iff its timestamp is at most lastEventTs + gap
-  * (session merging is non-strict: touching windows merge); a session
-  * CLOSES — and is emitted, once — when the watermark reaches
-  * lastEventTs + gap, at which point no non-late event can extend or
-  * merge it (an extender would need ts ≤ end + gap = watermark, which
-  * is exactly the late-drop region). Money accumulates in exact
-  * integer cents (the same DECIMAL(18,2) half-up quantization the batch
-  * `moneySum` applies per value), so the emitted rows are bit-identical
-  * to the batch query on the same events — StreamingSessionizationSpec
-  * pins that equivalence, out-of-order arrivals included.
-  *
-  * State design for 100 TB/day: state per user is the OPEN session
-  * fragments only — a list of (start, end, n, cents) intervals that
-  * in-gap arrivals merge; closed sessions leave state immediately on
-  * timeout. Arbitrarily-late events (ts ≤ watermark) are dropped, the
-  * same contract streaming `session_window` aggregation has; in-watermark
-  * out-of-order events merge fragments exactly as a batch replay would.
-  * Each micro-batch shuffles only its own rows on user_id; state size is
-  * |users with an open session| × open fragments, bounded by the
-  * watermark delay — never the event log.
+  * In append mode Spark emits each session once, when the watermark
+  * passes its end (last event + gap): no non-late event can extend or
+  * merge it any more. Events at or behind the watermark are dropped as
+  * late; in-watermark out-of-order events merge as a batch replay would.
+  * State is the open sessions per user, bounded by the watermark delay,
+  * and each micro-batch shuffles only its own rows on user_id.
   */
 object StreamingSessionization {
 
-
-  /** An open session fragment: [start, end] event-time cover in micros,
-    * count and exact cents so far.
-    */
-  final case class Frag(startMicros: Long, endMicros: Long, n: Long,
-      cents: Long)
-
-  /** One closed session — schema-identical to events_session_windows. */
-  final case class SessionRow(user_id: Long, session_start: String, n: Long,
-      sum_value: Double)
-
-  private val fmt =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss").withZone(ZoneOffset.UTC)
-
-  /** DECIMAL(18,2) half-up quantization of one double value — the exact
-    * per-value rounding `moneySum`'s cast applies before summing.
-    */
-  private[graft] def toCents(v: Double): Long =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP).unscaledValue.longValueExact
-
-  /** Exact cents → the same double DECIMAL(18,2).cast("double") yields. */
-  private[graft] def centsToDouble(c: Long): Double =
-    new java.math.BigDecimal(java.math.BigInteger.valueOf(c), 2).doubleValue
-
-  /** Merge sorted-by-start fragments under the TOUCHING-gap rule
-    * (next.start ≤ cur.end + gap merges): Spark's session merge is
-    * non-strict — an event at exactly the current session end
-    * (lastEventTs + gap) still extends it (MergingSessionsIterator's
-    * `start <= currentEnd`), which the batch reference confirms.
-    */
-  private[graft] def mergeFrags(frags: List[Frag], gapMicros: Long)
-      : List[Frag] =
-    frags.sortBy(f => (f.startMicros, f.endMicros)).foldLeft(List.empty[Frag]) {
-      case (cur :: rest, f) if f.startMicros <= cur.endMicros + gapMicros =>
-        Frag(cur.startMicros, math.max(cur.endMicros, f.endMicros),
-          cur.n + f.n, cur.cents + f.cents) :: rest
-      case (acc, f) => f :: acc
-    }.reverse
-
-  private def step(gapMicros: Long)(userId: Long,
-      rows: Iterator[(Long, java.sql.Timestamp, Double)],
-      state: GroupState[List[Frag]]): Iterator[SessionRow] = {
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
-    // late events (ts ≤ watermark) are dropped — their session region is
-    // already closed/emitted; same contract as streaming session_window
-    val fresh = rows
-      .map { case (_, ts, v) => (ts.getTime * 1000L +
-        (ts.getNanos / 1000L) % 1000L, v) }
-      .filter(_._1 > wmMicros)
-      .map { case (m, v) => Frag(m, m, 1L, toCents(v)) }.toList
-    val merged = mergeFrags(state.getOption.getOrElse(Nil) ++ fresh, gapMicros)
-    // a fragment is closed once the watermark passes end + gap: no
-    // non-late event can extend it or merge into it any more
-    val (closed, open) = merged.partition(_.endMicros + gapMicros <= wmMicros)
-    if (open.isEmpty) state.remove()
-    else {
-      state.update(open)
-      // next close point; must be strictly beyond the current watermark.
-      // Ceiling division: flooring micros→millis would fire the timeout up
-      // to 1ms BEFORE the true close point for sub-millisecond event
-      // times, closing nothing and deferring emission to the next
-      // watermark advance (ADVICE r9).
-      val nextMs = open.map(f => (f.endMicros + gapMicros + 999L) / 1000L).min
-      state.setTimeoutTimestamp(math.max(nextMs, state.getCurrentWatermarkMs() + 1))
-    }
-    closed.sortBy(_.startMicros).iterator.map(f =>
-      SessionRow(userId, fmt.format(Instant.ofEpochSecond(
-          f.startMicros / 1000000L, (f.startMicros % 1000000L) * 1000L)),
-        f.n, centsToDouble(f.cents)))
-  }
-
-  /** The streaming view: feed a stream with (user_id, ts, value), get an
-    * append-mode stream of closed sessions. `watermarkDelay` bounds both
-    * accepted lateness and state lifetime.
+  /** Closed sessions of a (user_id, ts, value) stream, in the batch
+    * query's four columns. `watermarkDelay` bounds both accepted lateness
+    * and state lifetime.
     */
   def sessions(spark: SparkSession, events: DataFrame,
-      gap: String = "1 day", watermarkDelay: String = "1 hour")
-      : Dataset[SessionRow] = {
-    import spark.implicits._
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String
-        .fromString(gap))
-    require(iv.months == 0, s"calendar-month gaps are not fixed-length: $gap")
-    val gapMicros = iv.days * 86400000000L + iv.microseconds
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id").cast("long").as("user_id"), col("ts"),
-        col("value").cast("double").as("value"))
-      .as[(Long, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[List[Frag], SessionRow](OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(step(gapMicros))
-  }
+      gap: String = "1 day", watermarkDelay: String = "1 hour"): DataFrame =
+    EventsCdc.sessionWindows(
+      events.withWatermark("ts", watermarkDelay)
+        .select(col("user_id").cast("long").as("user_id"), col("ts"),
+          col("value").cast("double").as("value")),
+      gap)
 }

@@ -1,76 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.operators.CdcPipeline
 
 /** Streaming twin of `CdcPipeline.stateView`: the per-key latest-state
   * table a consumer of the published stream maintains LIVE, not replayed —
   * the reference's acceptance semantics (update_test.go:52-56,
-  * delete_test.go:50) as an always-on `mapGroupsWithState` query.
+  * delete_test.go:50) as the batch view's aggregation
+  * ([[CdcPipeline.latestPerKey]]) run on a stream.
   *
-  * Exactly-once state over at-least-once input: the state transition keeps
-  * the event with the MAX msgId (= resume token) per (stream, documentKey)
-  * group, so a re-published duplicate (same or lower msgId) is a no-op and
-  * the state converges to the same table the batch view computes. Deletes
-  * stay in state as tombstones (`live = false`) rather than being removed:
-  * a late replay of an older event must still lose to the delete.
-  *
-  * Scale shape: state is one small row per live document key, partitioned
-  * by the group key across executors; each micro-batch shuffles only its
-  * own rows (no rescan of history) — the 100 TB change-log shape where
-  * the log is unbounded but the keyed state is |live keys|.
+  * Exactly-once state over at-least-once input: the max msgId (= resume
+  * token) wins per (stream, documentKey), so a re-published duplicate
+  * (same or lower msgId) is a no-op and the state converges to the batch
+  * view. Deletes stay in state as tombstones (`live = false`): a late
+  * replay of an older event must still lose to the delete. State is one
+  * small row per document key; each micro-batch shuffles only its own
+  * rows.
   */
 object StreamingStateView {
 
-  /** One published message, keyed for state updates. */
-  final case class MsgRow(
-      stream: String, key: String, msgId: String, op: String, data: String)
-
-  /** Per-key state: the winning (max-msgId) event so far. */
-  final case class KeyState(lastMsgId: String, lastOp: String, doc: String)
-
-  /** One output row per updated key per micro-batch; `live = false` is a
-    * tombstone (the key left the state — consumer drops it).
-    */
-  final case class StateRow(stream: String, key: String, last_msg_id: String,
-      last_op: String, doc: String, live: Boolean)
-
-  /** Parse published messages (subject, msgId, data) into state-update
-    * rows. Same field extraction as the batch view: op = final subject
-    * segment, stream = the prefix before it, key = documentKey JSON.
-    */
-  def toUpdates(spark: SparkSession, messages: DataFrame): Dataset[MsgRow] = {
-    import spark.implicits._
-    messages
-      .withColumn("op", element_at(split(col("subject"), "\\."), -1))
-      .withColumn("stream",
-        expr("substring(subject, 1, length(subject) - length(op) - 1)"))
-      .withColumn("key", get_json_object(col("data"), "$.documentKey"))
-      .filter(col("key").isNotNull)
-      .select(col("stream"), col("key"), col("msgId"), col("op"),
-        col("data"))
-      .as[MsgRow]
-  }
-
   /** The streaming view: feed a `readStream` of published messages, write
     * with `outputMode("update")`. Each trigger emits the new state of
-    * every touched key.
+    * every touched key: stream, key, last_msg_id, last_op, doc, live.
     */
-  def stateView(spark: SparkSession, messages: DataFrame): Dataset[StateRow] = {
-    import spark.implicits._
-    toUpdates(spark, messages)
-      .groupByKey(r => (r.stream, r.key))
-      .mapGroupsWithState[KeyState, StateRow](GroupStateTimeout.NoTimeout) {
-        case ((stream, key), rows, state) =>
-          // max-msgId wins — associative + idempotent, so duplicate and
-          // out-of-order re-deliveries cannot move the state backwards
-          val best = (state.getOption.toSeq ++
-            rows.map(r => KeyState(r.msgId, r.op, r.data)))
-            .maxBy(_.lastMsgId)
-          state.update(best)
-          StateRow(stream, key, best.lastMsgId, best.lastOp, best.doc,
-            live = best.lastOp != "delete")
-      }
-  }
+  def stateView(spark: SparkSession, messages: DataFrame): DataFrame =
+    CdcPipeline.latestPerKey(messages)
+      .withColumn("live", col("last_op") =!= "delete")
 }

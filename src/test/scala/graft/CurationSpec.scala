@@ -221,7 +221,6 @@ class CurationSpec extends SparkSuite {
 
   test("decontam_semantic: LSH-prefiltered scan of the FULL eval set — " +
       "precision 1.0 vs the brute corpus×eval product, recall pinned") {
-    graft.functions.TextHashes.register(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val nd = emb.select(col("vec_id"),
       expr("vec_normalize(embedding)").as("nv"))

@@ -14,7 +14,6 @@ class ExtendedJsonSpec extends SparkSuite {
 
   test("envelope renders with $timestamp/$date wrappers and verbatim " +
       "opaque documents (client.go:222-225)") {
-    graft.functions.ToExtendedJson.register(spark)
     val out = Seq((1L, "x")).toDF("a", "b").select(expr(
       """to_extended_json(struct(
            struct('t1' as _data) as _id,
@@ -43,7 +42,6 @@ class ExtendedJsonSpec extends SparkSuite {
   }
 
   test("non-opaque strings are JSON-escaped") {
-    graft.functions.ToExtendedJson.register(spark)
     val out = Seq(("""he said "hi"""" + "\n", 1)).toDF("s", "x")
       .select(expr("to_extended_json(struct(s as note))"))
       .as[String].head()
@@ -51,7 +49,6 @@ class ExtendedJsonSpec extends SparkSuite {
   }
 
   test("wrong input type is rejected with a clear error") {
-    graft.functions.ToExtendedJson.register(spark)
     val e = intercept[Exception] {
       Seq(1).toDF("x").select(expr("to_extended_json(x)")).collect()
     }

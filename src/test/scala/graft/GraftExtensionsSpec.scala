@@ -1,11 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** The extensions class must light up the function library in a fresh
   * session with zero manual registration — the deployment contract.
   */
 class GraftExtensionsSpec extends SparkSuite {
+
+  test("every injected function resolves in the shared LocalSession " +
+      "session (the extension is the only registration path)") {
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: (FunctionIdentifier, ExpressionInfo,
+          Seq[Expression] => Expression)): Unit = names += f._1.funcName
+    })
+    assert(names.nonEmpty && names.distinct.size == names.size, names)
+    assert(Seq("vec_quantize6", "vec_dotq", "bpe_apply", "mg_candidates")
+      .forall(names.contains), names)
+    val registry = spark.sessionState.functionRegistry
+    val missing = names.filterNot(n =>
+      registry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"injected but unresolved: $missing")
+  }
 
   test("spark.sql.extensions=graft.GraftExtensions registers every " +
       "function in a fresh session") {

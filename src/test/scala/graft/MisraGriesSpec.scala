@@ -15,7 +15,6 @@ class MisraGriesSpec extends SparkSuite {
 
   test("MG guarantee: candidates are a superset of every token with " +
       "count > n/(capacity+1), across partitionings and skew shapes") {
-    graft.functions.MisraGriesAgg.register(spark)
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 5; parts <- Seq(1, 3, 7)) {
       // Zipf-ish stream over a 200-token vocabulary
@@ -39,7 +38,6 @@ class MisraGriesSpec extends SparkSuite {
   }
 
   test("MG eval is deterministic for a fixed partitioning and sorted") {
-    graft.functions.MisraGriesAgg.register(spark)
     val stream = (1 to 1000).map(i => s"t${i % 37}")
     val a = tokensDf(stream).repartition(4)
       .agg(expr("mg_candidates(tok, 8)")).head().getSeq[String](0)
@@ -65,7 +63,6 @@ class MisraGriesSpec extends SparkSuite {
   }
 
   test("empty input: empty candidate set, empty result") {
-    graft.functions.MisraGriesAgg.register(spark)
     val cand = tokensDf(Nil)
       .agg(expr("mg_candidates(tok, 8)")).head().getSeq[String](0)
     assert(cand.isEmpty)

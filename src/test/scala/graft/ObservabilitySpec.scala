@@ -32,7 +32,8 @@ class ObservabilitySpec extends SparkSuite {
       val s = listener.snapshot("obs1")
       assert(s.eventsPublished == 30)
       assert(s.batches >= 3) // 3 data batches (+ possibly an empty commit)
-      assert(s.durationBucketCounts.last == s.batches) // +Inf cumulative
+      assert(s.duration.buckets.get(Observability.DurationBuckets.length) ==
+        s.batches) // +Inf cumulative
       val text = listener.renderPrometheus()
       assert(text.contains(
         "connector_change_event_processing_duration_seconds_bucket"))
@@ -160,6 +161,25 @@ class ObservabilitySpec extends SparkSuite {
       srv.stop()
       spark.streams.removeListener(listener)
     }
+  }
+
+  test("server addr: a value without a port is refused before binding; " +
+      "host:0 and :0 still bind (net.Listen's host:port contract)") {
+    import graft.config.ConnectorConfig.ConfigException
+    import graft.streaming.HttpObservability
+    val listener = Observability.attach(spark)
+    try {
+      val e = intercept[ConfigException](
+        new HttpObservability(spark, listener, "localhost"))
+      assert(e.getMessage.contains("'localhost'"), e.getMessage)
+      for (bad <- Seq("::1:8080", "h:", "h:x", "h:70000", "h:-1"))
+        intercept[ConfigException](HttpObservability.parseAddr(bad))
+      assert(HttpObservability.parseAddr("[::1]:8080") == ("::1", 8080))
+      for (ok <- Seq("127.0.0.1:0", ":0")) {
+        val srv = new HttpObservability(spark, listener, ok)
+        try assert(srv.start() > 0, ok) finally srv.stop()
+      }
+    } finally spark.streams.removeListener(listener)
   }
 
   test("K3: live queries appear as UP components") {

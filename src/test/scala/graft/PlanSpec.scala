@@ -130,7 +130,6 @@ class PlanSpec extends SparkSuite {
 
   test("whole-stage codegen covers the hash expressions (no UDF boxing)") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextHashes.register(spark)
     val df = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
       .select(expr("fnv64(text)"))
     // `*(n)` prefixes mark whole-stage-codegen'd operators in toString

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{SimHashAgg, TextHashes}
 
 /** Native aggregate semantics: single-row groups equal the row-level
   * expression; results are partitioning-invariant (merge correctness);
@@ -11,8 +10,6 @@ class SimHashAggSpec extends SparkSuite {
   import spark.implicits._
 
   test("a single-document group equals the row-level simhash64") {
-    SimHashAgg.register(spark)
-    TextHashes.register(spark)
     val df = Seq((1L, "spark scala codegen shuffle"),
       (2L, "completely different content here")).toDF("id", "t")
     val rows = df
@@ -25,7 +22,6 @@ class SimHashAggSpec extends SparkSuite {
   }
 
   test("result is invariant to partitioning (merge is correct)") {
-    SimHashAgg.register(spark)
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     def fp(parts: Int): Map[(String, String), Long] =
       docs.repartition(parts)
@@ -37,7 +33,6 @@ class SimHashAggSpec extends SparkSuite {
   }
 
   test("similar corpora ⇒ small hamming distance; disjoint ⇒ large") {
-    SimHashAgg.register(spark)
     def fp(rows: Seq[String]): Long =
       rows.toDF("t").agg(expr("simhash_agg(split(t, ' '))")).head().getLong(0)
     val base = (1 to 50).map(i => s"common words shared across docs $i")

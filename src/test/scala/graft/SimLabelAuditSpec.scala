@@ -18,7 +18,6 @@ class SimLabelAuditSpec extends SparkSuite {
 
   test("planted mislabeled vector is the ONLY disagreement on a " +
       "well-separated fixture; vote invariants hold on real testdata") {
-    graft.functions.TextHashes.register(spark)
     val tmp = Files.createTempDirectory("graft-audit").toString
     // 3 clusters x 40 vectors, 24 dims: cluster c occupies dims
     // [8c, 8c+8) with a small deterministic per-vector perturbation —

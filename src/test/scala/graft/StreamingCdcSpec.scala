@@ -562,7 +562,7 @@ class StreamingCdcSpec extends SparkSuite {
     assert(junk.exists(), "trim must not touch non-part- files")
   }
 
-  test("streaming state view (mapGroupsWithState): converges to the batch " +
+  test("streaming state view (update-mode aggregation): converges to the batch " +
       "view, state is exactly-once under at-least-once re-publish, and " +
       "per-collection keys never merge (update_test.go:52-56 live)") {
     import graft.streaming.StreamingStateView
@@ -586,7 +586,7 @@ class StreamingCdcSpec extends SparkSuite {
         .schema("subject string, msgId string, data string").parquet(msgsDir)
       val q = StreamingStateView.stateView(spark, src)
         .writeStream.outputMode("update")
-        .foreachBatch((d: org.apache.spark.sql.Dataset[StreamingStateView.StateRow], _: Long) =>
+        .foreachBatch((d: DataFrame, _: Long) =>
           d.write.mode("append").parquet(stateLog))
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -66,7 +66,6 @@ class StreamingDecontamSpec extends SparkSuite {
 
   test("arrival-sliced streamed decontam equals the batch pipeline; " +
       "crash in the publish window replays to an exactly-once view") {
-    graft.functions.TextHashes.register(spark)
     val root = Files.createTempDirectory("sdc").toString
     val tables = DedupQueries.LshTables
     val planes = DedupQueries.lshPlanes(spark, sf("sf0.001"))
@@ -144,7 +143,6 @@ class StreamingDecontamSpec extends SparkSuite {
 
   test("job budget: each corpus batch probes with at most 4 Spark jobs; " +
       "the hot-bucket cap is not recounted per batch") {
-    graft.functions.TextHashes.register(spark)
     val root = Files.createTempDirectory("sdc-budget").toString
     val tables = DedupQueries.LshTables
     val planes = DedupQueries.lshPlanes(spark, sf("sf0.001"))
@@ -168,7 +166,6 @@ class StreamingDecontamSpec extends SparkSuite {
 
   test("the hot-bucket cap: buckets holding more than capEval eval " +
       "vectors are not probed") {
-    graft.functions.TextHashes.register(spark)
     val root = Files.createTempDirectory("sdc-cap").toString
     val tables = DedupQueries.LshTables
     val planes = DedupQueries.lshPlanes(spark, sf("sf0.001"))

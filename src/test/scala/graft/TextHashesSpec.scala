@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextHashes, TextHashImpl}
+import graft.functions.TextHashImpl
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unit tests for the native hash expressions (FNV-1a, winnowing, SimHash,
@@ -20,7 +20,6 @@ class TextHashesSpec extends SparkSuite {
   }
 
   test("expressions evaluate identically via SQL registration and codegen") {
-    TextHashes.register(spark)
     val df = Seq("", "a", "foobar").toDF("t")
       .select(expr("fnv64(t)").as("h")).as[Long].collect()
     assert(df.toSeq ==
@@ -114,7 +113,6 @@ class TextHashesSpec extends SparkSuite {
   }
 
   test("simhash: similar token sets ⇒ small hamming distance") {
-    TextHashes.register(spark)
     val rows = Seq(
       ("a", "spark scala engine fast shuffle partition join agg"),
       ("b", "spark scala engine fast shuffle partition join sort"), // 1 token diff
@@ -141,7 +139,6 @@ class TextHashesSpec extends SparkSuite {
   }
 
   test("type checking rejects wrong input types") {
-    TextHashes.register(spark)
     val err = intercept[Exception] {
       Seq(1).toDF("x").select(expr("fnv64(x)")).collect()
     }
@@ -150,7 +147,6 @@ class TextHashesSpec extends SparkSuite {
 
   test("lsh_buckets: bit-identical to the HOF formulation (float and " +
       "normalized-double inputs), validated args") {
-    TextHashes.register(spark)
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     // 1 table × 16 planes over raw floats (sim_lsh_buckets form); the HOF
     // mirror quantizes each coordinate to 6dp micro-units exactly like the
@@ -179,7 +175,6 @@ class TextHashesSpec extends SparkSuite {
 
   test("shingle_hashes / minhash_ngrams: fused passes match the HOF " +
       "shingle pipeline (distinct counts and bit-identical signatures)") {
-    TextHashes.register(spark)
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val toks = "split(text, ' ')"
     val shingles =
@@ -208,7 +203,6 @@ class TextHashesSpec extends SparkSuite {
 
   test("word_ngrams / char_windows: bit-identical to the HOF " +
       "formulations on real documents, empty on short inputs") {
-    TextHashes.register(spark)
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
     val toks = "split(text, ' ')"
     val hofGrams =
@@ -242,7 +236,6 @@ class TextHashesSpec extends SparkSuite {
 
   test("vec_cos / vec_dot / vec_normalize: bit-identical to the HOF " +
       "formulations") {
-    TextHashes.register(spark)
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -275,7 +268,6 @@ class TextHashesSpec extends SparkSuite {
 
   test("minhash_sig argument validation: wrong arity / non-literal k " +
       "raise a usable error, not IndexOutOfBounds/NPE") {
-    TextHashes.register(spark)
     val df = Seq("a b c").toDF("text")
     val arity = intercept[Exception] {
       df.select(expr("minhash_sig(split(text, ' '))")).collect()
