@@ -303,9 +303,10 @@ final class MessageDataWriter(messagesDir: String, partitionId: Int,
       return MsgStaging(null, null, null, 0L, minInvalidate, Nil)
     val sorted = rows.sortBy(_._1)
     // a task has no session at hand: it writes through the JVM's one
-    // loaded conf (ParquetIO), never a per-task copy
+    // loaded conf (ParquetIO), never a per-task copy. msgId and data are
+    // unique per row: a dictionary of them only hashes every value
     val writer = ParquetIO.groupWriter(stagingPath, MessageSink.messageType,
-      ParquetIO.conf)
+      ParquetIO.conf, plain = Seq("msgId", "data"))
     try sorted.foreach { case (msgId, subject, data) =>
       val g = new SimpleGroup(MessageSink.messageType)
       g.add("subject", subject)

@@ -114,7 +114,6 @@ object Observability {
   final case class QueryStats(
       collection: String,
       batches: Long,
-      eventsIn: Long, // source rows seen (pre-filter)
       failures: Long,
       duration: Histo) { // trigger execution time per batch
     /** Post-filter publish count (nats_messages_published_total
@@ -132,7 +131,7 @@ object Observability {
     // key nothing reads and report 0 forever.
     private val idToName = new ConcurrentHashMap[String, String]()
 
-    private def fresh(name: String) = QueryStats(name, 0L, 0L, 0L, new Histo)
+    private def fresh(name: String) = QueryStats(name, 0L, 0L, new Histo)
 
     override def onQueryStarted(e: QueryStartedEvent): Unit = {
       val name = Option(e.name).getOrElse(e.id.toString) // unnamed-safe
@@ -148,8 +147,7 @@ object Observability {
       stats.compute(name, (_, prev0) => {
         val prev = Option(prev0).getOrElse(fresh(name))
         prev.duration.observe(sec)
-        prev.copy(batches = prev.batches + 1,
-          eventsIn = prev.eventsIn + p.numInputRows)
+        prev.copy(batches = prev.batches + 1)
       })
     }
 

@@ -9,6 +9,7 @@ import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.parquet.schema.MessageType
 
 import scala.jdk.CollectionConverters._
@@ -28,6 +29,12 @@ import scala.jdk.CollectionConverters._
   * `new Configuration()` loads. Neither is ever mutated: readers take their
   * projection from the ReadSupport and writers their schema from
   * `withType`, so no task's projection or schema reaches another task.
+  *
+  * Files on a `file:` path are created through java.nio ([[localTarget]]):
+  * Hadoop's local file system, without native libhadoop, forks a `chmod`
+  * for every file it creates, for that file's `.crc` side file and for
+  * every directory it makes, which was most of a token commit's time.
+  * Renames, deletes and reads stay on Hadoop; they start no process.
   */
 object ParquetIO {
 
@@ -78,12 +85,30 @@ object ParquetIO {
         }
     }.build()
 
-  /** Snappy writer of `schema` rows into `file` (which it creates). */
-  def groupWriter(file: Path, schema: MessageType,
-      hconf: Configuration): ParquetWriter[Group] =
-    ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, hconf))
-      .withType(schema)
-      .withConf(hconf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
+  /** `file` as a java.nio path, its parent directories made, when it
+    * resolves to the local file system; None on any other scheme.
+    */
+  def localTarget(file: Path, hconf: Configuration): Option[java.nio.file.Path] = {
+    val uri = file.getFileSystem(hconf).makeQualified(file).toUri
+    Option.when(uri.getScheme == "file") {
+      val p = java.nio.file.Paths.get(uri)
+      java.nio.file.Files.createDirectories(p.getParent)
+      p
+    }
+  }
+
+  /** Snappy writer of `schema` rows into `file`, which it creates and which
+    * must not exist; the `plain` columns are written without a dictionary.
+    */
+  def groupWriter(file: Path, schema: MessageType, hconf: Configuration,
+      plain: Seq[String] = Nil): ParquetWriter[Group] = {
+    val out = localTarget(file, hconf).fold[OutputFile](
+      HadoopOutputFile.fromPath(file, hconf))(new LocalOutputFile(_))
+    plain.foldLeft(ExampleParquetWriter.builder(out)
+        .withType(schema)
+        .withConf(hconf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY))(
+      _.withDictionaryEncoding(_, false))
       .build()
+  }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.model.Model
 import graft.operators.CdcPipeline
@@ -116,8 +116,15 @@ object StreamingCdc {
       tokensDir: String): Unit = {
     invalidated.put(name, true)
     val p = invalidatedMarker(tokensDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) fs.create(p, true).close()
+    val hconf = spark.sparkContext.hadoopConfiguration
+    ParquetIO.localTarget(p, hconf) match {
+      case Some(f) =>
+        try java.nio.file.Files.createFile(f)
+        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+      case None =>
+        val fs = p.getFileSystem(hconf)
+        if (!fs.exists(p)) fs.create(p, true).close()
+    }
   }
 
   private def hasInvalidatedMarker(spark: SparkSession,
@@ -265,7 +272,11 @@ object StreamingCdc {
             if (s.isActive) s.stop()
           }
         }
-        Thread.sleep(pollMs)
+        // wakes as soon as that query ends; a failure is read on the next pass
+        queries.values.find(_.isActive).foreach { q =>
+          try q.awaitTermination(pollMs)
+          catch { case _: StreamingQueryException => () }
+        }
       }
       queries.values.foreach(_.awaitTermination()) // surface errors (C3)
     } finally stopAll(spark) // C4
