@@ -1,21 +1,28 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: dump one query's generated oracle SQL (iterate on an oracle in
-  * DuckDB against an existing Verify output, without re-running Spark):
-  * `sbt "runMain graft.DumpOracle <queryName> [outFile]"`.
-  */
-object DumpOracle {
-  def main(args: Array[String]): Unit = {
-    val sql = SparkEntry.oracleSql.getOrElse(args(0),
-      sys.error(s"no oracle for ${args(0)}"))
-    if (args.length > 1) Files.writeString(Paths.get(args(1)), sql)
-    else println(sql)
-  }
-}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: escapes backslash, quote and every control char
+    * (< 0x20). A tab or CR in builder-authored SQL, or a newline in a
+    * recorded exception, would otherwise make the artifact stop parsing.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A JSON object of string keys and string values, in `kvs` order. */
+  private[graft] def jsonObj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = LocalSession.builder().getOrCreate()
@@ -47,27 +54,13 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObj(SparkEntry.oracleSql))
     // Self-identifying artifact (same philosophy as Bench's loadavg/spread
     // fields): an empty object means every query produced output; any
     // entry is a query the correctness gate would otherwise silently skip.
-    val errJson = failures.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
+      jsonObj(failures.toSeq.sortBy(_._1)))
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: " +
         failures.keys.toSeq.sorted.mkString(", "))

@@ -27,8 +27,8 @@ import graft.queries.{DedupQueries, SimilarityQueries, Tables}
   * distributed grouping/capping/ranking machinery, which is exactly what
   * differs between the two implementations here.
   *
-  * Usage: `sbt "runMain graft.DualCheck <sfDir> [minhash|knn|both]"` —
-  * prints one JSON line per check; recorded in SCALING.md.
+  * Usage: `sbt "Test/runMain graft.DualCheck <sfDir> [minhash|knn|both]"`
+  * — prints one JSON line per check; recorded in SCALING.md.
   */
 object DualCheck {
 

@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
+
+import graft.Verify.{jsonObj, jsonStr}
+
 /** Randomized differential gate runner (see FuzzEntry): executes N seeded
   * random queries on the Spark engine, dumps each result to parquet plus
   * the paired DuckDB SQL to `oracle_sql.json` — Verify-shaped output, so
   * `tools/check.py` (and hence `tools/fuzz.py`) compares it unchanged.
   *
-  * Usage: `sbt "runMain graft.Fuzz <sfDir> <outDir> [n] [seed0]"`.
+  * Usage: `sbt "Test/runMain graft.Fuzz <sfDir> <outDir> [n] [seed0]"`.
   */
 object Fuzz {
   def main(args: Array[String]): Unit = {
@@ -23,20 +27,10 @@ object Fuzz {
     // to a different shape, so clear every fz_* dir before writing.
     Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("fz_"))
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        rm(d)
-      }
+      .foreach(FileUtils.deleteQuietly)
 
     val cases = FuzzEntry.cases(seed0, n)
     val failures = scala.collection.mutable.Map.empty[String, String]
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(): Unit
-    }
     cases.foreach { fc =>
       def attempt(): Unit = fc.build(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/${fc.name}")
@@ -51,30 +45,20 @@ object Fuzz {
           // tools/check.py as an empty result and double-counted as a
           // hash mismatch on top of the recorded spark_error (ADVICE
           // r11) — remove it so the failure is reported exactly once.
-          rmTree(new java.io.File(s"$outDir/${fc.name}"))
+          FileUtils.deleteQuietly(new java.io.File(s"$outDir/${fc.name}"))
         }
       }
     }
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = cases.map(fc => s"${q(fc.name)}: ${q(fc.sql)}")
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObj(cases.map(fc => fc.name -> fc.sql)))
     val manifest =
       s"""{"generator_version": ${FuzzEntry.GeneratorVersion}, "n": $n,
-         | "seed0": $seed0, "sf_dir": ${q(sfDir)},
+         | "seed0": $seed0, "sf_dir": ${jsonStr(sfDir)},
          | "shapes": {${cases.groupBy(_.shape).toSeq.sortBy(_._1)
-              .map { case (s, cs) => s"${q(s)}: ${cs.size}" }.mkString(", ")}},
-         | "spark_errors": {${failures.toSeq.sortBy(_._1)
-              .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")}}}"""
+              .map { case (s, cs) => s"${jsonStr(s)}: ${cs.size}" }
+              .mkString(", ")}},
+         | "spark_errors": ${jsonObj(failures.toSeq.sortBy(_._1))}}"""
         .stripMargin.linesIterator.mkString("")
     Files.writeString(Paths.get(s"$outDir/fuzz_manifest.json"), manifest)
     if (failures.nonEmpty)

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
 /** Writes PLANS.md: the executed-plan inventory of every registered query
   * (exchanges / broadcasts / joins / parquet scans) at the given SF — the
   * scale-evidence companion to SCALING.md. Regenerate with:
-  *   sbt "runMain graft.PlanAudit /root/testdata/sf0.001 PLANS.md"
+  *   sbt "Test/runMain graft.PlanAudit <sfdir> PLANS.md"
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -52,7 +52,7 @@ object PlanAudit {
          |collect at this SF), so the audited residual plan here is only
          |the post-CC tail — the pair pipelines' own shapes are those of
          |dedup_ngram_jaccard / the LSH generators above.
-         |Regenerate: `sbt "runMain graft.PlanAudit <sfdir> PLANS.md"`.
+         |Regenerate: `sbt "Test/runMain graft.PlanAudit <sfdir> PLANS.md"`.
          |
          || query | shuffles | broadcasts | joins | cartesian | parquet scans |
          ||---|---|---|---|---|---|""".stripMargin

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
   * (`.explain("formatted")`, `isFinalPlan=true`) to
   * <outdir>/<query>_<suffix>.txt — the plan-evidence companion to the
   * bench numbers (judge-checkable without running Spark). Usage:
-  *   sbt "runMain graft.PlanDump <sfdir> <outdir> <suffix> [query...]"
+  *   sbt "Test/runMain graft.PlanDump <sfdir> <outdir> <suffix> [query...]"
   * No query args = all registered queries.
   */
 object PlanDump {

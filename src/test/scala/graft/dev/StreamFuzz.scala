@@ -6,6 +6,7 @@ import java.util.Random
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Verify.jsonStr
 import graft.model.{ChangeEvent, ChangeEventId, Ns}
 import graft.operators.CdcPipeline
 import graft.streaming.StreamingCdc
@@ -55,7 +56,7 @@ import graft.streaming.StreamingCdc.StreamConfig
   * cap, so the killed collection commits enough batches for its trim —
   * and the kill inside it — to run.
   *
-  * Usage: `sbt "runMain graft.StreamFuzz <outJson> [n] [seed0]"`.
+  * Usage: `sbt "Test/runMain graft.StreamFuzz <outJson> [n] [seed0]"`.
   * Exits 2 on any failed scenario.
   */
 object StreamFuzz {
@@ -88,20 +89,6 @@ object StreamFuzz {
       killBatch: Option[Long], // -1 = inside trimTokensAt's race window
       poisonColl: Option[Int], // transient fault -> sibling cancel
       poisonTrips: Int)
-
-  // Full JSON string escape (ADVICE r14): exception toStrings recorded in
-  // 'unexpected'/'err' can carry tabs, CRs or other control chars — every
-  // char < 0x20 must escape or the fuzz artifact stops parsing.
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def genScenario(seed: Long): Scenario = {
     val r = new Random(seed * 0x9e3779b97f4a7c15L + GeneratorVersion)
@@ -315,7 +302,9 @@ object StreamFuzz {
   }
 
   def main(args: Array[String]): Unit = {
-    val outJson = if (args.nonEmpty) args(0) else "STREAMING_FUZZ_r14.json"
+    require(args.nonEmpty,
+      "usage: StreamFuzz <outJson> [n] [seed0] (outJson is required)")
+    val outJson = args(0)
     val n = if (args.length > 1) args(1).toInt else 75
     val seed0 = if (args.length > 2) args(2).toLong else 1L
     val spark = LocalSession.builder().getOrCreate()
@@ -328,8 +317,7 @@ object StreamFuzz {
         try runScenario(spark, root, sc)
         catch {
           case e: Throwable =>
-            (false, s""""err":${"\"" + e.toString.take(300)
-              .replace("\\", "\\\\").replace("\"", "\\\"") + "\""}""")
+            (false, s""""err":${jsonStr(e.toString.take(300))}""")
         }
       println(s"[streamfuzz] seed $seed ${if (pass) "PASS" else "FAIL"}")
       (seed, pass, s"""{"seed":$seed,$detail}""", sc.colls.size)

@@ -4,7 +4,7 @@ package graft
   * A/B harness for plan work and cross-SF scaling spot-checks without the
   * full Bench sweep.
   *
-  *   sbt "runMain graft.TimeQuery <query> <sfDir> [sfDir...]"
+  *   sbt "Test/runMain graft.TimeQuery <query> <sfDir> [sfDir...]"
   *
   * Per dir: one untimed warm-up, then three timed trials, each consuming
   * every output column through `Bench.consumeAll` (the Bench shape).

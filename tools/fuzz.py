@@ -4,18 +4,19 @@ queries run on the Spark engine) against DuckDB running the paired SQL on
 the same sf tables, and write a round artifact (FUZZ_r{N}.json).
 
 The Spark side must have run first:
-    sbt "runMain graft.Fuzz <sfdir> <outdir> [n] [seed0]"
+    sbt "Test/runMain graft.Fuzz <sfdir> <outdir> [n] [seed0]"
 Then:
-    python3 tools/fuzz.py [sfdir] [outdir] [artifact.json]
+    python3 tools/fuzz.py <sfdir> <outdir> <artifact.json>
 
 Reuses tools/check.py (Fuzz emits Verify-shaped output) and wraps its
 per-query report in a summary the round record keeps.
 """
 import json, os, subprocess, sys, tempfile
 
-sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/fuzzout"
-artifact = sys.argv[3] if len(sys.argv) > 3 else "FUZZ_r11.json"
+if len(sys.argv) != 4:
+    sys.exit("usage: tools/fuzz.py <sfdir> <outdir> <artifact.json> "
+             "(the artifact path is required)")
+sfdir, outdir, artifact = sys.argv[1:]
 
 here = os.path.dirname(os.path.abspath(__file__))
 detail = tempfile.mktemp(suffix=".json")
